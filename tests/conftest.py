@@ -23,3 +23,20 @@ def spark():
     spark = get_session("tests")
     yield spark
     spark.stop()
+
+
+@pytest.fixture
+def stream_builds(monkeypatch):
+    """The sessions `read_spot_stream` is called with, in call order:
+    each call is one build of the ingest stream's plan."""
+    from wsprnet_scraper_spark.streaming import ingest
+
+    builds = []
+    real = ingest.read_spot_stream
+
+    def counting(spark, *a, **k):
+        builds.append(spark)
+        return real(spark, *a, **k)
+
+    monkeypatch.setattr(ingest, "read_spot_stream", counting)
+    return builds

@@ -155,6 +155,37 @@ def test_changepoint_ref_q_negative_sum_parity(spark, tmp_path):
     )
 
 
+def test_changepoint_null_event_type_in_standing_slice(spark, tmp_path):
+    # ADVICE r14: a NULL event_type in the standing corpus (event_id
+    # % 10 <> 0) must not enter the per-type reference — it crashed
+    # sorted(ref) next to real types — and, as in the oracle's inner
+    # join on ref types, never reaches the output
+    import datetime as dt
+
+    n = 60
+    base = dt.datetime(2024, 1, 1)
+    types = [None if i in (3, 17, 41) else ("a", "b")[i // 10 % 2] for i in range(n)]
+    tbl = pa.table(
+        {
+            "event_id": pa.array(range(n), pa.int64()),
+            "ts": pa.array(
+                [base + dt.timedelta(minutes=i) for i in range(n)],
+                pa.timestamp("us"),
+            ),
+            "user_id": pa.array([1] * n, pa.int64()),
+            "event_type": pa.array(types, pa.string()),
+            "value": pa.array([(i * 7) % 13 - 4.5 for i in range(n)], pa.float64()),
+            "props": pa.array(["{}"] * n),
+        }
+    )
+    pq.write_table(tbl, str(tmp_path / "events.parquet"))
+    rows = QUERIES["strm_changepoint_monitor"](spark, str(tmp_path)).collect()
+    assert rows and {r["event_type"] for r in rows} == {"a", "b"}
+    _assert_matches_oracle(
+        spark, "strm_changepoint_monitor", str(tmp_path), tables=("events",)
+    )
+
+
 def test_duckdb_integer_div_truncates_like_spark(spark):
     # Pin the cross-engine fact A2 rests on, so a DuckDB upgrade that
     # changes `//` to floor semantics fails loudly here instead of

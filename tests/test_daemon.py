@@ -99,6 +99,54 @@ def test_run_scrape_daemon_end_to_end(spark, tmp_path):
     assert all(r["boundary_gap"] in (None, 0) for r in monitor.records)
 
 
+def test_daemon_builds_ingest_plan_once_per_session(spark, tmp_path, stream_builds):
+    """Three ticks share one prepared ingest stream; a maintenance pass
+    drops it and the next tick builds it again. Records and sink are
+    the per-tick drain's, exactly."""
+    from wsprnet_scraper_spark.streaming.daemon import session_maintenance
+
+    landing = tmp_path / "landing"
+    landing.mkdir()
+    monitor = GapMonitor()
+    cursor = Cursor(landing / "_cursor.json")
+    cursor.advance(1000)
+
+    def run(ticks: int) -> None:
+        run_scrape_daemon(
+            spark,
+            lambda start: [make_spot(start + i + 1) for i in range(5)],
+            str(landing),
+            str(tmp_path / "sink"),
+            str(tmp_path / "ckpt"),
+            monitor=monitor,
+            cursor=cursor,
+            clock=lambda: 0.0,
+            sleep=lambda s: None,
+            max_ticks=ticks,
+        )
+
+    run(3)
+    assert len(stream_builds) == 1
+    session_maintenance(spark)
+    run(1)
+    assert len(stream_builds) == 2
+    assert monitor.records == [
+        {
+            "batch_id": b,
+            "n_spots": 5,
+            "first_spotnum": 1001 + 5 * b,
+            "last_spotnum": 1005 + 5 * b,
+            "total_gaps": 0,
+            "total_missing": 0,
+            "max_gap_size": 0,
+            "boundary_gap": None if b == 0 else 0,
+        }
+        for b in range(4)
+    ]
+    rows = spark.read.parquet(str(tmp_path / "sink")).select("Spotnum").collect()
+    assert sorted(r.Spotnum for r in rows) == list(range(1001, 1021))
+
+
 def test_maintenance_fires_on_cadence(spark, tmp_path):
     """session_maintenance runs every `maintenance_every` ticks and
     actually clears the prepared-plan cache, the standing-state

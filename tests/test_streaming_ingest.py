@@ -162,6 +162,70 @@ def test_checkpoint_restart_no_reprocess(spark, tmp_path):
 
 def test_recover_cursor_empty_sink(spark, tmp_path):
     assert recover_cursor_from_sink(spark, str(tmp_path / "nope")) is None
+    (tmp_path / "empty").mkdir()
+    assert recover_cursor_from_sink(spark, str(tmp_path / "empty")) is None
+
+
+def _sql_actions(spark) -> int:
+    """Id of the newest SQL execution (one per DataFrame action), once
+    the listener bus has delivered every event. Ids, not the count:
+    the status store keeps only the newest 1000 executions."""
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+    store = spark._jsparkSession.sharedState().statusStore()
+    n = store.executionsCount()
+    return store.executionsList(n - 1, 1).head().executionId() if n else -1
+
+
+def test_gap_monitor_observe_is_one_action(spark):
+    # the per-batch telemetry (count, id span, gaps) is one Spark
+    # action, on a cached batch as foreachBatch hands it over
+    batch = (
+        spark.createDataFrame([(n,) for n in (3, 4, 5, 9, 10, 10, 14)], "Spotnum long")
+        .dropDuplicates(["Spotnum"])
+        .cache()
+    )
+    monitor = GapMonitor(last_spotnum=1)
+    try:
+        before = _sql_actions(spark)
+        monitor.observe(batch, 7)
+        assert _sql_actions(spark) - before == 1
+    finally:
+        batch.unpersist()
+    assert monitor.records == [
+        {
+            "batch_id": 7,
+            "n_spots": 6,
+            "first_spotnum": 3,
+            "last_spotnum": 14,
+            "total_gaps": 2,
+            "total_missing": 6,
+            "max_gap_size": 3,
+            "boundary_gap": 1,
+        }
+    ]
+    assert monitor.last_spotnum == 14
+    # an empty batch leaves no record and no state change
+    monitor.observe(spark.createDataFrame([], "Spotnum long"), 8)
+    assert len(monitor.records) == 1 and monitor.last_spotnum == 14
+
+
+def test_sessions_do_not_share_prepared_stream(spark, tmp_path, stream_builds):
+    # a DataFrame is bound to the session that built it: a second
+    # session of the same application builds its own ingest plan
+    from wsprnet_scraper_spark.plans.registry import prepared
+
+    landing = tmp_path / "landing"
+    fetch_once(lambda s: [make_spot(n) for n in range(1, 4)], Cursor(tmp_path / "c"), landing)
+    other = spark.newSession()
+    for i, sess in enumerate((spark, other, spark, other)):
+        sink, ckpt = str(tmp_path / f"sink{i % 2}"), str(tmp_path / f"ckpt{i % 2}")
+        start_ingest(sess, str(landing), sink, ckpt).awaitTermination()
+    assert stream_builds == [spark, other]
+    for i, sess in enumerate((spark, other)):
+        df = prepared(sess, ("ingest", str(landing), None), lambda: pytest.fail("miss"))
+        assert df.sparkSession is sess
+        rows = sess.read.parquet(str(tmp_path / f"sink{i}")).collect()
+        assert sorted(r.Spotnum for r in rows) == [1, 2, 3]
 
 
 def test_mirror_fanout_two_sinks(spark, tmp_path):

@@ -62,14 +62,56 @@ def sequence_gaps(
     return intra.unionByName(boundary)
 
 
+def gap_summary(
+    df: DataFrame, id_col: str = "Spotnum", block_size: int = 1 << 20
+) -> DataFrame:
+    """One-row telemetry in one action: n_spots, first_spotnum,
+    last_spotnum and the reference's three gap accumulators
+    (total_gaps, total_missing, max_gap_size; wsprnet-scraper.sh:
+    285-308). `sequence_gaps`' decomposition, with the within-block
+    gaps folded into its per-block summary (one shuffle on the block
+    key serves both the window and the block aggregate)."""
+    s = df.select(F.col(id_col).alias("_s")).withColumn(
+        "_blk", F.expr(f"_s div {block_size}")
+    )
+    wb = Window.partitionBy("_blk").orderBy("_s")
+    gap = F.col("_s") - F.lag("_s", 1).over(wb) - 1
+    blocks = (
+        s.withColumn("_g", F.when(gap > 0, gap))
+        .groupBy("_blk")
+        .agg(
+            F.count(F.lit(1)).alias("_n"),
+            F.min("_s").alias("_mn"),
+            F.max("_s").alias("_mx"),
+            F.count("_g").alias("_gaps"),
+            F.sum("_g").alias("_missing"),
+            F.max("_g").alias("_max"),
+        )
+    )
+    # unpartitioned on purpose: the input is the block Aggregate
+    # (plans/audit.py's unpartitioned => reduced rule)
+    bgap = F.col("_mn") - F.lag("_mx", 1).over(Window.orderBy("_blk")) - 1
+    blocks = blocks.withColumn("_bg", F.when(bgap > 0, bgap))
+    return blocks.agg(
+        F.coalesce(F.sum("_n"), F.lit(0)).alias("n_spots"),
+        F.min("_mn").alias("first_spotnum"),
+        F.max("_mx").alias("last_spotnum"),
+        (F.coalesce(F.sum("_gaps"), F.lit(0)) + F.count("_bg")).alias("total_gaps"),
+        (
+            F.coalesce(F.sum("_missing"), F.lit(0))
+            + F.coalesce(F.sum("_bg"), F.lit(0))
+        ).alias("total_missing"),
+        F.coalesce(F.greatest(F.max("_max"), F.max("_bg")), F.lit(0)).alias(
+            "max_gap_size"
+        ),
+    )
+
+
 def gap_stats(
     df: DataFrame, id_col: str = "Spotnum", block_size: int = 1 << 20
 ) -> DataFrame:
     """One-row gap telemetry: total_gaps, total_missing, max_gap_size
-    (the reference's three accumulators, wsprnet-scraper.sh:285-308)."""
-    gaps = sequence_gaps(df, id_col, block_size)
-    return gaps.agg(
-        F.count("gap").alias("total_gaps"),
-        F.coalesce(F.sum("gap"), F.lit(0)).alias("total_missing"),
-        F.coalesce(F.max("gap"), F.lit(0)).alias("max_gap_size"),
+    (the 3-column projection of `gap_summary`)."""
+    return gap_summary(df, id_col, block_size).select(
+        "total_gaps", "total_missing", "max_gap_size"
     )

@@ -173,6 +173,12 @@ def materialized(spark, sf_dir: str, kind: str, build, tables=("documents",)):
     HANDLES — the next access re-opens the standing parquet instead
     of re-paying the build (tests/test_advice_r12.py pins build()
     called once across a maintenance cycle)."""
+    return _entry(spark, sf_dir, kind, build, tables)[0]
+
+
+def _entry(spark, sf_dir: str, kind: str, build, tables):
+    """`materialized`'s cache entry (df, parquet_path, persistent);
+    the one owner of _STORE_CACHE's key format."""
     app = spark.sparkContext.applicationId
     bucket = _STORE_CACHE.get(app)
     if bucket is None:
@@ -206,7 +212,7 @@ def materialized(spark, sf_dir: str, kind: str, build, tables=("documents",)):
                 _land(root, kind, path, build)
         ent = (spark.read.parquet(path), path, persistent)
         bucket[key] = ent
-    return ent[0]
+    return ent
 
 
 def materialized_entry(
@@ -217,7 +223,4 @@ def materialized_entry(
     the stream twins used to copy the corpus seed into the sink every
     invocation) still size partitions from the standing volume
     (_sized_stream_parts reads file sizes, not DataFrames)."""
-    materialized(spark, sf_dir, kind, build, tables)
-    app = spark.sparkContext.applicationId
-    ent = _STORE_CACHE[app][(kind, sf_dir.rstrip("/"))]
-    return ent[0], ent[1]
+    return _entry(spark, sf_dir, kind, build, tables)[:2]

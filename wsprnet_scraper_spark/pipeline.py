@@ -7,15 +7,14 @@ batch path, the judged queries, and Structured Streaming — one code
 path for stream+batch.
 
 Scale notes: enrich() is projection-only (no shuffle, stays in one
-whole-stage-codegen span); gap_stats needs a global order by Spotnum
-— at 100 TB that is the one intentionally-global step, and it is
-implemented as lag over a Window so Spark range-partitions the sort
-instead of collecting anything to the driver.
+whole-stage-codegen span); the gap check needs an order by Spotnum,
+and operators/sequence.py computes it block-partitioned instead of
+as one global sort or a collect to the driver.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from . import functions as wf
@@ -165,19 +164,6 @@ def sort_by_spotnum(df: DataFrame) -> DataFrame:
     adopt numeric sort (deviation recorded in SURVEY.md §2.6).
     """
     return df.orderBy("Spotnum")
-
-
-def gap_stats(df: DataFrame, block_size: int = 1 << 20) -> DataFrame:
-    """Sequence-gap telemetry over Spotnum (wsprnet-scraper.sh:284-309).
-
-    Returns a single row: total_gaps (count of non-contiguous steps),
-    total_missing (sum of missing ids), max_gap_size. Delegates to the
-    block-partitioned operator (operators/sequence.py) — a global
-    unpartitioned lag window would run in one task at scale.
-    """
-    from .operators.sequence import gap_stats as _gap_stats
-
-    return _gap_stats(df, "Spotnum", block_size)
 
 
 def write_wire_csv(df: DataFrame, path: str) -> None:

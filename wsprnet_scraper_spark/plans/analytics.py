@@ -4463,6 +4463,9 @@ def strm_changepoint_monitor(spark, sf_dir):
     # is byte-identical ((1e6·Σcents) div n over the standing rows);
     # a type with no standing rows has _rn = 0, ref_q NULL, and is
     # skipped — exactly the row the old filtered groupBy never had.
+    # The NULL event_type group is skipped too: the per-batch join is
+    # inner on ref types, so it never reaches the output, and a None
+    # key would break sorted(ref) and the per-type observe predicate.
     stat_rows = (
         t.groupBy("event_type")
         .agg(
@@ -4482,7 +4485,7 @@ def strm_changepoint_monitor(spark, sf_dir):
     ref = {
         r["event_type"]: int(r["ref_q"])
         for r in stat_rows
-        if r["ref_q"] is not None
+        if r["ref_q"] is not None and r["event_type"] is not None
     }
     blos = [r["_blo"] for r in stat_rows if r["_blo"] is not None]
     bhis = [r["_bhi"] for r in stat_rows if r["_bhi"] is not None]

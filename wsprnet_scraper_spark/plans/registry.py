@@ -75,25 +75,44 @@ ORACLE_BOUND: dict[str, tuple[str, int]] = {}
 # Prepared-plan cache — the engine's analog of prepared statements.
 # Building a complex DataFrame costs hundreds of py4j round trips
 # (measured: 1.9 s for the 27-column enrichment tree, more than its
-# sf0.1 execution); a long-running service plans once and serves many,
-# so QUERIES callables memoize the *unexecuted* DataFrame per
-# (name, sf_dir, Spark application, heal-mode). DataFrames are
-# immutable logical plans — re-executing one re-reads the source
-# files, so correctness is unaffected. Streaming queries (strm_*) are
-# never cached: their builders run real micro-batch jobs with
-# side effects (landing dirs, memory sinks), and a cached result
+# sf0.1 execution); a long-running service plans once and serves many.
+# `prepared` memoizes the *unexecuted* DataFrame per Spark session and
+# key: QUERIES callables key by (name, sf_dir, heal-mode); the ingest
+# keys its enriched stream by landing dir, so a scrape daemon builds
+# it once per session and every tick re-starts it.
+# DataFrames are immutable logical plans — re-executing one re-reads
+# the source files, so correctness is unaffected. Streaming queries
+# (strm_*) are never cached: their builders run real micro-batch jobs
+# with side effects (landing dirs, memory sinks), and a cached result
 # DataFrame would skip the stream instead of re-running it.
 #
-# Layout: {applicationId: {(name, sf_dir, heal): df}}. Keying the
-# outer level by application lets the first miss from a NEW
-# application evict every plan of stopped ones — otherwise a
-# long-running process that restarts sessions leaks dead JVM plan
-# references indefinitely (ADVICE r1).
+# Layout: {applicationId: {(session uuid, *key): df}}. A DataFrame is
+# bound to the session that built it (its conf, its streams manager),
+# so two sessions of one application (`spark.newSession()`) never
+# share an entry. Keying the outer level by application lets the
+# first miss from a NEW application evict every plan of stopped ones —
+# otherwise a long-running process that restarts sessions leaks dead
+# JVM plan references indefinitely (ADVICE r1).
 _PLAN_CACHE: dict = {}
 
 
 def clear_plan_cache() -> None:
     _PLAN_CACHE.clear()
+
+
+def prepared(spark, key: tuple, build: Callable):
+    """The DataFrame cached for `key` in `spark`'s session, built by
+    the zero-arg `build()` on a miss."""
+    app = spark.sparkContext.applicationId
+    bucket = _PLAN_CACHE.get(app)
+    if bucket is None:
+        _PLAN_CACHE.clear()  # plans of stopped applications
+        bucket = _PLAN_CACHE.setdefault(app, {})
+    key = (spark._jsparkSession.sessionUUID(), *key)
+    df = bucket.get(key)
+    if df is None:
+        df = bucket[key] = build()
+    return df
 
 
 def register(
@@ -113,17 +132,8 @@ def register(
 
             @functools.wraps(fn)
             def wrapped(spark, sf_dir, _fn=fn, _name=name):
-                app = spark.sparkContext.applicationId
-                bucket = _PLAN_CACHE.get(app)
-                if bucket is None:
-                    _PLAN_CACHE.clear()  # plans of stopped applications
-                    bucket = _PLAN_CACHE.setdefault(app, {})
-                key = (_name, sf_dir, os.environ.get("SPARK_GRAFT_FORCE_HEAL", ""))
-                df = bucket.get(key)
-                if df is None:
-                    df = _fn(spark, sf_dir)
-                    bucket[key] = df
-                return df
+                heal = os.environ.get("SPARK_GRAFT_FORCE_HEAL", "")
+                return prepared(spark, (_name, sf_dir, heal), lambda: _fn(spark, sf_dir))
 
             QUERIES[name] = wrapped
         else:

@@ -124,12 +124,12 @@ class _rocksdb_state:
     streaming run (conf read at query START; set before .start(),
     restored after awaitTermination).
 
-    Why (r12 for strm_dedup_watermark; r14 extended to the
-    stream-stream joins): the HDFS-backed default holds every state
-    row in JVM HEAP — at the 100x probe corpus the symmetric-join
-    state (~4M rows across 4 stores/partition) OOM'd the 8g driver
-    JVM outright, exactly the failure mode the r12 watermark probe
-    hit. RocksDB keeps state in native memory + local disk (the
+    Why (r12 for strm_dedup_watermark; r14 considered for the
+    stream-stream joins, rejected on measurement): the HDFS-backed
+    default holds every state row in JVM HEAP — at the 100x probe
+    corpus the symmetric-join state (~4M rows across 4
+    stores/partition) OOM'd the 8g driver JVM outright, exactly the
+    failure mode the r12 watermark probe hit. RocksDB keeps state in native memory + local disk (the
     configuration a 100 TB streaming deployment actually runs), and
     changelog checkpointing commits per-batch DELTAS instead of full
     snapshots (commit 123 -> ~38 ms measured on the watermark entry;

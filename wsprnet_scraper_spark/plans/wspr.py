@@ -369,7 +369,9 @@ def agg_gap_stats(spark, sf_dir):
     """Sequence-gap telemetry (ref: wsprnet-scraper.sh:284-309).
     block_size 8192 so the test SFs actually exercise the block-
     partitioned parallel path, boundary gaps included."""
-    return pipeline.gap_stats(synth_spots(spark, sf_dir), block_size=8192)
+    from ..operators.sequence import gap_stats
+
+    return gap_stats(synth_spots(spark, sf_dir), "Spotnum", 8192)
 
 
 @register(

@@ -176,12 +176,17 @@ def run_scrape_daemon(
     injected transport (http_fetch_spots in production). Returns the
     number of ticks fired.
 
+    The ingest plan is built once per session (the prepared-plan
+    cache; a maintenance pass drops it), so a tick pays for the fetch,
+    one micro-batch and its one-action gap telemetry, not re-planning.
+
     `maintenance_every` is OPT-IN (ADVICE r5): session_maintenance
     calls spark.catalog.clearCache(), which unpersists EVERY cached
     relation in the session — an application embedding this loop on a
     shared SparkSession would silently lose its own persisted
     DataFrames. Enable it (720 ≈ 8 h at the 30 s cadence) only when
-    the daemon owns its session, or hand it `spark.newSession()`.
+    the daemon owns its session, or hand it `spark.newSession()`,
+    which then builds and keeps its own ingest plan.
     """
     from pathlib import Path
 

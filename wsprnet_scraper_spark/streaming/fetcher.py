@@ -66,8 +66,10 @@ def recover_cursor_from_sink(spark, sink_path: str) -> int | None:
     """
     from pyspark.sql import functions as F
 
+    from .ingest import sink_spotnums
+
     try:
-        row = spark.read.parquet(sink_path).agg(F.max("Spotnum")).first()
+        row = sink_spotnums(spark, sink_path).agg(F.max("Spotnum")).first()
     except Exception:
         return None
     return None if row is None or row[0] is None else int(row[0])
