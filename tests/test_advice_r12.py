@@ -229,3 +229,84 @@ def test_materialized_rename_collision_keeps_winner(
     finally:
         monkeypatch.setattr(os, "rename", real_rename)
         stores.clear_store_cache()
+
+
+# The codebook persistent tier writes through the same stores._land
+# as materialized: a stale partial directory (no _SUCCESS) is
+# replaced, and a failing write leaves no wip directory behind.
+
+
+def _codebook_inputs(spark, tmp_path, monkeypatch, name):
+    from tests.conftest import SF_SMOKE
+    from wsprnet_scraper_spark.operators import similarity
+
+    store = tmp_path / "store"
+    monkeypatch.setenv(stores.ENV_VAR, str(store))
+    similarity.clear_codebooks()
+    emb = spark.read.parquet(f"{SF_SMOKE}/embeddings.parquet")
+    return similarity, store, emb, f"{SF_SMOKE}:{name}"
+
+
+def test_codebook_store_replaces_stale_partial_writes(
+    spark, tmp_path, monkeypatch
+):
+    similarity, store, emb, ckey = _codebook_inputs(
+        spark, tmp_path, monkeypatch, "t_cbk_stale"
+    )
+    cases = [  # (store params, landed dirs, trainer)
+        (
+            ("kmeans_df", 2, 1),
+            [""],
+            lambda: similarity.train_kmeans_df(emb, 2, 1, ckey),
+        ),
+        (
+            ("twolevel_df", 2, 2, 1, 4),
+            ["coarse", "fine"],
+            lambda: similarity.train_twolevel_df(
+                emb, k_coarse=2, k_fine=2, iters=1, cache_key=ckey
+            ),
+        ),
+    ]
+    try:
+        for params, parts, train in cases:
+            spath = _codebook_store_path(ckey, params)
+            for part in parts:  # a crashed session's partial write
+                os.makedirs(os.path.join(spath, part))
+                with open(os.path.join(spath, part, "junk"), "w") as f:
+                    f.write("partial")
+            train()
+            for part in parts:
+                d = os.path.join(spath, part)
+                assert os.path.isfile(os.path.join(d, "_SUCCESS"))
+                assert not os.path.exists(os.path.join(d, "junk"))
+            for root in (store, spath):
+                assert [p for p in os.listdir(root) if "wip" in p] == []
+    finally:
+        similarity.clear_codebooks()
+
+
+def test_codebook_failed_write_leaves_no_wip_debris(
+    spark, tmp_path, monkeypatch
+):
+    from pyspark.sql import DataFrameWriter
+
+    similarity, store, emb, ckey = _codebook_inputs(
+        spark, tmp_path, monkeypatch, "t_cbk_fail"
+    )
+
+    def failing_parquet(self, path, *a, **k):
+        # fail part-way: some output already exists where it was aimed
+        os.makedirs(path, exist_ok=True)
+        with open(os.path.join(path, "part-00000"), "w") as f:
+            f.write("partial")
+        raise RuntimeError("synthetic write failure")
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", failing_parquet)
+    try:
+        with pytest.raises(RuntimeError, match="synthetic write failure"):
+            similarity.train_kmeans_df(emb, 2, 1, ckey)
+        assert [p for p in os.listdir(store) if "wip" in p] == []
+        spath = _codebook_store_path(ckey, ("kmeans_df", 2, 1))
+        assert not os.path.exists(spath)
+    finally:
+        similarity.clear_codebooks()

@@ -1,44 +1,58 @@
-"""The shared materialized edge front door (r5 verdict #1) and the
-bucketed HITS twin (r5 verdict #2).
+"""The graph edge relations served from the standing-relation store,
+and the bucketed HITS twin (r5 verdict #2).
 
 Every graph_* plan reads its edge relation through
-plans.graph_q._materialized_edges, which writes the derived relation
-to a write-once scratch parquet ONCE per (application, sf_dir,
-derivation) and hands every later caller a plain scan of the written
-files — the in-session form of the 100 TB pattern (materialize the
-edge relation once, run every graph workload against it). These tests pin that the
-amortization is real (one build per key, identity-stable returns,
-survives spark.catalog.clearCache()), that the cache keys distinguish
-what must be distinguished, and that the SHUFFLE_HASH HITS twin is
-bit-identical to the broadcast plan while sharing its oracle.
+operators.stores.materialized (kind "edges_<derivation>", keyed by
+the orders/lineitem fingerprint), which writes the derived relation
+to a write-once parquet ONCE and hands every later caller a plain
+scan of the written files — the in-session form of the 100 TB
+pattern (materialize the edge relation once, run every graph
+workload against it). These tests pin that the amortization is real
+(one build per key, identity-stable returns, survives
+spark.catalog.clearCache() and session maintenance), that the cache
+keys distinguish what must be distinguished, and that the
+SHUFFLE_HASH HITS twin is bit-identical to the broadcast plan while
+sharing its oracle.
 """
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from tests.conftest import SF_SMOKE
+from wsprnet_scraper_spark.operators import stores
 from wsprnet_scraper_spark.plans import QUERIES, graph_q
 
 
 def _fresh(spark):
-    graph_q.clear_edge_cache()
+    stores.clear_store_cache(drop_files=True)
     spark.catalog.clearCache()
 
 
-def test_one_build_per_key_and_identity_stable(spark, monkeypatch):
-    _fresh(spark)
+@pytest.fixture
+def edge_builds(monkeypatch):
+    """The kinds whose build() the store runs, in call order."""
     builds = []
-    orig = graph_q._materialized_edges
+    orig = stores.materialized
 
-    def counting(sp, sf_dir, kind, build):
+    def counting(sp, sf_dir, kind, build, tables=("documents",)):
         def counted_build():
             builds.append(kind)
             return build()
 
-        return orig(sp, sf_dir, kind, counted_build)
+        return orig(sp, sf_dir, kind, counted_build, tables)
 
-    monkeypatch.setattr(graph_q, "_materialized_edges", counting)
+    monkeypatch.setattr(stores, "materialized", counting)
+    return builds
+
+
+def _rows(df):
+    return sorted(map(tuple, df.collect()))
+
+
+def test_one_build_per_key_and_identity_stable(spark, edge_builds):
+    _fresh(spark)
     try:
         e1 = graph_q._edges(spark, SF_SMOKE)
         e2 = graph_q._edges(spark, SF_SMOKE)
@@ -46,8 +60,10 @@ def test_one_build_per_key_and_identity_stable(spark, monkeypatch):
         s2 = graph_q._sliced_edges(spark, SF_SMOKE + "/")  # normalized
         p1 = graph_q._copurchase_pairs(spark, SF_SMOKE)
         # one build per derivation, no matter how many callers
-        assert builds == [
-            "full_directed", "sliced_directed", "copurchase_pairs"
+        assert edge_builds == [
+            "edges_full_directed",
+            "edges_sliced_directed",
+            "edges_copurchase_pairs",
         ]
         # the sliced relation is the SAME materialized DataFrame object
         assert s1 is s2
@@ -56,14 +72,14 @@ def test_one_build_per_key_and_identity_stable(spark, monkeypatch):
         assert e1.count() == e2.count() > 0
         assert p1.columns == ["a", "b"]
     finally:
-        graph_q.clear_edge_cache()
+        _fresh(spark)
 
 
 def test_materialization_survives_clearCache(spark):
     """The probe discipline clears CacheManager before every timed
-    run; the front door must NOT live there (localCheckpoint is a new
-    lineage root, not a cached plan), or the amortization would be an
-    artifact of cache hits the probe deliberately forbids."""
+    run; the edge relations must NOT live there (the store serves a
+    new lineage root, not a cached plan), or the amortization would
+    be an artifact of cache hits the probe deliberately forbids."""
     _fresh(spark)
     try:
         e = graph_q._sliced_edges(spark, SF_SMOKE)
@@ -77,20 +93,43 @@ def test_materialization_survives_clearCache(spark):
         plan = e2._jdf.queryExecution().simpleString()
         assert "parquet" in plan.lower() and "Join" not in plan
     finally:
-        graph_q.clear_edge_cache()
+        _fresh(spark)
 
 
-def test_clear_edge_cache_releases_and_rebuilds(spark):
+def test_maintenance_reopens_edge_parquet_without_build(spark, edge_builds):
+    """session_maintenance drops the store handles and the plan cache
+    but keeps the standing edge parquet: the next graph query
+    re-opens it, with zero builds and the same rows."""
+    from wsprnet_scraper_spark.streaming.daemon import session_maintenance
+
     _fresh(spark)
     try:
-        e1 = graph_q._sliced_edges(spark, SF_SMOKE)
-        rows1 = sorted(map(tuple, e1.collect()))
-        graph_q.clear_edge_cache()  # deletes the backing files too
-        e2 = graph_q._sliced_edges(spark, SF_SMOKE)
-        assert e1 is not e2
-        assert sorted(map(tuple, e2.collect())) == rows1
+        rows1 = _rows(QUERIES["graph_degree_dist"](spark, SF_SMOKE))
+        assert edge_builds == ["edges_full_directed"]
+        session_maintenance(spark)
+        rows2 = _rows(QUERIES["graph_degree_dist"](spark, SF_SMOKE))
+        assert edge_builds == ["edges_full_directed"]  # no rebuild
+        assert rows2 == rows1 and len(rows1) > 0
     finally:
-        graph_q.clear_edge_cache()
+        _fresh(spark)
+
+
+def test_drop_files_rebuilds_once_and_clears_plan_cache(spark, edge_builds):
+    """clear_store_cache(drop_files=True) deletes the edge parquet a
+    cached graph plan scans, so it must drop that plan too: the next
+    run through QUERIES builds the edges once and returns the same
+    rows instead of failing on the deleted files."""
+    _fresh(spark)
+    try:
+        q = QUERIES["graph_degree_dist"]
+        rows1 = _rows(q(spark, SF_SMOKE))
+        assert q(spark, SF_SMOKE) is q(spark, SF_SMOKE)  # plan is cached
+        stores.clear_store_cache(drop_files=True)
+        rows2 = _rows(q(spark, SF_SMOKE))
+        assert edge_builds == ["edges_full_directed"] * 2
+        assert rows2 == rows1 and len(rows1) > 0
+    finally:
+        _fresh(spark)
 
 
 def test_hits_bucketed_bit_identical_and_no_broadcast(spark):
@@ -101,7 +140,7 @@ def test_hits_bucketed_bit_identical_and_no_broadcast(spark):
         bucketed = QUERIES["graph_hits_bucketed"](spark, SF_SMOKE)
         krows = sorted(map(tuple, bucketed.collect()))
     finally:
-        graph_q.clear_edge_cache()
+        _fresh(spark)
     assert brows == krows and len(brows) > 0
     # the twin shares graph_hits's oracle registration
     from wsprnet_scraper_spark.plans import ORACLE

@@ -17,31 +17,38 @@ from tests.conftest import SF_SMOKE
 from wsprnet_scraper_spark.operators import dedup, similarity, stores
 
 
+# the documents-keyed stores and the graph edge relations
+_TABLE_SETS = (("documents",), ("orders", "lineitem"))
+
+
 def _rows(df):
     return sorted(tuple(r) for r in df.collect())
 
 
 def test_store_builds_once_and_roundtrips(spark, tmp_path, monkeypatch):
     monkeypatch.setenv(stores.ENV_VAR, str(tmp_path / "store"))
-    stores.clear_store_cache()
-    calls = []
+    for tables in _TABLE_SETS:
+        stores.clear_store_cache()
+        calls = []
 
-    def build():
-        calls.append(1)
-        return spark.range(5).select(
-            F.col("id").alias("k"), (F.col("id") * 7).alias("v")
-        )
+        def build():
+            calls.append(1)
+            return spark.range(5).select(
+                F.col("id").alias("k"), (F.col("id") * 7).alias("v")
+            )
 
-    a = stores.materialized(spark, SF_SMOKE, "t_round", build)
-    b = stores.materialized(spark, SF_SMOKE, "t_round", build)
-    assert len(calls) == 1 and b is a  # in-app handle reuse
-    # a FRESH handle (new session state simulated by clearing the
-    # in-memory cache) must serve from the standing parquet, not
-    # rebuild — the cross-session amortization the env var buys
-    stores._STORE_CACHE.clear()
-    c = stores.materialized(spark, SF_SMOKE, "t_round", build)
-    assert len(calls) == 1
-    assert _rows(c) == _rows(a)
+        kind = "t_round_" + "_".join(tables)
+        a = stores.materialized(spark, SF_SMOKE, kind, build, tables)
+        b = stores.materialized(spark, SF_SMOKE, kind, build, tables)
+        assert len(calls) == 1 and b is a  # in-app handle reuse
+        # a FRESH handle (new session state simulated by the strongest
+        # clear, which deletes only scratch-tier files) must serve from
+        # the standing parquet, not rebuild — the cross-session
+        # amortization the env var buys
+        stores.clear_store_cache(drop_files=True)
+        c = stores.materialized(spark, SF_SMOKE, kind, build, tables)
+        assert len(calls) == 1
+        assert _rows(c) == _rows(a)
     stores.clear_store_cache()
 
 
@@ -49,45 +56,58 @@ def test_scratch_tier_builds_per_process_and_cleans_up(
     spark, monkeypatch
 ):
     monkeypatch.delenv(stores.ENV_VAR, raising=False)
-    stores.clear_store_cache()
-    calls = []
+    for tables in _TABLE_SETS:
+        stores.clear_store_cache()
+        calls = []
 
-    def build():
-        calls.append(1)
-        return spark.range(3).select(F.col("id").alias("k"))
+        def build():
+            calls.append(1)
+            return spark.range(3).select(F.col("id").alias("k"))
 
-    a = stores.materialized(spark, SF_SMOKE, "t_scratch", build)
-    assert _rows(a) == [(0,), (1,), (2,)]
-    stores.materialized(spark, SF_SMOKE, "t_scratch", build)
-    assert len(calls) == 1
-    app = spark.sparkContext.applicationId
-    (_df, path, persistent) = stores._STORE_CACHE[app][
-        ("t_scratch", SF_SMOKE.rstrip("/"))
-    ]
-    assert not persistent and os.path.isdir(path)
-    # r12 (VERDICT r11 task #5): a maintenance pass drops only the
-    # handles — the standing scratch parquet survives, and the next
-    # access re-opens it instead of re-paying the build
-    stores.clear_store_cache()
-    assert os.path.isdir(path)
-    b = stores.materialized(spark, SF_SMOKE, "t_scratch", build)
-    assert len(calls) == 1  # daemon re-pay is a parquet open, not a rebuild
-    assert _rows(b) == _rows(a)
-    # explicit disk reclamation still available
-    stores.clear_store_cache(drop_files=True)
-    assert not os.path.isdir(path)
+        kind = "t_scratch_" + "_".join(tables)
+        a = stores.materialized(spark, SF_SMOKE, kind, build, tables)
+        assert _rows(a) == [(0,), (1,), (2,)]
+        stores.materialized(spark, SF_SMOKE, kind, build, tables)
+        assert len(calls) == 1
+        app = spark.sparkContext.applicationId
+        (_df, path, persistent) = stores._STORE_CACHE[app][
+            (kind, SF_SMOKE.rstrip("/"))
+        ]
+        assert not persistent and os.path.isdir(path)
+        # r12 (VERDICT r11 task #5): a maintenance pass drops only the
+        # handles — the standing scratch parquet survives, and the
+        # next access re-opens it instead of re-paying the build
+        stores.clear_store_cache()
+        assert os.path.isdir(path)
+        b = stores.materialized(spark, SF_SMOKE, kind, build, tables)
+        assert len(calls) == 1  # re-pay is a parquet open, not a rebuild
+        assert _rows(b) == _rows(a)
+        # explicit disk reclamation still available
+        stores.clear_store_cache(drop_files=True)
+        assert not os.path.isdir(path)
 
 
 def test_fingerprint_keys_out_rewritten_corpus(tmp_path):
+    import shutil
+
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    p = tmp_path / "documents.parquet"
-    pq.write_table(pa.table({"doc_id": [1, 2]}), str(p))
-    fp1 = stores.corpus_fingerprint(str(tmp_path))
-    os.utime(p, ns=(1, 1))  # content rewrite at the same path
-    fp2 = stores.corpus_fingerprint(str(tmp_path))
-    assert fp1 != fp2
+    for tables in _TABLE_SETS:
+        corpus = tmp_path / "_".join(tables)
+        corpus.mkdir()
+        for t in tables:
+            pq.write_table(
+                pa.table({"id": [1, 2]}), str(corpus / f"{t}.parquet")
+            )
+        fp1 = stores.corpus_fingerprint(str(corpus), tables)
+        # path-salted: the same files under another dir key apart
+        twin = tmp_path / ("twin_" + corpus.name)
+        shutil.copytree(corpus, twin)
+        assert stores.corpus_fingerprint(str(twin), tables) != fp1
+        # a content rewrite of any named table at the same path
+        os.utime(corpus / f"{tables[0]}.parquet", ns=(1, 1))
+        assert stores.corpus_fingerprint(str(corpus), tables) != fp1
 
 
 def test_minhash_incremental_store_parity(spark, monkeypatch):

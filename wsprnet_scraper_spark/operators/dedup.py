@@ -19,6 +19,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..session import scoped_conf
+
 
 def exact_dedup(df: DataFrame, key_cols: list[str], id_col: str) -> DataFrame:
     """Exact dedup via hash-groupBy: one representative (min id) plus
@@ -364,7 +366,6 @@ def connected_components(
     # a deployment that can't tolerate it should run CC on
     # spark.newSession(), which shares the context but scopes SQL conf.
     spark = pairs.sparkSession
-    saved = spark.conf.get("spark.sql.shuffle.partitions")
     # One materialization of the (possibly expensive) pair derivation,
     # hash(dst)-distributed for the round joins (see docstring). The
     # count both sizes the loop's shuffle and finalizes the cache so
@@ -447,51 +448,53 @@ def connected_components(
             ]
         )
         return spark.createDataFrame(out, schema)
-    parts = max(int(saved), min(4096, n_edges // 2_000_000 + 1))
+    parts = max(
+        int(spark.conf.get("spark.sql.shuffle.partitions")),
+        min(4096, n_edges // 2_000_000 + 1),
+    )
     try:
-        spark.conf.set("spark.sql.shuffle.partitions", str(parts))
-        # Seed = round one fused: min(self, direct neighbors) straight
-        # off the edge relation — one edge-sized groupBy (map-side
-        # combinable), keyed on the same node id every later round
-        # groups on.
-        labels = (
-            sym.groupBy(F.col("dst").alias("doc"))
-            .agg(F.min("src").alias("_m"))
-            .select("doc", F.least("doc", "_m").alias("label"))
-            .localCheckpoint(eager=True)
-        )
-        prev_sum = _label_sum(labels)
-        for _ in range(max_iter):
-            msgs = sym.join(
-                labels.withColumnRenamed("doc", "dst").hint("shuffle_hash"),
-                "dst",
-            ).select(F.col("src").alias("doc"), "label")
-            jump = (
-                labels.alias("l1")
-                .join(
-                    labels.select(
-                        F.col("doc").alias("label"), F.col("label").alias("_ll")
-                    ).hint("shuffle_hash"),
-                    "label",
-                )
-                .select("doc", F.col("_ll").alias("label"))
-            )
+        with scoped_conf(spark, {"spark.sql.shuffle.partitions": str(parts)}):
+            # Seed = round one fused: min(self, direct neighbors) straight
+            # off the edge relation — one edge-sized groupBy (map-side
+            # combinable), keyed on the same node id every later round
+            # groups on.
             labels = (
-                labels.unionByName(msgs)
-                .unionByName(jump)
-                .groupBy("doc")
-                .agg(F.min("label").alias("label"))
+                sym.groupBy(F.col("dst").alias("doc"))
+                .agg(F.min("src").alias("_m"))
+                .select("doc", F.least("doc", "_m").alias("label"))
                 .localCheckpoint(eager=True)
             )
-            cur_sum = _label_sum(labels)
-            if cur_sum == prev_sum:
-                break
-            prev_sum = cur_sum
+            prev_sum = _label_sum(labels)
+            for _ in range(max_iter):
+                msgs = sym.join(
+                    labels.withColumnRenamed("doc", "dst").hint("shuffle_hash"),
+                    "dst",
+                ).select(F.col("src").alias("doc"), "label")
+                jump = (
+                    labels.alias("l1")
+                    .join(
+                        labels.select(
+                            F.col("doc").alias("label"), F.col("label").alias("_ll")
+                        ).hint("shuffle_hash"),
+                        "label",
+                    )
+                    .select("doc", F.col("_ll").alias("label"))
+                )
+                labels = (
+                    labels.unionByName(msgs)
+                    .unionByName(jump)
+                    .groupBy("doc")
+                    .agg(F.min("label").alias("label"))
+                    .localCheckpoint(eager=True)
+                )
+                cur_sum = _label_sum(labels)
+                if cur_sum == prev_sum:
+                    break
+                prev_sum = cur_sum
     finally:
         # Inside finally (ADVICE r8): an exception mid-loop must not
         # leak the edge-sized persisted cache until LRU eviction —
         # minhash_cluster_incremental runs two CC passes per build.
-        spark.conf.set("spark.sql.shuffle.partitions", saved)
         sym.unpersist()
     return labels.select("doc", F.col("label").alias("cluster"))
 

@@ -461,7 +461,9 @@ def _codebook_store_path(cache_key, params: tuple):
     rewritten corpus keys out stale codebooks; `params` must encode
     k/iters/etc. The store is a cache: parquet round-trips the exact
     (cid, cv, cn2) values, so serving and dedup plans are
-    bit-identical either way (pinned by tests/test_sig_store.py)."""
+    bit-identical either way (pinned by tests/test_sig_store.py).
+    Trained codebooks land there through stores._land (temp dir, then
+    an atomic rename), like every other standing relation."""
     import hashlib
     import os
 
@@ -845,8 +847,9 @@ def train_kmeans_df(
         )
 
     if spath is not None:
-        os.makedirs(os.path.dirname(spath), exist_ok=True)
-        cents.write.mode("overwrite").parquet(spath)
+        from .stores import _land
+
+        _land(os.path.dirname(spath), "cbk", spath, lambda: cents)
     if ck:
         _CODEBOOKS[ck] = cents
     return cents
@@ -1489,8 +1492,10 @@ def train_twolevel_df(
     routed.unpersist()
     out = (coarse, fine)
     if spath is not None:
-        coarse.write.mode("overwrite").parquet(os.path.join(spath, "coarse"))
-        fine.write.mode("overwrite").parquet(os.path.join(spath, "fine"))
+        from .stores import _land
+
+        _land(spath, "coarse", os.path.join(spath, "coarse"), lambda: coarse)
+        _land(spath, "fine", os.path.join(spath, "fine"), lambda: fine)
     if ck:
         _CODEBOOKS[ck] = out
     return out

@@ -1,35 +1,26 @@
-"""Corpus-fingerprint-keyed standing-state store (VERDICT r10 #1/#6).
+"""Corpus-fingerprint-keyed standing-relation store: the one place a
+relation that is built once per corpus version and scanned by every
+later run is kept. Its users are the graph edge relations
+(plans/graph_q.py), MinHash signature stores, standing-corpus cluster
+labels and trained ANN codebooks. A real pipeline pays each of these
+once per corpus and amortizes it across every query and ingest batch;
+rebuilding them per run was the bulk of the incremental and stream
+entries' cost (10.3 s of strm_minhash_dedup's 18.7 s at the 100x
+probe was the signature-store rebuild).
 
-Generalizes the graph family's write-once edge parquet
-(plans/graph_q.py `_materialized_edges`, the SPARK_GRAFT_EDGE_STORE
-precedent) to ANY standing relation a production deployment builds
-once per corpus and every later run scans: MinHash signature stores,
-standing-corpus cluster labels, trained ANN codebooks. At 100 TB this
-IS the deployment shape — the judged incremental/stream entries used
-to rebuild the standing corpus state per run (10.3 s of
-strm_minhash_dedup's 18.7 s at the 100x probe was the signature-store
-rebuild), where a real pipeline pays that once per corpus version and
-amortizes it across every ingest batch.
+Two tiers, both fingerprint-keyed and _SUCCESS-gated; a build lands
+through `_land` (write into a temp dir, then one atomic rename):
 
-Two tiers, exactly the edge-store contract:
-
-- default: per-application scratch root (process-private tempdir),
-  fingerprint-keyed and _SUCCESS-gated exactly like the persistent
-  tier, deleted at process exit (safe under concurrent applications
-  — no shared paths). Steady-state runs in one session serve from
-  the standing parquet; the first call pays the build. r12: a
-  maintenance pass (`clear_store_cache()`) drops only the in-memory
-  HANDLES — the standing parquet survives, so a daemon's periodic
-  reclaim costs a parquet re-open, not a standing-state rebuild
-  (VERDICT r11 task #5; the probe's cold-minus-warm split measures
-  exactly the rebuild this avoids).
-- SPARK_GRAFT_SIG_STORE=<dir> (opt-in): the relation persists ACROSS
-  sessions under <dir>/<kind>_<corpus-fingerprint>/ — a fresh session
-  reuses the standing parquet instead of re-paying the derivation.
-  The fingerprint (file stats of the named source tables) keys out
-  stale data; _SUCCESS gates out partial writes. Opt-in because a
-  shared path under concurrent applications could race — the
-  probe/bench tooling owns its store dir.
+- default: a per-application scratch root (process-private tempdir),
+  deleted at process exit, so concurrent applications share no path.
+  The first call pays the build; later calls in the process scan the
+  standing parquet. A maintenance pass (`clear_store_cache()`) drops
+  only the in-memory HANDLES, so a daemon's periodic reclaim costs a
+  parquet re-open, not a rebuild.
+- SPARK_GRAFT_SIG_STORE=<dir>: the relation persists ACROSS sessions
+  under <dir>/<kind>_<corpus-fingerprint>/, so a fresh session reuses
+  it instead of re-paying the derivation. The fingerprint (file stats
+  of the named source tables) keys out stale data.
 
 The store is a CACHE, never a semantic change: a stored relation must
 be bit-identical to `build()`'s output (parquet round-trips the exact
@@ -97,12 +88,17 @@ def clear_store_cache(drop_files: bool = False) -> None:
     cold-minus-warm split IS that rebuild cost — e.g. 18.8 s of
     dedup_minhash_cluster_incremental's 28.0 s cold at 100×).
     `drop_files=True` deletes the scratch dirs too (tests / explicit
-    disk reclamation); process exit always cleans up via atexit."""
+    disk reclamation) and clears the registry plan cache, whose
+    cached plans may scan the deleted files; process exit always
+    cleans up via atexit."""
     _STORE_CACHE.clear()
     if drop_files:
+        from ..plans.registry import clear_plan_cache
+
         for root in _SCRATCH_ROOTS.values():
             shutil.rmtree(root, ignore_errors=True)
         _SCRATCH_ROOTS.clear()
+        clear_plan_cache()
 
 
 def _land(store_root: str, kind: str, path: str, build) -> None:

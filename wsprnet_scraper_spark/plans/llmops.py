@@ -15,6 +15,7 @@ from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
 from ..operators import dedup, multimodal, similarity, stores, text
+from ..session import scoped_conf
 from ..sources import load
 from .registry import ORACLE, register
 
@@ -4071,17 +4072,16 @@ def _bpe_train_merges(
     spark = d.sparkSession
     n_vocab = cur.count()
     loop_parts = max(1, min(4096, n_vocab // 2_000_000 + 1))
-    saved_aqe = spark.conf.get("spark.sql.adaptive.enabled")
-    saved_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    spark.conf.set("spark.sql.shuffle.partitions", str(loop_parts))
-    try:
+    with scoped_conf(
+        spark,
+        {
+            "spark.sql.adaptive.enabled": "false",
+            "spark.sql.shuffle.partitions": str(loop_parts),
+        },
+    ):
         return _bpe_merge_loop(
             cur, rounds, checkpoint_every, return_final
         )
-    finally:
-        spark.conf.set("spark.sql.adaptive.enabled", saved_aqe)
-        spark.conf.set("spark.sql.shuffle.partitions", saved_parts)
 
 
 def _bpe_merge_loop(cur, rounds, checkpoint_every, return_final):

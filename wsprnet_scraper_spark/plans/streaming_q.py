@@ -17,6 +17,7 @@ import uuid
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
+from ..session import scoped_conf
 from ..sources import load_events
 from .registry import register
 
@@ -39,6 +40,9 @@ _atexit.register(_wm_cleanup_at_exit)
 _money = "CAST(value AS DECIMAL(12,2))"
 
 
+_STATE_PART_BUDGET = 8 * 1024 * 1024
+
+
 class _sized_stream_parts:
     """Size a stateful stream's shuffle (= state) partitions from the
     INPUT VOLUME instead of the session core count, for the duration
@@ -57,8 +61,8 @@ class _sized_stream_parts:
     size for tens-of-MB-plus per partition), not with local core
     count: partitions = clamp(input_bytes / per-partition budget,
     1, 4096). On a real cluster the same rule sizes state tasks to
-    data. Budget dial: SPARK_GRAFT_STREAM_STATE_PART_BYTES (default
-    8 MiB). Derived from file sizes only — no extra Spark job.
+    data. Budget: 8 MiB per partition. Derived from file sizes only —
+    no extra Spark job.
 
     Budget calibration (r14, probe-measured): the r13 default of
     32 MiB starved the 100x stream-stream join — 365 MB of input gave
@@ -84,16 +88,9 @@ class _sized_stream_parts:
     the partition count on the stream's own conf scope instead."""
 
     def __init__(self, spark, *paths):
-        import os
-
         from ..sources.tables import _dataset_bytes
 
         self.spark = spark
-        budget = int(
-            os.environ.get(
-                "SPARK_GRAFT_STREAM_STATE_PART_BYTES", str(8 * 1024 * 1024)
-            )
-        )
         total, unknown = 0, False
         for p in paths:
             b = _dataset_bytes(p)
@@ -102,71 +99,50 @@ class _sized_stream_parts:
             else:
                 total += b
         self.parts = (
-            None if unknown else max(1, min(4096, -(-total // budget)))
+            None
+            if unknown
+            else max(1, min(4096, -(-total // _STATE_PART_BUDGET)))
         )
 
     def __enter__(self):
-        if self.parts is None:
-            self._saved = None
-            return self
-        self._saved = self.spark.conf.get("spark.sql.shuffle.partitions")
-        self.spark.conf.set("spark.sql.shuffle.partitions", str(self.parts))
+        self._scope = scoped_conf(
+            self.spark,
+            {}
+            if self.parts is None
+            else {"spark.sql.shuffle.partitions": str(self.parts)},
+        )
+        self._scope.__enter__()
         return self
 
     def __exit__(self, *exc):
-        if self._saved is not None:
-            self.spark.conf.set("spark.sql.shuffle.partitions", self._saved)
-        return False
+        return self._scope.__exit__(*exc)
 
 
-class _rocksdb_state:
-    """RocksDB state-store provider + changelog checkpointing for one
-    streaming run (conf read at query START; set before .start(),
-    restored after awaitTermination).
-
-    Why (r12 for strm_dedup_watermark; r14 considered for the
-    stream-stream joins, rejected on measurement): the HDFS-backed
-    default holds every state row in JVM HEAP — at the 100x probe
-    corpus the symmetric-join state (~4M rows across 4
-    stores/partition) OOM'd the 8g driver JVM outright, exactly the
-    failure mode the r12 watermark probe hit. RocksDB keeps state in native memory + local disk (the
-    configuration a 100 TB streaming deployment actually runs), and
-    changelog checkpointing commits per-batch DELTAS instead of full
-    snapshots (commit 123 -> ~38 ms measured on the watermark entry;
-    snapshots move to the async maintenance thread).
-
-    NOT extended to the stream-stream joins (r14, measured at the
-    100x probe corpus): the symmetric join's per-row state write/probe
-    pattern runs ~3x slower on RocksDB (306 s vs 110 s heap-backed at
-    46 state partitions) and +2.5 s per entry even at sf0.1 — the
-    dedup map's lookup pattern is where RocksDB wins; the joins keep
-    the heap provider with byte-sized partitions."""
-
-    def __init__(self, spark):
-        self.spark = spark
-        self._keys = {
-            "spark.sql.streaming.stateStore.providerClass":
-                "org.apache.spark.sql.execution.streaming.state."
-                "RocksDBStateStoreProvider",
-            "spark.sql.streaming.stateStore.rocksdb."
-            "changelogCheckpointing.enabled": "true",
-        }
-
-    def __enter__(self):
-        self._saved = {
-            k: self.spark.conf.get(k, None) for k in self._keys
-        }
-        for k, v in self._keys.items():
-            self.spark.conf.set(k, v)
-        return self
-
-    def __exit__(self, *exc):
-        for k, prev in self._saved.items():
-            if prev is None:
-                self.spark.conf.unset(k)
-            else:
-                self.spark.conf.set(k, prev)
-        return False
+# RocksDB state-store provider + changelog checkpointing for one
+# streaming run (conf read at query START; set before .start(),
+# restored after awaitTermination).
+#
+# Why (r12 for strm_dedup_watermark): the HDFS-backed default holds
+# every state row in JVM HEAP — at the 100x probe corpus that OOM'd
+# the 8g driver JVM. RocksDB keeps state in native memory + local disk
+# (the configuration a 100 TB streaming deployment actually runs), and
+# changelog checkpointing commits per-batch DELTAS instead of full
+# snapshots (commit 123 -> ~38 ms measured on the watermark entry;
+# snapshots move to the async maintenance thread).
+#
+# NOT used for the stream-stream joins (r14, measured at the 100x
+# probe corpus): the symmetric join's per-row state write/probe
+# pattern runs ~3x slower on RocksDB (306 s vs 110 s heap-backed at
+# 46 state partitions) and +2.5 s per entry even at sf0.1 — the
+# dedup map's lookup pattern is where RocksDB wins; the joins keep the
+# heap provider with byte-sized partitions.
+_ROCKSDB_STATE = {
+    "spark.sql.streaming.stateStore.providerClass":
+        "org.apache.spark.sql.execution.streaming.state."
+        "RocksDBStateStoreProvider",
+    "spark.sql.streaming.stateStore.rocksdb."
+    "changelogCheckpointing.enabled": "true",
+}
 
 
 def _norm_ts(stream, raw_schema):
@@ -421,12 +397,11 @@ def strm_dedup_watermark(spark, sf_dir):
     prev_work = _WM_WORK
     work = tempfile.mkdtemp(prefix="wspr_dedup_wm_")
     _WM_WORK = work
-    # RocksDB provider + changelog checkpointing (r14: extracted to
-    # _rocksdb_state, shared with the stream-stream joins); state
-    # partitions sized to the (doubled) input volume — each RocksDB
-    # instance costs native-db setup + per-commit work, so instance
-    # count should track state bytes, not local cores
-    with _rocksdb_state(spark), _sized_stream_parts(
+    # RocksDB provider + changelog checkpointing (_ROCKSDB_STATE);
+    # state partitions sized to the (doubled) input volume — each
+    # RocksDB instance costs native-db setup + per-commit work, so
+    # instance count should track state bytes, not local cores
+    with scoped_conf(spark, _ROCKSDB_STATE), _sized_stream_parts(
         spark, f"{sf_dir}/events.parquet", f"{sf_dir}/events.parquet"
     ):
         q = (
@@ -591,7 +566,7 @@ def strm_stream_join(spark, sf_dir):
     # (_sized_stream_parts): the conf is read at query START and
     # frozen into the checkpoint, so the scope covers start..await.
     # Provider stays heap-backed (r14, measured: RocksDB ran this
-    # join 3x slower at the 100x corpus — see _rocksdb_state).
+    # join 3x slower at the 100x corpus — see _ROCKSDB_STATE).
     with _sized_stream_parts(
         spark, f"{sf_dir}/events.parquet", f"{sf_dir}/events.parquet"
     ):

@@ -15,6 +15,7 @@ Pandas-UDF paths.
 from __future__ import annotations
 
 import os
+from contextlib import contextmanager
 from pathlib import Path
 
 from pyspark.sql import SparkSession
@@ -110,3 +111,23 @@ def get_session(app_name: str = "wsprnet_scraper_spark") -> SparkSession:
     except Exception:
         pass  # best-effort: a different log backend keeps the warning
     return spark
+
+
+@contextmanager
+def scoped_conf(spark, conf: dict):
+    """Set each SQL conf key in `conf` for the block, then put back the
+    earlier value, or unset the key if it was unset before — also
+    when the block raises. The conf is session-global while set: a
+    query planned concurrently on the same session sees it too."""
+    saved = {}
+    try:
+        for k, v in conf.items():
+            saved[k] = spark.conf.get(k, None)
+            spark.conf.set(k, v)
+        yield
+    finally:
+        for k, prev in saved.items():
+            if prev is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, prev)

@@ -59,23 +59,23 @@ def phase_locked_loop(
 def session_maintenance(spark) -> None:
     """Reclaim the slow session-lifetime leases a long-running driver
     accumulates: prepared-plan cache entries (each pins a JVM plan
-    tree via py4j), CacheManager persisted relations, and dead
-    checkpoint RDDs waiting on Python GC for ContextCleaner to reap.
-    Measured consequence of NOT doing this: the r5 full-registry gate
-    OOM'd a default-heap JVM at ~261 queries with every individual
-    query innocent. Call it at a coarse cadence (the daemon defaults
-    to every 720 ticks ≈ 8 h at the 30 s scrape cadence) — it costs
-    re-planning the next query of each shape, nothing else."""
+    tree via py4j), standing-relation store handles (graph edges,
+    signatures, labels, codebooks), CacheManager persisted relations,
+    and dead checkpoint RDDs waiting on Python GC for ContextCleaner
+    to reap. Measured consequence of NOT doing this: the r5
+    full-registry gate OOM'd a default-heap JVM at ~261 queries with
+    every individual query innocent. Call it at a coarse cadence (the
+    daemon defaults to every 720 ticks ≈ 8 h at the 30 s scrape
+    cadence) — it costs re-planning the next query of each shape and
+    re-opening each standing parquet, nothing else."""
     import gc
 
     from ..operators.similarity import clear_codebooks
     from ..operators.stores import clear_store_cache
     from ..plans.analytics import clear_frame_store
-    from ..plans.graph_q import clear_edge_cache
     from ..plans.registry import clear_plan_cache
 
     clear_plan_cache()
-    clear_edge_cache()
     # handles only: the standing-state scratch parquet survives, so
     # the post-maintenance re-pay is a parquet re-open, never a
     # standing-state rebuild (r12, VERDICT r11 task #5 — the probe's
