@@ -19,41 +19,17 @@ from pyspark.sql import DataFrame, SparkSession
 
 sys.path.insert(0, str(Path(__file__).resolve().parent))
 
-_TUNED = False
-
 
 def _tune(spark: SparkSession) -> SparkSession:
-    """Apply the engine's session discipline to a driver-owned session.
+    """Apply the engine's session discipline (`session.sql_conf`: UTC,
+    ANSI off, nanos-as-long, AQE, broadcast threshold, shuffle
+    partitions sized to the machine instead of Spark's 200) to a
+    driver-owned session. Every key is runtime-settable SQL conf.
+    `load_events` casts as a backstop if the timestamp conf can't be
+    set."""
+    from wsprnet_scraper_spark.session import sql_conf
 
-    Everything here is runtime-settable SQL conf: UTC (the reference
-    runs TZ=UTC, wsprnet-scraper.sh:17), permissive arithmetic (ANSI
-    off — div/0 -> NULL like the reference and DuckDB), nanos-as-long
-    (Spark's parquet reader rejects the events table's
-    TIMESTAMP(NANOS) otherwise), AQE + broadcast threshold for the
-    join-heavy queries.
-    """
-    import os
-
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 8))
-    conf = {
-        "spark.sql.session.timeZone": "UTC",
-        "spark.sql.ansi.enabled": "false",
-        # a driver-owned session keeps Spark's 200-partition default;
-        # size the shuffle to the machine (AQE coalesces the rest)
-        "spark.sql.shuffle.partitions": str(cpus),
-        "spark.sql.legacy.parquet.nanosAsLong": "true",
-        # The driver's generator has shipped events.ts as TIMESTAMP(NANOS)
-        # (round 1) and naive timestamp[us] (rounds 2-3). The naive shape
-        # reads as TIMESTAMP_NTZ under Spark 4 defaults, which breaks
-        # unix_micros / window() / watermarks; force plain TIMESTAMP (the
-        # session is UTC, so wall-clock matches the DuckDB oracle's naive
-        # read). load_events casts as a backstop if this conf can't be set.
-        "spark.sql.parquet.inferTimestampNTZ.enabled": "false",
-        "spark.sql.adaptive.enabled": "true",
-        "spark.sql.adaptive.coalescePartitions.enabled": "true",
-        "spark.sql.autoBroadcastJoinThreshold": str(32 * 1024 * 1024),
-    }
-    for k, v in conf.items():
+    for k, v in sql_conf().items():
         try:
             spark.conf.set(k, v)
         except Exception:

@@ -185,22 +185,14 @@ def main() -> None:
     warm_dir = "/root/testdata/sf0.001"
     if not os.path.isdir(warm_dir):
         warm_dir = sf_dir
-    # Force the scan-parallelism heal during warm-up so warm plans have
-    # the SAME stage structure (Exchange boundaries -> codegen stages)
-    # as the target-SF plans; otherwise JIT of the real shape lands in
-    # the timed run.
-    os.environ["SPARK_GRAFT_FORCE_HEAL"] = "1"
-    try:
-        for name in HEADLINE:
-            if name in QUERIES:
-                run(name, at=warm_dir)
-                # also warm target-SF *metadata* (file listing, parquet
-                # footers, analysis cache) without executing the plan —
-                # .schema triggers analysis only. The timed run below
-                # still performs every byte of target-SF data work.
-                QUERIES[name](spark, sf_dir).schema
-    finally:
-        del os.environ["SPARK_GRAFT_FORCE_HEAL"]
+    for name in HEADLINE:
+        if name in QUERIES:
+            run(name, at=warm_dir)
+            # also warm target-SF *metadata* (file listing, parquet
+            # footers, analysis cache) without executing the plan —
+            # .schema triggers analysis only. The timed run below
+            # still performs every byte of target-SF data work.
+            QUERIES[name](spark, sf_dir).schema
 
     # Steady state at the target SF: the engine's deployment is a
     # long-running service (30 s scrape cadence), so steady-state per-

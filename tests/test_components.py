@@ -177,7 +177,7 @@ def test_cc_incremental_property_vs_union_find(spark):
 
 
 def test_cc_local_and_distributed_agree(spark, monkeypatch):
-    """r13 small-graph dial: under SPARK_GRAFT_CC_LOCAL_MAX_EDGES the
+    """r13 small-graph dial: under dedup._CC_LOCAL_MAX_EDGES the
     labeling runs as a driver union-find; above it, the distributed
     pointer-jumping supersteps. Both must produce the identical
     (doc, cluster) relation — pinned on a graph with a long chain
@@ -190,9 +190,9 @@ def test_cc_local_and_distributed_agree(spark, monkeypatch):
         + [(1000, 999)]                          # pair
     )
     pairs = _pairs(spark, edges)
-    monkeypatch.setenv("SPARK_GRAFT_CC_LOCAL_MAX_EDGES", "1000000")
+    monkeypatch.setattr(dedup, "_CC_LOCAL_MAX_EDGES", 1_000_000)
     local = {(r.doc, r.cluster) for r in dedup.connected_components(pairs).collect()}
-    monkeypatch.setenv("SPARK_GRAFT_CC_LOCAL_MAX_EDGES", "0")
+    monkeypatch.setattr(dedup, "_CC_LOCAL_MAX_EDGES", 0)
     dist = {(r.doc, r.cluster) for r in dedup.connected_components(pairs).collect()}
     assert local == dist
     assert (2, 2) in local and (90, 2) in local and (7, 2) in local
@@ -205,8 +205,8 @@ def test_cc_local_string_ids_match_spark_min(spark, monkeypatch):
     case where ASCII sorts below a multi-byte char."""
     edges = [("b", "a"), ("a", "éx"), ("zz", "z9")]
     pairs = spark.createDataFrame(edges, "doc_a string, doc_b string")
-    monkeypatch.setenv("SPARK_GRAFT_CC_LOCAL_MAX_EDGES", "1000000")
+    monkeypatch.setattr(dedup, "_CC_LOCAL_MAX_EDGES", 1_000_000)
     local = {(r.doc, r.cluster) for r in dedup.connected_components(pairs).collect()}
-    monkeypatch.setenv("SPARK_GRAFT_CC_LOCAL_MAX_EDGES", "0")
+    monkeypatch.setattr(dedup, "_CC_LOCAL_MAX_EDGES", 0)
     dist = {(r.doc, r.cluster) for r in dedup.connected_components(pairs).collect()}
     assert local == dist

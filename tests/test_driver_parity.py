@@ -13,7 +13,8 @@ silently again:
 * test_load_events_ntz_backstop proves load_events normalizes ts even
   when the session conf is wrong (inferTimestampNTZ left on).
 * test_tune_keeps_load_bearing_confs pins the conf keys _tune must
-  never lose.
+  never lose; test_tune_applies_every_sql_conf_key checks _tune sets
+  every one of them.
 """
 
 from __future__ import annotations
@@ -75,10 +76,9 @@ def test_load_events_ntz_backstop(spark):
 
 
 def test_tune_keeps_load_bearing_confs():
-    import __spark_entry__ as entry_mod
-    import inspect
+    from wsprnet_scraper_spark.session import sql_conf
 
-    src = inspect.getsource(entry_mod._tune)
+    conf = sql_conf()
     for key in (
         "spark.sql.session.timeZone",
         "spark.sql.ansi.enabled",
@@ -86,4 +86,21 @@ def test_tune_keeps_load_bearing_confs():
         "spark.sql.parquet.inferTimestampNTZ.enabled",
         "spark.sql.adaptive.enabled",
     ):
-        assert key in src, f"_tune() lost load-bearing conf {key}"
+        assert key in conf, f"sql_conf() lost load-bearing conf {key}"
+
+
+def test_tune_applies_every_sql_conf_key(spark):
+    """A driver-owned session runs the conf the engine's own session
+    runs: _tune sets every session.sql_conf key, even where the
+    session started from a different value."""
+    import __spark_entry__ as entry_mod
+    from wsprnet_scraper_spark.session import sql_conf
+
+    conf = sql_conf()
+    other = spark.newSession()
+    other.conf.set("spark.sql.shuffle.partitions", "200")
+    for k, v in conf.items():
+        if v in ("true", "false"):
+            other.conf.set(k, "false" if v == "true" else "true")
+    entry_mod._tune(other)
+    assert {k: other.conf.get(k) for k in conf} == conf

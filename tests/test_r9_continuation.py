@@ -704,8 +704,8 @@ def test_t_closeness_single_band_is_null(spark, tmp_path):
     assert all(r.emd_scaled == 0 for r in rows)
 
 
-def test_stream_cusum_invariant_to_batch_cuts(spark, tmp_path):
-    import os
+def test_stream_cusum_invariant_to_batch_cuts(spark, tmp_path, monkeypatch):
+    from wsprnet_scraper_spark.plans import analytics
 
     values = [10.0 if i % 10 else float(10 + i) for i in range(60)]
     a, b = tmp_path / "a", tmp_path / "b"
@@ -716,14 +716,9 @@ def test_stream_cusum_invariant_to_batch_cuts(spark, tmp_path):
         (r.event_id, r.t_idx, r.g)
         for r in QUERIES["strm_changepoint_monitor"](spark, str(a)).collect()
     )
-    os.environ["SPARK_GRAFT_STRM_FILES"] = "3"
-    try:
-        got3 = sorted(
-            (r.event_id, r.t_idx, r.g)
-            for r in QUERIES["strm_changepoint_monitor"](
-                spark, str(b)
-            ).collect()
-        )
-    finally:
-        del os.environ["SPARK_GRAFT_STRM_FILES"]
+    monkeypatch.setattr(analytics, "_STRM_FILES", 3)
+    got3 = sorted(
+        (r.event_id, r.t_idx, r.g)
+        for r in QUERIES["strm_changepoint_monitor"](spark, str(b)).collect()
+    )
     assert got2 == got3 and got2

@@ -1,18 +1,28 @@
-"""The under-parallel-scan heal must see DIRECTORY datasets: a
-Spark-written parquet table is a directory, and os.path.getsize on it
-returns the inode size (~4 KB), which silently disabled the heal and
-left multi-file tables running file-count-wide on a 32-core session
-(caught by the 10x probe: pipeline_enrich27 slope 9.2 -> 4.0)."""
+"""`load` sizes scans with the engine's one partition rule,
+`partitions_for` (one partition per 8 MiB, clamped to [1, 4096]).
+The rule must see DIRECTORY datasets: a Spark-written parquet table is
+a directory, and os.path.getsize on it returns the inode size (~4 KB),
+which once silently disabled the repartition and left multi-file
+tables running file-count-wide on a 32-core session (caught by the
+10x probe: pipeline_enrich27 slope 9.2 -> 4.0)."""
 
 from __future__ import annotations
 
-import shutil
-import tempfile
-
+import pytest
 from pyspark.sql import functions as F
 
 from wsprnet_scraper_spark.sources import load
-from wsprnet_scraper_spark.sources.tables import _dataset_bytes
+from wsprnet_scraper_spark.sources.tables import _dataset_bytes, partitions_for
+
+_MiB = 1 << 20
+
+
+@pytest.mark.parametrize(
+    "nbytes,parts",
+    [(None, None), (0, 1), (1, 1), (8 * _MiB, 1), (8 * _MiB + 1, 2), (1 << 40, 4096)],
+)
+def test_partitions_for(nbytes, parts):
+    assert partitions_for(nbytes) == parts
 
 
 def test_dataset_bytes_sums_directory(tmp_path, spark):
@@ -26,18 +36,26 @@ def test_dataset_bytes_sums_directory(tmp_path, spark):
 
 
 def test_heal_fires_for_multifile_directory(tmp_path, spark):
-    # few big-ish files, well under cores*maxPartitionBytes -> the
-    # scan would run ~2-wide; the heal must repartition to cores
+    # two files over 8 MiB in all, one 128 MiB split estimate -> the
+    # rule asks for at least twice the splits; `load` repartitions to
+    # partitions_for(bytes)
     df = spark.range(400_000).select(
         F.col("id"), F.sha2(F.col("id").cast("string"), 256).alias("pad")
     )
     sf_dir = str(tmp_path)
     df.coalesce(2).write.parquet(f"{sf_dir}/wide.parquet")
+    want = partitions_for(_dataset_bytes(f"{sf_dir}/wide.parquet"))
+    assert want >= 2
     healed = load(spark, sf_dir, "wide")
-    cores = spark.sparkContext.defaultParallelism
-    assert healed.rdd.getNumPartitions() == cores
+    assert healed.rdd.getNumPartitions() == want
     plan = healed._jdf.queryExecution().executedPlan().toString()
     assert "RoundRobinPartitioning" in plan, plan
     raw = load(spark, sf_dir, "wide", parallel="never")
     raw_plan = raw._jdf.queryExecution().executedPlan().toString()
     assert "RoundRobinPartitioning" not in raw_plan, raw_plan
+    # a single file under 8 MiB is one partition's worth: raw scan
+    df.limit(20_000).coalesce(1).write.parquet(f"{sf_dir}/small.parquet")
+    assert _dataset_bytes(f"{sf_dir}/small.parquet") < 8 * _MiB
+    small = load(spark, sf_dir, "small")
+    small_plan = small._jdf.queryExecution().executedPlan().toString()
+    assert "RoundRobinPartitioning" not in small_plan, small_plan

@@ -13,7 +13,6 @@ Usage:
 from __future__ import annotations
 
 import argparse
-import os
 import sys
 import time
 from pathlib import Path
@@ -68,11 +67,7 @@ def main() -> int:
         fn = QUERIES[name]
         # warm at smallest sf (codegen/JIT), matching bench discipline
         warm_dir = "/root/testdata/sf0.001"
-        os.environ["SPARK_GRAFT_FORCE_HEAL"] = "1"
-        try:
-            fn(spark, warm_dir).write.format("noop").mode("overwrite").save()
-        finally:
-            del os.environ["SPARK_GRAFT_FORCE_HEAL"]
+        fn(spark, warm_dir).write.format("noop").mode("overwrite").save()
         fn(spark, args.sf).schema
 
         times = []

@@ -13,8 +13,6 @@ the 128-bit values.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -289,6 +287,11 @@ def duplicated_spans(shingled: DataFrame, min_docs: int = 2) -> DataFrame:
     )
 
 
+# Edge count at or under which connected_components labels on the
+# driver (see the comment at its use).
+_CC_LOCAL_MAX_EDGES = 1_000_000
+
+
 def connected_components(
     pairs: DataFrame, max_iter: int = 8
 ) -> DataFrame:
@@ -379,18 +382,16 @@ def connected_components(
     # time to converge a graph that fits in single-digit MB. LSH/
     # similarity candidate graphs are duplicate-structure-sized, not
     # corpus-sized, so this is the COMMON serving case even at 100 TB
-    # corpus scale. Under the cap (default 1M symmetric edge rows =
-    # ~16 MB collected, far under any driver budget; env-dial
-    # SPARK_GRAFT_CC_LOCAL_MAX_EDGES) the labeling runs as one
-    # union-find over the collected edges with min-id representatives
-    # — the same fixed point the supersteps converge to, exactly
-    # (integer/byte-wise min, no floats). Above the cap nothing
-    # changes: the distributed pointer-jumping path below is still
-    # the 100 TB shape (test-pinned both ways in
+    # corpus scale. Under the cap (_CC_LOCAL_MAX_EDGES: 1M symmetric
+    # edge rows = ~16 MB collected, far under any driver budget) the
+    # labeling runs as one union-find over the collected edges with
+    # min-id representatives — the same fixed point the supersteps
+    # converge to, exactly (integer/byte-wise min, no floats). Above
+    # the cap nothing changes: the distributed pointer-jumping path
+    # below is still the 100 TB shape (test-pinned both ways in
     # tests/test_components.py::test_cc_local_and_distributed_agree).
-    local_max = int(os.environ.get("SPARK_GRAFT_CC_LOCAL_MAX_EDGES", "1000000"))
     id_type = sym.schema["dst"].dataType
-    if n_edges <= local_max and isinstance(
+    if n_edges <= _CC_LOCAL_MAX_EDGES and isinstance(
         id_type, (T.LongType, T.IntegerType, T.ShortType, T.StringType)
     ):
         try:

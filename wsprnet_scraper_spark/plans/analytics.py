@@ -4360,6 +4360,13 @@ def agg_winsorized_mean(spark, sf_dir):
     )
 
 
+# How many landing files strm_changepoint_monitor splits its slice
+# into = how many micro-batches run. The claim that emitted G_t does
+# not depend on where the batch cuts fall is pinned by a test that
+# runs 2-file and 3-file splits and asserts identical output.
+_STRM_FILES = 2
+
+
 @register(
     "strm_changepoint_monitor",
     """
@@ -4491,17 +4498,11 @@ def strm_changepoint_monitor(spark, sf_dir):
     bhis = [r["_bhi"] for r in stat_rows if r["_bhi"] is not None]
     bounds = (min(blos), max(bhis)) if blos else (None, None)
 
-    # SPARK_GRAFT_STRM_FILES (default 2): how many landing files the
-    # fixture splits the slice into = how many micro-batches run. The
-    # docstring's claim — emitted G_t is independent of where the
-    # batch cuts fall — is pinned by a test that runs 2-file and
-    # 3-file splits and asserts identical output.
-    n_files = max(1, int(os.environ.get("SPARK_GRAFT_STRM_FILES", "2")))
     land_ordered_ndjson(
         t.filter(is_batch).select("us", "event_id", "event_type", "cents"),
         "us",
         landing,
-        n_files,
+        _STRM_FILES,
         bounds=bounds,
     )
     os.makedirs(results, exist_ok=True)

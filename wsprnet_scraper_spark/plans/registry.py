@@ -26,7 +26,6 @@ do):
 from __future__ import annotations
 
 import functools
-import os
 from collections.abc import Callable
 
 QUERIES: dict[str, Callable] = {}
@@ -77,7 +76,7 @@ ORACLE_BOUND: dict[str, tuple[str, int]] = {}
 # (measured: 1.9 s for the 27-column enrichment tree, more than its
 # sf0.1 execution); a long-running service plans once and serves many.
 # `prepared` memoizes the *unexecuted* DataFrame per Spark session and
-# key: QUERIES callables key by (name, sf_dir, heal-mode); the ingest
+# key: QUERIES callables key by (name, sf_dir); the ingest
 # keys its enriched stream by landing dir, so a scrape daemon builds
 # it once per session and every tick re-starts it.
 # DataFrames are immutable logical plans — re-executing one re-reads
@@ -132,8 +131,7 @@ def register(
 
             @functools.wraps(fn)
             def wrapped(spark, sf_dir, _fn=fn, _name=name):
-                heal = os.environ.get("SPARK_GRAFT_FORCE_HEAL", "")
-                return prepared(spark, (_name, sf_dir, heal), lambda: _fn(spark, sf_dir))
+                return prepared(spark, (_name, sf_dir), lambda: _fn(spark, sf_dir))
 
             QUERIES[name] = wrapped
         else:

@@ -40,9 +40,6 @@ _atexit.register(_wm_cleanup_at_exit)
 _money = "CAST(value AS DECIMAL(12,2))"
 
 
-_STATE_PART_BUDGET = 8 * 1024 * 1024
-
-
 class _sized_stream_parts:
     """Size a stateful stream's shuffle (= state) partitions from the
     INPUT VOLUME instead of the session core count, for the duration
@@ -59,10 +56,11 @@ class _sized_stream_parts:
     at 16, 6.7 s at 8, identical output. State partitions should
     scale with STATE volume (guide §2.2: fewer, larger partitions —
     size for tens-of-MB-plus per partition), not with local core
-    count: partitions = clamp(input_bytes / per-partition budget,
-    1, 4096). On a real cluster the same rule sizes state tasks to
-    data. Budget: 8 MiB per partition. Derived from file sizes only —
-    no extra Spark job.
+    count: `sources.tables.partitions_for(input_bytes)`, the engine's
+    one partition rule (8 MiB per partition, clamped to [1, 4096]) —
+    the same rule that sizes table scans. On a real cluster it sizes
+    state tasks to data. Derived from file sizes only — no extra
+    Spark job.
 
     Budget calibration (r14, probe-measured): the r13 default of
     32 MiB starved the 100x stream-stream join — 365 MB of input gave
@@ -88,21 +86,11 @@ class _sized_stream_parts:
     the partition count on the stream's own conf scope instead."""
 
     def __init__(self, spark, *paths):
-        from ..sources.tables import _dataset_bytes
+        from ..sources.tables import _dataset_bytes, partitions_for
 
         self.spark = spark
-        total, unknown = 0, False
-        for p in paths:
-            b = _dataset_bytes(p)
-            if b is None:
-                unknown = True
-            else:
-                total += b
-        self.parts = (
-            None
-            if unknown
-            else max(1, min(4096, -(-total // _STATE_PART_BUDGET)))
-        )
+        sizes = [_dataset_bytes(p) for p in paths]
+        self.parts = None if None in sizes else partitions_for(sum(sizes))
 
     def __enter__(self):
         self._scope = scoped_conf(

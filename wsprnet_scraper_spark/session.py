@@ -25,8 +25,43 @@ def cpu_count() -> int:
     return int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 8))
 
 
+def sql_conf() -> dict[str, str]:
+    """The session's runtime-settable SQL conf — one owner for
+    `get_session` and for a driver-owned session (`__spark_entry__._tune`).
+    A function, not a constant: the core count is read when the session
+    is built, after a caller has set SPARK_GRAFT_CPUS."""
+    return {
+        "spark.sql.session.timeZone": "UTC",
+        "spark.sql.shuffle.partitions": str(cpu_count()),
+        "spark.sql.adaptive.enabled": "true",
+        "spark.sql.adaptive.coalescePartitions.enabled": "true",
+        "spark.sql.adaptive.skewJoin.enabled": "true",
+        "spark.sql.execution.arrow.pyspark.enabled": "true",
+        # Broadcast anything under 32 MiB: every dimension table in the
+        # judged workload (band dim, region, nation, supplier, part at
+        # test SFs) should go broadcast, never shuffle.
+        "spark.sql.autoBroadcastJoinThreshold": str(32 * 1024 * 1024),
+        # permissive arithmetic/cast semantics: the reference tolerates
+        # bad rows (div-by-zero -> null, failed cast -> null) and DuckDB
+        # returns NULL for double division by zero; Spark 4's ANSI mode
+        # would throw instead
+        "spark.sql.ansi.enabled": "false",
+        # the events test table stores TIMESTAMP(NANOS) which Spark's
+        # parquet reader rejects; read as long and convert explicitly
+        # (sources.tables.load does the ns->timestamp conversion)
+        "spark.sql.legacy.parquet.nanosAsLong": "true",
+        # parquet TIMESTAMP without timezone (timestamp[us], how the
+        # driver's generator writes events.ts) must read as TIMESTAMP,
+        # not TIMESTAMP_NTZ: the whole engine runs in UTC and the
+        # DuckDB oracle reads the same column as UTC-naive, so LTZ@UTC
+        # and the oracle agree wall-clock for free, while NTZ breaks
+        # every time function that requires TIMESTAMP (unix_micros,
+        # window(), watermarks).
+        "spark.sql.parquet.inferTimestampNTZ.enabled": "false",
+    }
+
+
 def get_session(app_name: str = "wsprnet_scraper_spark") -> SparkSession:
-    cpus = cpu_count()
     # Python workers must be able to import this package even when the
     # driver script runs from elsewhere (sys.path edits don't reach
     # forked workers): export the package parent on PYTHONPATH before
@@ -39,14 +74,8 @@ def get_session(app_name: str = "wsprnet_scraper_spark") -> SparkSession:
             f"{pkg_parent}{os.pathsep}{existing}" if existing else pkg_parent
         )
     builder = (
-        SparkSession.builder.master(f"local[{cpus}]")
+        SparkSession.builder.master(f"local[{cpu_count()}]")
         .appName(app_name)
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.shuffle.partitions", str(cpus))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         # JDK 17's GCLocker throws a SPURIOUS OutOfMemoryError when an
         # allocation retries too often while JNI critical sections
@@ -72,28 +101,9 @@ def get_session(app_name: str = "wsprnet_scraper_spark") -> SparkSession:
             ).strip(),
         )
         .config("spark.ui.enabled", "false")
-        # Broadcast anything under 32 MiB: every dimension table in the
-        # judged workload (band dim, region, nation, supplier, part at
-        # test SFs) should go broadcast, never shuffle.
-        .config("spark.sql.autoBroadcastJoinThreshold", str(32 * 1024 * 1024))
-        # permissive arithmetic/cast semantics: the reference tolerates
-        # bad rows (div-by-zero -> null, failed cast -> null) and DuckDB
-        # returns NULL for double division by zero; Spark 4's ANSI mode
-        # would throw instead
-        .config("spark.sql.ansi.enabled", "false")
-        # the events test table stores TIMESTAMP(NANOS) which Spark's
-        # parquet reader rejects; read as long and convert explicitly
-        # (sources.tables.load does the ns->timestamp conversion)
-        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-        # parquet TIMESTAMP without timezone (timestamp[us], how the
-        # driver's generator writes events.ts) must read as TIMESTAMP,
-        # not TIMESTAMP_NTZ: the whole engine runs in UTC and the
-        # DuckDB oracle reads the same column as UTC-naive, so LTZ@UTC
-        # and the oracle agree wall-clock for free, while NTZ breaks
-        # every time function that requires TIMESTAMP (unix_micros,
-        # window(), watermarks).
-        .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
     )
+    for k, v in sql_conf().items():
+        builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     # WindowExec logs "No Partition Defined" for every single-partition
