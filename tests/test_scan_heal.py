@@ -1,16 +1,16 @@
-"""`load` sizes scans with the engine's one partition rule,
-`partitions_for` (one partition per 8 MiB, clamped to [1, 4096]).
-The rule must see DIRECTORY datasets: a Spark-written parquet table is
-a directory, and os.path.getsize on it returns the inode size (~4 KB),
-which once silently disabled the repartition and left multi-file
-tables running file-count-wide on a 32-core session (caught by the
-10x probe: pipeline_enrich27 slope 9.2 -> 4.0)."""
+"""The under-parallel-scan heal must see DIRECTORY datasets: a
+Spark-written parquet table is a directory, and os.path.getsize on it
+returns the inode size (~4 KB), which silently disabled the heal and
+left multi-file tables running file-count-wide on a 32-core session
+(caught by the 10x probe: pipeline_enrich27 slope 9.2 -> 4.0).
+`partitions_for` is the bytes rule that sizes stream state."""
 
 from __future__ import annotations
 
 import pytest
 from pyspark.sql import functions as F
 
+from wsprnet_scraper_spark.session import scoped_conf
 from wsprnet_scraper_spark.sources import load
 from wsprnet_scraper_spark.sources.tables import _dataset_bytes, partitions_for
 
@@ -36,26 +36,33 @@ def test_dataset_bytes_sums_directory(tmp_path, spark):
 
 
 def test_heal_fires_for_multifile_directory(tmp_path, spark):
-    # two files over 8 MiB in all, one 128 MiB split estimate -> the
-    # rule asks for at least twice the splits; `load` repartitions to
-    # partitions_for(bytes)
+    # few big-ish files, well under cores*maxPartitionBytes -> the
+    # scan would run ~2-wide; the heal must repartition to cores
     df = spark.range(400_000).select(
         F.col("id"), F.sha2(F.col("id").cast("string"), 256).alias("pad")
     )
     sf_dir = str(tmp_path)
     df.coalesce(2).write.parquet(f"{sf_dir}/wide.parquet")
-    want = partitions_for(_dataset_bytes(f"{sf_dir}/wide.parquet"))
-    assert want >= 2
     healed = load(spark, sf_dir, "wide")
-    assert healed.rdd.getNumPartitions() == want
+    cores = spark.sparkContext.defaultParallelism
+    assert healed.rdd.getNumPartitions() == cores
     plan = healed._jdf.queryExecution().executedPlan().toString()
     assert "RoundRobinPartitioning" in plan, plan
     raw = load(spark, sf_dir, "wide", parallel="never")
     raw_plan = raw._jdf.queryExecution().executedPlan().toString()
     assert "RoundRobinPartitioning" not in raw_plan, raw_plan
-    # a single file under 8 MiB is one partition's worth: raw scan
-    df.limit(20_000).coalesce(1).write.parquet(f"{sf_dir}/small.parquet")
-    assert _dataset_bytes(f"{sf_dir}/small.parquet") < 8 * _MiB
+    # a scan whose estimated splits already reach half the cores is
+    # left as it is
+    nbytes = _dataset_bytes(f"{sf_dir}/wide.parquet")
+    with scoped_conf(
+        spark, {"spark.sql.files.maxPartitionBytes": str(max(1, nbytes // cores))}
+    ):
+        split = load(spark, sf_dir, "wide")
+        split_plan = split._jdf.queryExecution().executedPlan().toString()
+    assert "RoundRobinPartitioning" not in split_plan, split_plan
+    # a table under 256 KB is a broadcast-sized dimension: raw scan
+    df.limit(2_000).coalesce(1).write.parquet(f"{sf_dir}/small.parquet")
+    assert _dataset_bytes(f"{sf_dir}/small.parquet") < 256 << 10
     small = load(spark, sf_dir, "small")
     small_plan = small._jdf.queryExecution().executedPlan().toString()
     assert "RoundRobinPartitioning" not in small_plan, small_plan

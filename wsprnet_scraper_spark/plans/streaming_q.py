@@ -56,9 +56,8 @@ class _sized_stream_parts:
     at 16, 6.7 s at 8, identical output. State partitions should
     scale with STATE volume (guide §2.2: fewer, larger partitions —
     size for tens-of-MB-plus per partition), not with local core
-    count: `sources.tables.partitions_for(input_bytes)`, the engine's
-    one partition rule (8 MiB per partition, clamped to [1, 4096]) —
-    the same rule that sizes table scans. On a real cluster it sizes
+    count: `sources.tables.partitions_for(input_bytes)` (8 MiB per
+    partition, clamped to [1, 4096]). On a real cluster it sizes
     state tasks to data. Derived from file sizes only — no extra
     Spark job.
 

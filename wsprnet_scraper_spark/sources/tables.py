@@ -1,23 +1,31 @@
 """Loaders for the driver test tables (TPC-H-ish star schema + events).
 
 `load` is a parquet scan — Catalyst handles column pruning and
-predicate pushdown, so callers just read and filter/select — sized by
-the engine's one partition rule, `partitions_for`: one partition per
-8 MiB of input bytes, clamped to [1, 4096]. The same rule sizes
-stream state (`plans/streaming_q._sized_stream_parts`).
+predicate pushdown, so callers just read and filter/select — plus a
+scan-parallelism heal: the test tables are single-file, single-row-
+group parquet, and one row group can only ever be read by one task
+(byte-range splits assign whole row groups), so every map-side
+pipeline over them would otherwise run serially no matter how many
+cores the session has. When a table over 256 KB scans as fewer than
+half the session's parallelism (estimated splits * 2 <= cores), `load`
+inserts an explicit round-robin `repartition(cores)` — a few-MB
+shuffle that unlocks full fan-out for the expensive per-row work
+downstream (trig, string formatting, shingling). The guard compares
+the scan's split estimate with the core count, so it holds for a
+table of up to cores/2 * maxPartitionBytes and is a no-op above that;
+it exists for the reference's workload shape, where one scrape batch
+is one small file (wsprnet-scraper.sh:233 lands one curl body per
+cycle). The explicit partition count matters: AQE's
+coalescePartitions leaves REPARTITION_BY_NUM shuffles alone, while a
+bare `repartition()` would be coalesced right back to one partition.
 
-A single-row-group parquet file can only be read by one task
-(byte-range splits assign whole row groups), and the reference lands
-one small file per scrape cycle (wsprnet-scraper.sh:233). When the
-rule asks for at least twice the scan's estimated split count, `load`
-inserts an explicit round-robin `repartition(n)`. A table of 8 MiB or
-less gets one partition, which means no exchange at all; a 100 TB
-table already scans as far more splits than the rule's cap, so the
-repartition is a no-op there. The count comes from bytes, never from
-the core count, so the plan shape is the same on every machine. The
-explicit count matters: AQE's coalescePartitions leaves
-REPARTITION_BY_NUM shuffles alone, while a bare `repartition()` would
-be coalesced right back to one partition.
+The heal depends on the core count and on input size, so a plan over
+a table under 256 KB has a different shape (no exchange) than the
+same plan over a larger one. Stream state partitions are sized from
+bytes alone, by `partitions_for`; scans keep the heal until their
+traffic has been measured at 8 and 32 cores (ROADMAP direction 1),
+because the 8 MiB per-partition budget was calibrated on state size
+and would leave compute-bound scans under 8 MiB one task wide.
 
 `load_events` papers over a reader gap: events.parquet stores its
 `ts` column as parquet TIMESTAMP(NANOS), which Spark's vectorized
@@ -36,6 +44,12 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+
+# Tables at or under this size stay as-scanned: they are broadcast
+# dimensions (region/nation/supplier/part) where an extra exchange
+# buys nothing.
+_PARALLELIZE_MIN_BYTES = 256 << 10
 
 
 def _size_to_bytes(value, default: int = 128 << 20) -> int:
@@ -84,8 +98,8 @@ def _dataset_bytes(path: str) -> int | None:
 
 def partitions_for(nbytes: int | None) -> int | None:
     """Partition count for `nbytes` of input: one per 8 MiB, clamped
-    to [1, 4096]; None when the size is unknown. The only place the
-    engine turns a byte count into a partition count."""
+    to [1, 4096]; None when the size is unknown. Sizes stream state
+    (`plans/streaming_q._sized_stream_parts`)."""
     if nbytes is None:
         return None
     return max(1, min(4096, -(-nbytes // (8 << 20))))
@@ -96,34 +110,33 @@ def load(
 ) -> DataFrame:
     """Read one test table.
 
-    parallel: "auto" repartitions to `partitions_for(size)` when that
-    is at least twice the scan's estimated split count (see module
-    docstring); "always" fans out to the session parallelism instead;
-    "never" returns the raw scan (for plans that must observe the
-    on-disk layout). A path that cannot be statted locally always
-    returns the raw scan.
+    parallel: "auto" heals under-parallel scans of non-tiny local
+    files (see module docstring); "always" forces the heal regardless
+    of size (for compute-heavy plans over small tables, e.g. MinHash
+    shingling over `documents`); "never" returns the raw scan
+    (for plans that must observe the on-disk layout).
     """
     path = f"{sf_dir}/{name}.parquet"
     df = spark.read.parquet(path)
-    nbytes = None if parallel == "never" else _dataset_bytes(path)
+    if parallel == "never":
+        return df
+    nbytes = _dataset_bytes(path)
     if nbytes is None:
+        return df  # non-local path: trust the scan's own layout
+    if parallel == "auto" and nbytes < _PARALLELIZE_MIN_BYTES:
         return df
     # Estimate the scan's split count statically (size / maxPartitionBytes)
     # instead of probing df.rdd.getNumPartitions(): the probe forces
     # analysis + RDD conversion of the scan on the driver, which costs
-    # more than the repartition saves on sub-second queries.
+    # more than the heal saves on sub-second queries.
+    cores = spark.sparkContext.defaultParallelism
     max_split = _size_to_bytes(
         spark.conf.get("spark.sql.files.maxPartitionBytes", "134217728")
     )
     est_splits = max(1, -(-nbytes // max_split))
-    if parallel == "always":
-        # The "always" callers run compute-bound shingling over the
-        # `documents` table, which is under 1 MB: its bytes understate
-        # the work, so they take the core count.
-        parts = spark.sparkContext.defaultParallelism
-    else:
-        parts = partitions_for(nbytes)
-    return df.repartition(parts) if parts >= 2 * est_splits else df
+    if est_splits * 2 <= cores:
+        df = df.repartition(cores)
+    return df
 
 
 def load_events(
