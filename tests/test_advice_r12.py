@@ -1,10 +1,10 @@
 """Regression tests for the r11 ADVICE findings closed in r12.
 
-A1 similarity._codebook_store_path: a resolvable corpus dir WITHOUT
-   an embeddings table must return None (in-run training fallback),
-   not propagate corpus_fingerprint's FileNotFoundError — with
-   SPARK_GRAFT_SIG_STORE set, a training call that worked without
-   the env var crashed with it.
+A1 codebook store: a cache key naming a resolvable corpus dir
+   WITHOUT an embeddings table must train in-run with no store (the
+   fallback), not propagate corpus_fingerprint's FileNotFoundError —
+   with SPARK_GRAFT_SIG_STORE set, a training call that worked
+   without the env var crashed with it.
 A4 stores.materialized persistent tier: check-then-write was a
    TOCTOU; now builds land in a temp subdir and atomically rename
    into the fingerprinted path. A stale partial write (no _SUCCESS)
@@ -19,23 +19,32 @@ A3/A5 are structural (shared k/iters variables feeding the stream
 from __future__ import annotations
 
 import os
+import shutil
 
 import pytest
 from pyspark.sql import functions as F
 
 from wsprnet_scraper_spark.operators import stores
-from wsprnet_scraper_spark.operators.similarity import _codebook_store_path
 
 
-def test_codebook_store_path_missing_embeddings_returns_none(
-    tmp_path, monkeypatch
+def test_codebook_missing_embeddings_trains_without_store(
+    spark, tmp_path, monkeypatch
 ):
-    monkeypatch.setenv("SPARK_GRAFT_SIG_STORE", str(tmp_path / "store"))
+    from tests.conftest import SF_SMOKE
+    from wsprnet_scraper_spark.operators import similarity
+
+    store = tmp_path / "store"
+    monkeypatch.setenv("SPARK_GRAFT_SIG_STORE", str(store))
+    emb = spark.read.parquet(f"{SF_SMOKE}/embeddings.parquet")
+    want = similarity.train_kmeans_codebook(emb, 2, 1)
     corpus = tmp_path / "corpus"  # resolvable dir, no embeddings table
     corpus.mkdir()
-    assert _codebook_store_path(str(corpus), (8, 2)) is None
-    # and a non-existent dir still returns None (pre-existing contract)
-    assert _codebook_store_path(str(tmp_path / "nope"), (8, 2)) is None
+    # and a non-existent dir (pre-existing contract)
+    for key in (str(corpus), f"{corpus}:x", str(tmp_path / "nope")):
+        assert similarity.train_kmeans_codebook(emb, 2, 1, key) == want
+        df = similarity.train_kmeans_df(emb, 2, 1, key)
+        assert df.count() == 2
+    assert not store.exists()  # no store at all
 
 
 def _mk_corpus(tmp_path, name="c"):
@@ -231,9 +240,9 @@ def test_materialized_rename_collision_keeps_winner(
         stores.clear_store_cache()
 
 
-# The codebook persistent tier writes through the same stores._land
-# as materialized: a stale partial directory (no _SUCCESS) is
-# replaced, and a failing write leaves no wip directory behind.
+# Codebooks land through the same stores._land as every standing
+# relation: a stale partial directory (no _SUCCESS) is replaced, and
+# a failing write leaves no wip directory behind.
 
 
 def _codebook_inputs(spark, tmp_path, monkeypatch, name):
@@ -242,7 +251,7 @@ def _codebook_inputs(spark, tmp_path, monkeypatch, name):
 
     store = tmp_path / "store"
     monkeypatch.setenv(stores.ENV_VAR, str(store))
-    similarity.clear_codebooks()
+    stores.clear_store_cache()
     emb = spark.read.parquet(f"{SF_SMOKE}/embeddings.parquet")
     return similarity, store, emb, f"{SF_SMOKE}:{name}"
 
@@ -253,36 +262,32 @@ def test_codebook_store_replaces_stale_partial_writes(
     similarity, store, emb, ckey = _codebook_inputs(
         spark, tmp_path, monkeypatch, "t_cbk_stale"
     )
-    cases = [  # (store params, landed dirs, trainer)
-        (
-            ("kmeans_df", 2, 1),
-            [""],
-            lambda: similarity.train_kmeans_df(emb, 2, 1, ckey),
+    trainers = [
+        lambda: similarity.train_kmeans_df(emb, 2, 1, ckey),
+        lambda: similarity.train_twolevel_df(
+            emb, k_coarse=2, k_fine=2, iters=1, cache_key=ckey
         ),
-        (
-            ("twolevel_df", 2, 2, 1, 4),
-            ["coarse", "fine"],
-            lambda: similarity.train_twolevel_df(
-                emb, k_coarse=2, k_fine=2, iters=1, cache_key=ckey
-            ),
-        ),
+        lambda: similarity.train_kmeans_codebook(emb, 2, 1, ckey),
     ]
     try:
-        for params, parts, train in cases:
-            spath = _codebook_store_path(ckey, params)
-            for part in parts:  # a crashed session's partial write
-                os.makedirs(os.path.join(spath, part))
-                with open(os.path.join(spath, part, "junk"), "w") as f:
-                    f.write("partial")
+        for train in trainers:
+            before = set(os.listdir(store)) if store.exists() else set()
             train()
-            for part in parts:
-                d = os.path.join(spath, part)
-                assert os.path.isfile(os.path.join(d, "_SUCCESS"))
-                assert not os.path.exists(os.path.join(d, "junk"))
-            for root in (store, spath):
-                assert [p for p in os.listdir(root) if "wip" in p] == []
+            landed = sorted(set(os.listdir(store)) - before)
+            assert landed and all(p.startswith("cbk_") for p in landed)
+            # a crashed session's partial write holds every path
+            for p in landed:
+                shutil.rmtree(store / p)
+                (store / p).mkdir()
+                (store / p / "junk").write_text("partial")
+            stores.clear_store_cache()
+            train()
+            for p in landed:
+                assert (store / p / "_SUCCESS").is_file()
+                assert not (store / p / "junk").exists()
+            assert [p for p in os.listdir(store) if "wip" in p] == []
     finally:
-        similarity.clear_codebooks()
+        stores.clear_store_cache()
 
 
 def test_codebook_failed_write_leaves_no_wip_debris(
@@ -305,8 +310,6 @@ def test_codebook_failed_write_leaves_no_wip_debris(
     try:
         with pytest.raises(RuntimeError, match="synthetic write failure"):
             similarity.train_kmeans_df(emb, 2, 1, ckey)
-        assert [p for p in os.listdir(store) if "wip" in p] == []
-        spath = _codebook_store_path(ckey, ("kmeans_df", 2, 1))
-        assert not os.path.exists(spath)
+        assert os.listdir(store) == []  # no wip dir, no codebook path
     finally:
-        similarity.clear_codebooks()
+        stores.clear_store_cache()

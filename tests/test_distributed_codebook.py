@@ -22,7 +22,7 @@ import pytest
 from pyspark.sql import DataFrame
 
 from tests.conftest import SF_SMOKE
-from wsprnet_scraper_spark.operators import similarity
+from wsprnet_scraper_spark.operators import similarity, stores
 from wsprnet_scraper_spark.plans import QUERIES
 
 COLLECT_FREE = [
@@ -45,7 +45,7 @@ def test_builds_and_runs_with_collect_banned(spark, name, monkeypatch):
     driver boundary: build and execute the full query with collect
     raising. count()-based k rules and JVM-side localCheckpoint
     actions are allowed — they move no row data through py4j."""
-    similarity.clear_codebooks()
+    stores.clear_store_cache(drop_files=True)
 
     def _banned(self, *a, **kw):  # pragma: no cover - the assert IS the test
         raise AssertionError(f"{name}: DataFrame.collect called during build/run")
@@ -53,7 +53,7 @@ def test_builds_and_runs_with_collect_banned(spark, name, monkeypatch):
     monkeypatch.setattr(DataFrame, "collect", _banned)
     df = QUERIES[name](spark, SF_SMOKE)
     assert df.count() > 0
-    similarity.clear_codebooks()  # don't leak banned-build plans to other tests
+    stores.clear_store_cache(drop_files=True)  # don't leak banned-build plans
 
 
 def test_kmeans_df_bit_identical_to_collected(spark):

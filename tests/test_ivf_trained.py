@@ -76,9 +76,11 @@ def test_training_moves_centroids_and_keeps_ids(clustered):
         assert dominant == cid, (cid, c)
 
 
-def test_codebook_cache_fingerprints_content(tmp_path, spark):
+def test_codebook_cache_fingerprints_content(tmp_path, spark, monkeypatch):
     # same path + changed content must NOT serve the stale codebook
+    import os
     import shutil
+    import time
 
     p = tmp_path / "corpus"
     p.mkdir()
@@ -86,10 +88,16 @@ def test_codebook_cache_fingerprints_content(tmp_path, spark):
     shutil.copy(src, p / "embeddings.parquet")
     emb = spark.read.parquet(str(p / "embeddings.parquet"))
     first = similarity.train_kmeans_codebook(emb, 8, 1, cache_key=str(p))
-    assert similarity.train_kmeans_codebook(emb, 8, 1, cache_key=str(p)) is first
-    import os
-    import time
 
+    def poisoned(*a, **k):
+        raise AssertionError("retrained")
+
+    monkeypatch.setattr(similarity, "_argmax_cell", poisoned)
+    # served, not retrained
+    assert similarity.train_kmeans_codebook(emb, 8, 1, cache_key=str(p)) == first
     os.utime(p / "embeddings.parquet", (time.time() + 10, time.time() + 10))
-    again = similarity.train_kmeans_codebook(emb, 8, 1, cache_key=str(p))
-    assert again is not first  # rebuilt, not served stale
+    with pytest.raises(AssertionError, match="retrained"):
+        similarity.train_kmeans_codebook(emb, 8, 1, cache_key=str(p))
+    monkeypatch.undo()
+    # rebuilt, not served stale
+    assert similarity.train_kmeans_codebook(emb, 8, 1, cache_key=str(p)) == first

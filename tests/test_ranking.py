@@ -25,14 +25,24 @@ def test_ntile_fewer_rows_than_buckets(spark):
 
 
 def test_global_rank_equals_naive_window(spark):
-    df = spark.range(997).select(
+    small = spark.range(997).select(
         (F.col("id") * 37 % 1000).alias("v"), F.col("id").alias("k")
     )
-    ranked = ranking.with_global_rank(df, ["v", "k"], cells=7)
-    naive = df.withColumn(
-        "rn", F.row_number().over(Window.orderBy("v", "k"))
+    # 12.5k rows per input partition, far more than the ~100 keys per
+    # cell a range sampler takes, plus a payload column outside the
+    # order: two range exchanges would sample different bounds here
+    big = spark.range(0, 50_000, 1, 4).select(
+        (F.col("id") * 7919 % 50_000).alias("v"),
+        F.col("id").alias("k"),
+        (F.col("id") % 7).alias("p"),
     )
-    got = {(r.v, r.k): r.grn for r in ranked.collect()}
-    want = {(r.v, r.k): r.rn for r in naive.collect()}
-    assert got == want
-    assert all(r.grn_total == 997 for r in ranked.collect())
+    for df, cells in ((small, 7), (big, 4)):
+        ranked = ranking.with_global_rank(df, ["v", "k"], cells=cells)
+        naive = df.withColumn(
+            "rn", F.row_number().over(Window.orderBy("v", "k"))
+        )
+        rows = ranked.collect()
+        got = {(r.v, r.k): r.grn for r in rows}
+        want = {(r.v, r.k): r.rn for r in naive.collect()}
+        assert got == want
+        assert {r.grn_total for r in rows} == {len(want)}

@@ -132,32 +132,72 @@ def test_minhash_incremental_store_parity(spark, monkeypatch):
 
 
 def test_codebook_store_serves_fresh_session(spark, tmp_path, monkeypatch):
-    # train -> persist -> drop the in-memory tier (a fresh session's
-    # state) -> the trainer must serve the SAME codebooks from the
+    # train -> persist -> drop the in-memory handles (a fresh session's
+    # state) -> the trainers must serve the SAME codebooks from the
     # standing parquet without retraining (verified structurally: the
-    # store dirs exist and a poisoned trainer is never reached).
-    monkeypatch.setenv(stores.ENV_VAR, str(tmp_path / "store"))
+    # store dirs exist and a poisoned training step is never reached).
+    store = tmp_path / "store"
+    monkeypatch.setenv(stores.ENV_VAR, str(store))
     stores.clear_store_cache()
     emb = spark.read.parquet(f"{SF_SMOKE}/embeddings.parquet")
     ckey = f"{SF_SMOKE}:t_cbk"
-    coarse1, fine1 = similarity.train_twolevel_df(
-        emb, k_coarse=2, k_fine=2, iters=1, cache_key=ckey
-    )
-    c1, f1 = _rows(coarse1), _rows(fine1)
-    spath = similarity._codebook_store_path(
-        ckey, ("twolevel_df", 2, 2, 1, 4)
-    )
-    assert os.path.isfile(os.path.join(spath, "coarse", "_SUCCESS"))
-    similarity.clear_codebooks()
-    # poison the underlying trainer: a store hit must not retrain
-    monkeypatch.setattr(
-        similarity, "train_kmeans_df",
-        lambda *a, **k: (_ for _ in ()).throw(AssertionError("retrained")),
-    )
-    coarse2, fine2 = similarity.train_twolevel_df(
-        emb, k_coarse=2, k_fine=2, iters=1, cache_key=ckey
-    )
-    assert _rows(coarse2) == c1 and _rows(fine2) == f1
+
+    def train():
+        coarse, fine = similarity.train_twolevel_df(
+            emb, k_coarse=2, k_fine=2, iters=1, cache_key=ckey
+        )
+        book = similarity.train_kmeans_codebook(emb, 2, 1, ckey)
+        return _rows(coarse), _rows(fine), book
+
+    first = train()
+    assert len([p for p in os.listdir(store) if p.startswith("cbk_")]) == 3
+    stores.clear_store_cache()
+    # poison both trainers' assignment steps: a store hit must not
+    # retrain
+    def poisoned(*a, **k):
+        raise AssertionError("retrained")
+
+    monkeypatch.setattr(similarity, "assign_cells_df", poisoned)
+    monkeypatch.setattr(similarity, "_argmax_cell", poisoned)
+    assert train() == first
+    stores.clear_store_cache()
+
+
+def test_codebook_rebuilt_when_corpus_rewritten_under_suffixed_key(
+    spark, tmp_path, monkeypatch
+):
+    # A `:variant` suffix on the cache key must not hide the corpus
+    # from the fingerprint: rewriting the embeddings parquet within
+    # the same application rebuilds both trainers' codebooks.
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    monkeypatch.delenv(stores.ENV_VAR, raising=False)
+    corpus = tmp_path / "corpus"
+    corpus.mkdir()
+    path = corpus / "embeddings.parquet"
+    t = pq.read_table(f"{SF_SMOKE}/embeddings.parquet")
+    pq.write_table(t, str(path))
+    ckey = f"{corpus}:x"
+
+    def train():
+        emb = spark.read.parquet(str(path))
+        return (
+            _rows(similarity.train_kmeans_df(emb, 4, 1, ckey)),
+            similarity.train_kmeans_codebook(emb, 4, 1, ckey),
+            _rows(similarity.train_kmeans_df(emb, 4, 1)),
+            similarity.train_kmeans_codebook(emb, 4, 1),
+        )
+
+    df1, list1, df1_fresh, list1_fresh = train()
+    assert (df1, list1) == (df1_fresh, list1_fresh)
+    # same rows, embeddings reversed across vec_ids: new init vectors
+    field = t.schema.field("embedding")
+    rev = pa.array(t.column("embedding").to_pylist()[::-1], field.type)
+    pq.write_table(t.set_column(1, field.name, rev), str(path))
+    df2, list2, df2_fresh, list2_fresh = train()
+    assert (df2, list2) == (df2_fresh, list2_fresh)
+    assert df2 != df1 and list2 != list1
     stores.clear_store_cache()
 
 

@@ -279,3 +279,27 @@ def test_rate_limited_stream_runs_bounded_microbatches(spark):
         .collect()
     }
     assert got == want
+
+
+def test_ingest_observe_metrics_surface_in_progress(spark, tmp_path):
+    """The observe() node on the ingest stream must report per-batch
+    rows and the spot-id span through StreamingQueryProgress."""
+    from tests.conftest import SF_SMOKE
+    from wsprnet_scraper_spark.plans.synth import synth_spots
+
+    spots = synth_spots(spark, SF_SMOKE)
+    landing, sink, ckpt = (str(tmp_path / d) for d in ("land", "sink", "ckpt"))
+    spots.coalesce(2).write.mode("append").json(landing)
+    q = start_ingest(spark, landing, sink, ckpt, available_now=True)
+    q.awaitTermination()
+    n = spots.count()
+    metrics = None
+    for p in q.recentProgress:
+        om = (p if isinstance(p, dict) else json.loads(p.json)).get(
+            "observedMetrics", {}
+        )
+        if "ingest" in om:
+            metrics = om["ingest"]
+    assert metrics is not None, "no observed metrics in progress"
+    assert metrics["rows"] == n
+    assert metrics["min_spotnum"] <= metrics["max_spotnum"]

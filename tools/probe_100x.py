@@ -2,7 +2,8 @@
 """100× scaling evidence (≈ sf10): compose the 10× synthesizer twice
 and time the training-data operator families against it.
 
-Usage: python tools/probe_100x.py [--base /root/testdata/sf0.1]
+Usage: python tools/probe_100x.py --json-out tools/probe_results_rN_100x.json
+       [--base DIR]
 
 The corpus is `scaling_probe.synth_10x` applied to its own output —
 100 id-offset, content-decorrelated copies of the fact tables under
@@ -261,7 +262,12 @@ def main() -> None:
     ap.add_argument("--base", default="/root/testdata/sf0.1")
     ap.add_argument("--mid", default="/tmp/wspr_sf1_probe_r5")
     ap.add_argument("--out", default="/tmp/wspr_sf10_probe")
-    ap.add_argument("--json-out", default="tools/probe_results_r13_100x.json")
+    ap.add_argument(
+        "--json-out",
+        required=True,
+        help="results file, e.g. tools/probe_results_rN_100x.json; "
+        "an existing file is resumed",
+    )
     ap.add_argument(
         "--only",
         default=None,
@@ -494,12 +500,12 @@ def main() -> None:
     # tiers dropped, standing parquet intact). warm is what a
     # production ingest pays per batch; cold - warm is the
     # once-per-corpus standing-build share.
-    from wsprnet_scraper_spark.operators import similarity as op_sim
     from wsprnet_scraper_spark.plans import analytics as pl_analytics
 
-    def drop_memory_tiers():
-        stores.clear_store_cache()  # handles only; files survive
-        op_sim.clear_codebooks()
+    def drop_memory_tiers(drop_files: bool = False):
+        # handles only unless drop_files, which also drops the plans
+        # whose scans the deleted store files back
+        stores.clear_store_cache(drop_files=drop_files)
         pl_analytics._FRAME_STORE.clear()
 
     for name in SIGSTORE_SPLIT:
@@ -509,13 +515,13 @@ def main() -> None:
         run(name, args.base)  # plan-shape warm-up, untimed
         store_dir = os.environ["SPARK_GRAFT_SIG_STORE"]
         shutil.rmtree(store_dir, ignore_errors=True)
-        drop_memory_tiers()
+        drop_memory_tiers(drop_files=True)
         cold = run(name, str(out))
 
         def warm_run() -> float:
             # fresh-session shape for EVERY warm run (r11 review
             # finding: dropping tiers once before a min-of-2 lets the
-            # second run serve checkpointed codebooks from memory and
+            # second run serve open handles from memory and
             # understate the real fresh-session cost)
             drop_memory_tiers()
             return run(name, str(out))

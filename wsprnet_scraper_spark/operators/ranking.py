@@ -6,9 +6,11 @@ key is semantically a total order — Spark executes it as ONE task
 the plan that dies at 100 TB. `with_global_rank` computes the exact
 global row number with bounded parallelism instead:
 
-1. `repartitionByRange` on the order columns — non-overlapping,
-   ordered cells (the explicit partition count keeps AQE from
-   re-planning it); the range sample pass is one extra parallel scan;
+1. cell bounds from ONE deterministic sample: the keys of lowest
+   hash (a bottom-k sketch — the same rows whatever the input's
+   partitioning or row order), collapsed into `cells - 1` sorted
+   bounds; a row's cell is the number of bounds below its key, so
+   cells are ordered, non-overlapping key ranges;
 2. per-cell `row_number` — a partitioned window, fully parallel;
 3. a per-cell count summary (`cells` rows, not billions) carries a
    running-sum offset and the grand total; its window is deliberately
@@ -16,6 +18,11 @@ global row number with bounded parallelism instead:
    (plans/audit.py enforces exactly this invariant);
 4. broadcast the offsets back: global rank = cell offset + local
    row number.
+
+Steps 2 and 3 both read the cell from the same bounds, so per-cell
+counts always equal per-cell row numbers. (Two `repartitionByRange`
+branches would each sample their own bounds, and once an input
+partition outgrows the range sampler the two disagree.)
 
 Every rank-derived statistic then becomes exact integer arithmetic
 over (rank, total): percent_rank = (rank-1)/(n-1), cume_dist =
@@ -27,6 +34,10 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+
+# sampled keys per cell, as Spark's range exchange samples per
+# partition (spark.sql.execution.rangeExchange.sampleSizePerPartition)
+_SAMPLE_PER_CELL = 100
 
 
 def with_global_rank(
@@ -46,12 +57,32 @@ def with_global_rank(
     """
     if cells is None:
         cells = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions", "32"))
-    ranged = df.repartitionByRange(cells, *order_cols).withColumn(
-        "_cell", F.spark_partition_id()
+    key = F.struct(*order_cols)
+    sample = (
+        df.select(key.alias("_k"))
+        .orderBy(F.xxhash64("_k"), "_k")
+        .limit(_SAMPLE_PER_CELL * cells)
+        .agg(F.sort_array(F.collect_list("_k")).alias("_s"))
+    )
+    n = F.size("_s")
+    bounds = sample.select(
+        F.array(
+            *[
+                F.try_element_at("_s", (n * j / cells).cast("int") + 1)
+                for j in range(1, cells)
+            ]
+        ).alias("_b")
+    )
+    celled = (
+        df.crossJoin(F.broadcast(bounds))
+        .withColumn("_cell", F.size(F.filter("_b", lambda b: b < key)))
+        .drop("_b")
     )
     wl = Window.partitionBy("_cell").orderBy(*order_cols)
-    local = ranged.withColumn("_lrn", F.row_number().over(wl))
-    counts = ranged.groupBy("_cell").agg(F.count(F.lit(1)).alias("_cnt"))
+    local = celled.repartitionByRange(cells, "_cell").withColumn(
+        "_lrn", F.row_number().over(wl)
+    )
+    counts = celled.groupBy("_cell").agg(F.count(F.lit(1)).alias("_cnt"))
     # summary frame: `cells` rows — single partition by design
     # (input is the per-cell Aggregate; audited in plans/audit.py)
     ws = Window.orderBy("_cell")

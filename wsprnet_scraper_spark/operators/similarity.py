@@ -417,77 +417,39 @@ def hyperplane_buckets(
     return pre.select("vec_id", bucket.cast("long").alias("bucket"))
 
 
-# Built codebooks by caller-supplied key (e.g. the corpus path): IVF
-# separates index build (collect + norm the centroids, once) from
-# serving (pure projection per query). Without the cache every query
-# construction would re-run the tiny collect job. Keys include a
-# content fingerprint of the corpus file so a regenerated parquet at
-# the same path can't serve a stale codebook.
-_CODEBOOKS: dict = {}
-
-
-def clear_codebooks() -> None:
-    """Drop all cached codebooks (mirror of plans.clear_plan_cache)."""
-    _CODEBOOKS.clear()
-
-
-def _path_fingerprint(cache_key: str):
-    """Cheap content fingerprint for a corpus path used as cache key:
-    (mtime_ns, size) of the embeddings parquet (or the file itself).
-    A `#fragment` suffix (used to derive distinct sub-index keys from
-    one corpus path, e.g. PQ subspaces) is ignored for the stat.
-    Non-path keys fingerprint to None and rely on the key alone."""
-    import os
-
-    cache_key = str(cache_key).split("#", 1)[0]
-    for p in (os.path.join(str(cache_key), "embeddings.parquet"), str(cache_key)):
-        try:
-            st = os.stat(p)
-            return (st.st_mtime_ns, st.st_size)
-        except OSError:
-            continue
-    return None
-
-
-def _codebook_store_path(cache_key, params: tuple):
-    """Persistent-tier codebook location (r10 verdict task #6): when
-    SPARK_GRAFT_SIG_STORE is set and the cache key names a real
-    corpus path, trained codebooks round-trip through
-    <store>/cbk_<keyhash>_<corpus-fingerprint>/ so a FRESH SESSION
-    serves from the standing index instead of retraining — the
-    in-memory `_CODEBOOKS` tier only ever amortized within one
-    application. Returns None (store disabled / non-path key)
-    otherwise. The fingerprint is over the embeddings parquet, so a
-    rewritten corpus keys out stale codebooks; `params` must encode
-    k/iters/etc. The store is a cache: parquet round-trips the exact
-    (cid, cv, cn2) values, so serving and dedup plans are
-    bit-identical either way (pinned by tests/test_sig_store.py).
-    Trained codebooks land there through stores._land (temp dir, then
-    an atomic rename), like every other standing relation."""
+def _stored_codebook(emb: DataFrame, cache_key, params: tuple, build):
+    """Serve a trained codebook relation (cid, cv, cn2) — or the fine
+    book (ccell, fid, cv, cn2) — from the standing-relation store
+    (operators/stores.py): built once per corpus version, re-opened by
+    every later plan in the application and, with
+    SPARK_GRAFT_SIG_STORE set, by later sessions. `cache_key` names
+    the corpus dir, optionally suffixed `:<variant>` and
+    `#<sub-index>`; the store kind hashes the whole key with `params`
+    (trainer and k/iters/...), so two configurations never share a
+    path, and the store's fingerprint of the corpus's embeddings
+    parquet keys out a rewritten corpus whatever the suffix. With no
+    key, or no embeddings table under the dir (custom fixtures train
+    on in-memory frames), it is a plain `build()`. Parquet
+    round-trips the exact doubles, so a served codebook is
+    bit-identical to a trained one."""
     import hashlib
     import os
 
-    store = os.environ.get("SPARK_GRAFT_SIG_STORE")
-    if store is None or cache_key is None:
-        return None
-    base = str(cache_key).split("#", 1)[0]
-    corpus_dir = base if os.path.isdir(base) else base.rsplit(":", 1)[0]
-    if not os.path.isdir(corpus_dir):
-        return None
-    from .stores import corpus_fingerprint
+    if cache_key is None:
+        return build()
+    corpus = str(cache_key).split("#", 1)[0]
+    while ":" in corpus and not os.path.isdir(corpus):
+        corpus = corpus.rsplit(":", 1)[0]
+    if not os.path.exists(os.path.join(corpus, "embeddings.parquet")):
+        return build()
+    from . import stores
 
-    try:
-        fp = corpus_fingerprint(corpus_dir, ("embeddings",))
-    except FileNotFoundError:
-        # ADVICE r11: a resolvable dir without an embeddings table
-        # (custom fixtures train on in-memory frames) must mean "no
-        # persistent tier", not a crash — the trainer falls back to
-        # in-run training exactly as it does with the env var unset.
-        return None
     h = hashlib.sha1(
-        "|".join([str(cache_key)] + [str(p) for p in params]).encode()
+        "|".join(map(str, (cache_key, *params))).encode()
     ).hexdigest()[:12]
-    return os.path.join(store, f"cbk_{h}_{fp}")
+    return stores.materialized(
+        emb.sparkSession, corpus, f"cbk_{h}", build, tables=("embeddings",)
+    )
 
 
 def _lit_double_array(xs: list[float]):
@@ -551,56 +513,62 @@ def train_kmeans_codebook(
     same IEEE division in both engines; assignment cosines are
     fixed-order left folds over those exact values. Empty cells keep
     their previous centroid.
+
+    The trained rows live in the standing-relation store under
+    `cache_key` (`_stored_codebook`); each call collects the k rows.
     """
-    ck = None
-    if cache_key is not None:
-        ck = ("kmeans", cache_key, _path_fingerprint(cache_key), num_centroids, iters)
-        if ck in _CODEBOOKS:
-            return _CODEBOOKS[ck]
 
-    vq = F.transform(
-        _as_double(F.col("embedding")),
-        lambda x: F.floor(x * 1000).cast("long").cast("double"),
-    )
-    base = emb.select("vec_id", vq.alias("vq")).withColumn("qn2", _norm2(F.col("vq")))
-    init = base.filter(F.col("vec_id") < num_centroids).select("vec_id", "vq").collect()
-    cents_by_id = {
-        int(r["vec_id"]): [float(x) for x in r["vq"]]
-        for r in sorted(init, key=lambda r: r["vec_id"])
-    }
-    dim = len(next(iter(cents_by_id.values())))
-
-    def as_rows(d):
-        return [(cid, d[cid], _left_fold_n2(d[cid])) for cid in sorted(d)]
-
-    for _ in range(iters):
-        ranked = _argmax_cell(F.col("vq"), F.col("qn2"), as_rows(cents_by_id))
-        cell = (-F.element_at(ranked, 1)["negc"]).cast("long")
-        sums = (
-            base.select(cell.alias("cell"), "vq")
-            .groupBy("cell")
-            .agg(
-                F.count(F.lit(1)).alias("n"),
-                *[
-                    F.sum(F.element_at(F.col("vq"), i + 1)).alias(f"s{i}")
-                    for i in range(dim)
-                ],
-            )
+    def build():
+        vq = F.transform(
+            _as_double(F.col("embedding")),
+            lambda x: F.floor(x * 1000).cast("long").cast("double"),
         )
-        got = {int(r["cell"]): r for r in sums.collect()}
+        base = emb.select("vec_id", vq.alias("vq")).withColumn(
+            "qn2", _norm2(F.col("vq"))
+        )
+        init = (
+            base.filter(F.col("vec_id") < num_centroids)
+            .select("vec_id", "vq")
+            .collect()
+        )
         cents_by_id = {
-            cid: (
-                [float(got[cid][f"s{i}"]) / got[cid]["n"] for i in range(dim)]
-                if cid in got
-                else c
-            )
-            for cid, c in cents_by_id.items()
+            int(r["vec_id"]): [float(x) for x in r["vq"]]
+            for r in sorted(init, key=lambda r: r["vec_id"])
         }
+        dim = len(next(iter(cents_by_id.values())))
 
-    out = as_rows(cents_by_id)
-    if ck:
-        _CODEBOOKS[ck] = out
-    return out
+        def as_rows(d):
+            return [(cid, d[cid], _left_fold_n2(d[cid])) for cid in sorted(d)]
+
+        for _ in range(iters):
+            ranked = _argmax_cell(F.col("vq"), F.col("qn2"), as_rows(cents_by_id))
+            cell = (-F.element_at(ranked, 1)["negc"]).cast("long")
+            sums = (
+                base.select(cell.alias("cell"), "vq")
+                .groupBy("cell")
+                .agg(
+                    F.count(F.lit(1)).alias("n"),
+                    *[
+                        F.sum(F.element_at(F.col("vq"), i + 1)).alias(f"s{i}")
+                        for i in range(dim)
+                    ],
+                )
+            )
+            got = {int(r["cell"]): r for r in sums.collect()}
+            cents_by_id = {
+                cid: (
+                    [float(got[cid][f"s{i}"]) / got[cid]["n"] for i in range(dim)]
+                    if cid in got
+                    else c
+                )
+                for cid, c in cents_by_id.items()
+            }
+        return emb.sparkSession.createDataFrame(
+            as_rows(cents_by_id), "cid long, cv array<double>, cn2 double"
+        )
+
+    book = _stored_codebook(emb, cache_key, ("kmeans", num_centroids, iters), build)
+    return sorted((r["cid"], list(r["cv"]), r["cn2"]) for r in book.collect())
 
 
 def assign_cells_pandas(
@@ -779,80 +747,57 @@ def train_kmeans_df(
     checkpoint on a cluster) — otherwise iteration i's assignment
     would replay iterations 1..i-1's scans.
 
-    Cached per (application, cache_key, corpus fingerprint, k, iters)
-    like the collected trainer, so index build is once per corpus.
+    Served from the standing-relation store under `cache_key`
+    (`_stored_codebook`), so index build is once per corpus version.
     """
-    ck = None
-    if cache_key is not None:
-        ck = (
-            "kmeans_df",
-            emb.sparkSession.sparkContext.applicationId,
-            cache_key,
-            _path_fingerprint(cache_key),
-            num_centroids,
-            iters,
-        )
-        if ck in _CODEBOOKS:
-            return _CODEBOOKS[ck]
 
-    import os
-
-    spath = _codebook_store_path(cache_key, ("kmeans_df", num_centroids, iters))
-    if spath is not None and os.path.isfile(os.path.join(spath, "_SUCCESS")):
-        cents = emb.sparkSession.read.parquet(spath).localCheckpoint(eager=True)
-        if ck:
-            _CODEBOOKS[ck] = cents
-        return cents
-
-    vq = F.transform(
-        _as_double(F.col("embedding")),
-        lambda x: F.floor(x * 1000).cast("long").cast("double"),
-    )
-    base = emb.select("vec_id", vq.alias("vq")).withColumn(
-        "qn2", _norm2(F.col("vq"))
-    )
-    cents = (
-        base.filter(F.col("vec_id") < num_centroids)
-        .select(
-            F.col("vec_id").alias("cid"),
-            F.col("vq").alias("cv"),
-            F.col("qn2").alias("cn2"),
+    def build():
+        vq = F.transform(
+            _as_double(F.col("embedding")),
+            lambda x: F.floor(x * 1000).cast("long").cast("double"),
         )
-        .localCheckpoint(eager=True)
-    )
-
-    for _ in range(iters):
-        assigned = assign_cells_df(
-            base, cents, vec_col="vq", n2_col="qn2", carry=("vq",)
-        )
-        comp = (
-            assigned.select("cell", F.posexplode("vq").alias("pos", "x"))
-            .groupBy("cell", "pos")
-            .agg((F.sum("x") / F.count(F.lit(1))).alias("comp"))
-        )
-        new_cv = comp.groupBy("cell").agg(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("pos", "comp"))),
-                lambda s: s["comp"],
-            ).alias("new_cv")
+        base = emb.select("vec_id", vq.alias("vq")).withColumn(
+            "qn2", _norm2(F.col("vq"))
         )
         cents = (
-            cents.join(new_cv, cents["cid"] == new_cv["cell"], "left")
+            base.filter(F.col("vec_id") < num_centroids)
             .select(
-                "cid",
-                F.coalesce(F.col("new_cv"), F.col("cv")).alias("cv"),
+                F.col("vec_id").alias("cid"),
+                F.col("vq").alias("cv"),
+                F.col("qn2").alias("cn2"),
             )
-            .withColumn("cn2", _norm2(F.col("cv")))
             .localCheckpoint(eager=True)
         )
 
-    if spath is not None:
-        from .stores import _land
+        for _ in range(iters):
+            assigned = assign_cells_df(
+                base, cents, vec_col="vq", n2_col="qn2", carry=("vq",)
+            )
+            comp = (
+                assigned.select("cell", F.posexplode("vq").alias("pos", "x"))
+                .groupBy("cell", "pos")
+                .agg((F.sum("x") / F.count(F.lit(1))).alias("comp"))
+            )
+            new_cv = comp.groupBy("cell").agg(
+                F.transform(
+                    F.array_sort(F.collect_list(F.struct("pos", "comp"))),
+                    lambda s: s["comp"],
+                ).alias("new_cv")
+            )
+            cents = (
+                cents.join(new_cv, cents["cid"] == new_cv["cell"], "left")
+                .select(
+                    "cid",
+                    F.coalesce(F.col("new_cv"), F.col("cv")).alias("cv"),
+                )
+                .withColumn("cn2", _norm2(F.col("cv")))
+                .localCheckpoint(eager=True)
+            )
+        return cents
 
-        _land(os.path.dirname(spath), "cbk", spath, lambda: cents)
-    if ck:
-        _CODEBOOKS[ck] = cents
-    return cents
+    return _stored_codebook(
+        emb, cache_key, ("kmeans_df", num_centroids, iters), build
+    )
 
 
 def semantic_dedup(
@@ -1006,8 +951,9 @@ def ivf_topk(
     `trained=True` uses a `train_kmeans_codebook` codebook (the real
     IVF index build — better-balanced cells, higher recall at the
     same nprobe); `trained=False` keeps the deterministic
-    first-`num_centroids`-vectors stand-in. Either way the codebook is
-    built once (cached under `cache_key` + corpus fingerprint) and
+    first-`num_centroids`-vectors stand-in (one k-row collect). The
+    trained codebook is built once per corpus (the standing-relation
+    store, under `cache_key`). Either way the codebook is
     inlined as literal arrays, so cell assignment is a pure projection
     — ZERO shuffle over the corpus, the same property as
     `hyperplane_buckets`. At 100 TB the corpus never moves:
@@ -1026,23 +972,13 @@ def ivf_topk(
     if trained:
         cents = train_kmeans_codebook(emb, num_centroids, iters, cache_key)
     else:
-        ck = None
-        cents = None
-        if cache_key is not None:
-            ck = (cache_key, _path_fingerprint(cache_key), num_centroids)
-            cents = _CODEBOOKS.get(ck)
-        if cents is None:
-            rows = (
-                emb.filter(F.col("vec_id") < num_centroids)
-                .select("vec_id", "embedding")
-                .collect()
-            )
-            by_id = {
-                int(r["vec_id"]): [float(x) for x in r["embedding"]] for r in rows
-            }
-            cents = [(cid, c, _left_fold_n2(c)) for cid, c in sorted(by_id.items())]
-            if ck:
-                _CODEBOOKS[ck] = cents
+        rows = (
+            emb.filter(F.col("vec_id") < num_centroids)
+            .select("vec_id", "embedding")
+            .collect()
+        )
+        by_id = {int(r["vec_id"]): [float(x) for x in r["embedding"]] for r in rows}
+        cents = [(cid, c, _left_fold_n2(c)) for cid, c in sorted(by_id.items())]
 
     ranked = _argmax_cell(F.col("v"), F.col("n2"), cents)
     cell = (-F.element_at(ranked, 1)["negc"]).cast("long")
@@ -1251,7 +1187,7 @@ def pq_topk(
     the asymmetric-distance (ADC) form of Jégou et al.'s PQ.
 
     100 TB shape: codebooks are tiny (m × num_centroids rows) and
-    built once per corpus (driver cache, content-fingerprinted);
+    built once per corpus (the standing-relation store);
     encoding is a pure projection over inlined literal codebooks —
     ZERO shuffle over the corpus, like hyperplane_buckets/ivf_topk —
     and scoring joins the codes to the broadcast codebooks and the
@@ -1364,47 +1300,32 @@ def train_twolevel_df(
     (cell not subdivided — equivalent to flat IVF there), which
     callers must treat as a valid label, never a miss.
     """
-    ck = None
-    if cache_key is not None:
-        ck = (
-            "twolevel_df",
-            emb.sparkSession.sparkContext.applicationId,
-            cache_key,
-            _path_fingerprint(cache_key),
-            k_coarse,
-            k_fine,
-            iters,
-        )
-        if ck in _CODEBOOKS:
-            return _CODEBOOKS[ck]
-
-    import os
-
-    spath = _codebook_store_path(
-        cache_key, ("twolevel_df", k_coarse, k_fine, iters, init_pool)
-    )
-    if (
-        spath is not None
-        and os.path.isfile(os.path.join(spath, "coarse", "_SUCCESS"))
-        and os.path.isfile(os.path.join(spath, "fine", "_SUCCESS"))
-    ):
-        rd = emb.sparkSession.read
-        out = (
-            rd.parquet(os.path.join(spath, "coarse")).localCheckpoint(eager=True),
-            rd.parquet(os.path.join(spath, "fine")).localCheckpoint(eager=True),
-        )
-        if ck:
-            _CODEBOOKS[ck] = out
-        return out
-
-    from pyspark.sql import Window
-
     coarse = train_kmeans_df(
         emb,
         k_coarse,
         iters,
         f"{cache_key}#coarse{k_coarse}" if cache_key is not None else None,
     )
+    fine = _stored_codebook(
+        emb,
+        cache_key,
+        ("twolevel_fine", k_coarse, k_fine, iters, init_pool),
+        lambda: _train_fine(emb, coarse, k_coarse, k_fine, iters, init_pool),
+    )
+    return coarse, fine
+
+
+def _train_fine(
+    emb: DataFrame,
+    coarse: DataFrame,
+    k_coarse: int,
+    k_fine: int,
+    iters: int,
+    init_pool: int,
+) -> DataFrame:
+    """`train_twolevel_df`'s fine book (ccell, fid, cv, cn2), trained
+    for every coarse cell at once against the given coarse codebook."""
+    from pyspark.sql import Window
 
     vq = F.transform(
         _as_double(F.col("embedding")),
@@ -1490,15 +1411,7 @@ def train_twolevel_df(
         )
 
     routed.unpersist()
-    out = (coarse, fine)
-    if spath is not None:
-        from .stores import _land
-
-        _land(spath, "coarse", os.path.join(spath, "coarse"), lambda: coarse)
-        _land(spath, "fine", os.path.join(spath, "fine"), lambda: fine)
-    if ck:
-        _CODEBOOKS[ck] = out
-    return out
+    return fine
 
 
 def _twolevel_pairs_gemm(base: DataFrame, threshold: float) -> DataFrame:

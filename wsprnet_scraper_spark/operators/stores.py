@@ -2,7 +2,9 @@
 relation that is built once per corpus version and scanned by every
 later run is kept. Its users are the graph edge relations
 (plans/graph_q.py), MinHash signature stores, standing-corpus cluster
-labels and trained ANN codebooks. A real pipeline pays each of these
+labels and every trained ANN/SemDeDup codebook
+(operators/similarity._stored_codebook, keyed on the embeddings
+table; both tiers apply to them). A real pipeline pays each of these
 once per corpus and amortizes it across every query and ingest batch;
 rebuilding them per run was the bulk of the incremental and stream
 entries' cost (10.3 s of strm_minhash_dedup's 18.7 s at the 100x
@@ -21,6 +23,10 @@ through `_land` (write into a temp dir, then one atomic rename):
   under <dir>/<kind>_<corpus-fingerprint>/, so a fresh session reuses
   it instead of re-paying the derivation. The fingerprint (file stats
   of the named source tables) keys out stale data.
+
+An open handle is re-checked against the fingerprint on every call,
+so a corpus rewritten within one application is rebuilt, not served
+from the handle.
 
 The store is a CACHE, never a semantic change: a stored relation must
 be bit-identical to `build()`'s output (parquet round-trips the exact
@@ -181,31 +187,33 @@ def _entry(spark, sf_dir: str, kind: str, build, tables):
         _STORE_CACHE.clear()  # handles of stopped applications
         bucket = _STORE_CACHE.setdefault(app, {})
     key = (kind, sf_dir.rstrip("/"))
+    store = os.environ.get(ENV_VAR)
+    persistent = bool(store)
+    root = store if store else _scratch_root(app)
+    try:
+        fp = corpus_fingerprint(sf_dir, tables)
+    except FileNotFoundError:
+        # ADVICE r12: a build() whose source never touches the
+        # named table on disk (synthesized corpus) has nothing to
+        # fingerprint. In the persistent tier that must still
+        # fail — a constant key would serve stale state across
+        # corpus rewrites — but the scratch tier is
+        # process-private, so fall back to an unkeyed one-shot
+        # build (the pre-r12 behavior for exactly this case).
+        if persistent:
+            raise
+        fp = None
+    path = None if fp is None else os.path.join(root, f"{kind}_{fp}")
     ent = bucket.get(key)
-    if ent is None:
-        store = os.environ.get(ENV_VAR)
-        persistent = bool(store)
-        root = store if store else _scratch_root(app)
-        try:
-            fp = corpus_fingerprint(sf_dir, tables)
-        except FileNotFoundError:
-            # ADVICE r12: a build() whose source never touches the
-            # named table on disk (synthesized corpus) has nothing to
-            # fingerprint. In the persistent tier that must still
-            # fail — a constant key would serve stale state across
-            # corpus rewrites — but the scratch tier is
-            # process-private, so fall back to an unkeyed one-shot
-            # build (the pre-r12 behavior for exactly this case).
-            if persistent:
-                raise
-            fp = None
-        if fp is None:
+    # an open handle serves only while its path is still the current
+    # one: a corpus rewritten within the application changes the
+    # fingerprint, hence the path, and the relation is rebuilt
+    if ent is None or (path is not None and ent[1] != path):
+        if path is None:
             path = tempfile.mkdtemp(prefix=f"{kind}_oneshot_", dir=root)
             build().write.mode("overwrite").parquet(path)
-        else:
-            path = os.path.join(root, f"{kind}_{fp}")
-            if not os.path.isfile(os.path.join(path, "_SUCCESS")):
-                _land(root, kind, path, build)
+        elif not os.path.isfile(os.path.join(path, "_SUCCESS")):
+            _land(root, kind, path, build)
         ent = (spark.read.parquet(path), path, persistent)
         bucket[key] = ent
     return ent

@@ -40,17 +40,16 @@ _H1 = 3600 * 1_000_000
 # one). All frames share one Window partitioning: Spark plans them
 # as stacked Window execs over a single exchange. The relation is
 # pinned per (application, sf_dir) via lazy localCheckpoint (r10
-# verdict task #3, the trained-codebook discipline): unlike
+# verdict task #3): unlike
 # .persist(), checkpoint blocks are NOT registered with the
 # CacheManager, so `spark.catalog.clearCache()` (the probe's per-run
 # isolation) cannot drop them — the shared pass survives across
-# probed entries exactly as the k-means codebooks do. Fixed-width
+# probed entries. Fixed-width
 # columns, events-sized; at true 100 TB scale the pin is the dial
 # (drop it and each entry recomputes the one pass instead of
 # sharing memory). Assumes the events parquet under a given sf_dir
-# is IMMUTABLE for the life of the application (the same contract
-# as train_kmeans_df's cache_key) — a rewritten sf_dir within one
-# application would serve stale frames. Entries of a stopped
+# is IMMUTABLE for the life of the application — a rewritten sf_dir
+# within one application would serve stale frames. Entries of a stopped
 # application are dropped on first access from the next one; their
 # checkpoint blocks died with that application's context, and the
 # cleared references let the ContextCleaner reap any remainder.

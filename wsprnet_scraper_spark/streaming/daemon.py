@@ -60,7 +60,9 @@ def session_maintenance(spark) -> None:
     """Reclaim the slow session-lifetime leases a long-running driver
     accumulates: prepared-plan cache entries (each pins a JVM plan
     tree via py4j), standing-relation store handles (graph edges,
-    signatures, labels, codebooks), CacheManager persisted relations,
+    signatures, labels, trained codebooks — the parquet stays, so the
+    next plan re-opens it rather than retraining), the pinned frame
+    relation, CacheManager persisted relations,
     and dead checkpoint RDDs waiting on Python GC for ContextCleaner
     to reap. Measured consequence of NOT doing this: the r5
     full-registry gate OOM'd a default-heap JVM at ~261 queries with
@@ -70,7 +72,6 @@ def session_maintenance(spark) -> None:
     re-opening each standing parquet, nothing else."""
     import gc
 
-    from ..operators.similarity import clear_codebooks
     from ..operators.stores import clear_store_cache
     from ..plans.analytics import clear_frame_store
     from ..plans.registry import clear_plan_cache
@@ -83,12 +84,8 @@ def session_maintenance(spark) -> None:
     clear_store_cache()
     # localCheckpoint-pinned relations are immune to clearCache();
     # dropping the store references is what lets the ContextCleaner
-    # reap their blocks (r11 review finding). Codebook handles are
-    # pinned the same way and most are store-parquet-backed, so the
-    # re-pay is a re-open here too (r13: they were the one pinned
-    # family maintenance missed).
+    # reap their blocks (r11 review finding).
     clear_frame_store()
-    clear_codebooks()
     spark.catalog.clearCache()
     gc.collect()
 
