@@ -19,12 +19,11 @@ A3 BPE framing regex: '.' differs across engines on line terminators
    the framing pass — Java's per-char class check vs the optimized
    dot). The tests here gate the exact entries on a corpus crafted
    to contain every line-terminator class member inside tokens.
-A4 _FRAME_STORE pinning (also r10 verdict task #3): the shared frame
-   relation is localCheckpoint'ed instead of persist()'ed, so the
-   probe's per-run spark.catalog.clearCache() cannot drop it — the
-   trained-codebook discipline; eviction of a stopped application's
-   entries needs no unpersist because its checkpoint blocks died
-   with that application's context.
+A4 frame relation pinning (also r10 verdict task #3): the shared
+   frame relation is a standing-store relation, and the store pins a
+   relation of one partition with a localCheckpoint instead of
+   persist(), so the probe's per-run spark.catalog.clearCache()
+   cannot drop it.
 """
 
 from __future__ import annotations
@@ -87,10 +86,8 @@ def test_landing_concatenates_multipart_fids(spark, tmp_path):
 
 
 def test_frame_relation_survives_clear_cache(spark):
-    from wsprnet_scraper_spark.plans.analytics import (
-        _FRAME_STORE,
-        _frame_relation,
-    )
+    from wsprnet_scraper_spark.operators import stores
+    from wsprnet_scraper_spark.plans.analytics import _frame_relation
 
     df = _frame_relation(spark, SF_SMOKE)
     n = df.count()  # materializes the lazy localCheckpoint
@@ -103,7 +100,7 @@ def test_frame_relation_survives_clear_cache(spark):
     df2 = _frame_relation(spark, SF_SMOKE)
     assert df2 is df and df2.count() == n
     app = spark.sparkContext.applicationId
-    assert SF_SMOKE in _FRAME_STORE[app]
+    assert ("frames_w19", SF_SMOKE) in stores._STORE_CACHE[app]
 
 
 def test_landing_refuses_compressed_parts(spark, tmp_path):

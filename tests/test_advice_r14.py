@@ -1,9 +1,6 @@
 """Regression tests for the r13 ADVICE findings closed in r14.
 
-A1 _sized_stream_parts: an unstatable input volume (remote URI,
-   missing path) must leave the session's shuffle-partition conf
-   alone instead of pinning stream state to 1 partition; a 1 TB
-   volume clamps to 4096 (the documented upper clamp).
+A1 stream state sizing: tested in tests/test_scan_heal.py.
 A2 evt_lift_pairs: a NULL user_id contributes to the marginals but
    never to the pair relation (the oracle's self-join on user_id
    excludes NULL=NULL) — engine and oracle must agree on a corpus
@@ -24,54 +21,6 @@ import __spark_entry__ as entrymod
 from tests.test_advice_r10 import _assert_matches_oracle
 
 QUERIES = entrymod.queries()
-
-
-# ------------------------------------------------ A1: stream sizing
-
-
-def test_sized_stream_parts_unknown_volume_skips_override(spark):
-    from wsprnet_scraper_spark.plans.streaming_q import _sized_stream_parts
-
-    saved = spark.conf.get("spark.sql.shuffle.partitions")
-    try:
-        spark.conf.set("spark.sql.shuffle.partitions", "17")
-        ctx = _sized_stream_parts(spark, "s3://bucket/landing")
-        assert ctx.parts is None
-        with ctx:
-            assert spark.conf.get("spark.sql.shuffle.partitions") == "17"
-        assert spark.conf.get("spark.sql.shuffle.partitions") == "17"
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", saved)
-
-
-def test_sized_stream_parts_1tb_clamps_to_4096(spark, monkeypatch):
-    import wsprnet_scraper_spark.sources.tables as tables
-    from wsprnet_scraper_spark.plans.streaming_q import _sized_stream_parts
-
-    monkeypatch.setattr(
-        tables, "_dataset_bytes", lambda p: 1 << 40  # 1 TiB
-    )
-    saved = spark.conf.get("spark.sql.shuffle.partitions")
-    try:
-        ctx = _sized_stream_parts(spark, "/any/local/path")
-        assert ctx.parts == 4096
-        with ctx:
-            assert (
-                spark.conf.get("spark.sql.shuffle.partitions") == "4096"
-            )
-        assert spark.conf.get("spark.sql.shuffle.partitions") == saved
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", saved)
-
-
-def test_dataset_bytes_none_for_missing_and_remote(tmp_path):
-    from wsprnet_scraper_spark.sources.tables import _dataset_bytes
-
-    assert _dataset_bytes("s3://bucket/table.parquet") is None
-    assert _dataset_bytes(str(tmp_path / "nope")) is None
-    f = tmp_path / "x.bin"
-    f.write_bytes(b"abc")
-    assert _dataset_bytes(str(f)) == 3
 
 
 # ------------------------------------- A2: NULL keys in pair lifts

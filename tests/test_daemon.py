@@ -149,24 +149,24 @@ def test_daemon_builds_ingest_plan_once_per_session(spark, tmp_path, stream_buil
 
 def test_maintenance_fires_on_cadence(spark, tmp_path):
     """session_maintenance runs every `maintenance_every` ticks and
-    actually clears the prepared-plan cache, the standing-state
-    store handles, and the localCheckpoint-pinned frame store (r11
-    review finding: clearCache cannot reach checkpoint blocks, so a
-    daemon that never drops the dict reference pins an events-sized
-    relation forever)."""
+    actually clears the prepared-plan cache and the standing-state
+    store handles, the pinned frame relation included (r11 review
+    finding: clearCache cannot reach checkpoint blocks, so a daemon
+    that never drops the handle pins an events-sized relation
+    forever)."""
+    from wsprnet_scraper_spark.operators import stores
     from wsprnet_scraper_spark.plans import QUERIES
-    from wsprnet_scraper_spark.plans.analytics import (
-        _FRAME_STORE,
-        _frame_relation,
-    )
+    from wsprnet_scraper_spark.plans.analytics import _frame_relation
     from wsprnet_scraper_spark.plans.registry import _PLAN_CACHE
     from wsprnet_scraper_spark.streaming.daemon import run_scrape_daemon
 
-    # seed the plan cache with a real prepared plan, and the frame
-    # store with a pinned relation
+    # seed the plan cache with a real prepared plan, and the store
+    # with the pinned frame relation
     QUERIES["agg_count_rows"](spark, "/root/testdata/sf0.001")
     _frame_relation(spark, "/root/testdata/sf0.001")
-    assert _PLAN_CACHE and _FRAME_STORE
+    app = spark.sparkContext.applicationId
+    assert _PLAN_CACHE
+    assert ("frames_w19", "/root/testdata/sf0.001") in stores._STORE_CACHE[app]
 
     from tests.test_streaming_ingest import make_spot
 
@@ -183,4 +183,4 @@ def test_maintenance_fires_on_cadence(spark, tmp_path):
     )
     assert ticks == 2
     assert not _PLAN_CACHE  # cleared on the 2nd tick
-    assert not _FRAME_STORE  # pinned frame relations released too
+    assert not stores._STORE_CACHE  # store handles released too

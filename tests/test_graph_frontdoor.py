@@ -88,10 +88,11 @@ def test_materialization_survives_clearCache(spark):
         e2 = graph_q._sliced_edges(spark, SF_SMOKE)
         assert e2 is e
         assert e2.count() == n
-        # and the plan is a parquet scan of the written edge files,
-        # not the join derivation
+        # and the plan is the pinned handle of the written edge
+        # relation (one partition at smoke size), not the join
+        # derivation
         plan = e2._jdf.queryExecution().simpleString()
-        assert "parquet" in plan.lower() and "Join" not in plan
+        assert "ExistingRDD" in plan and "Join" not in plan
     finally:
         _fresh(spark)
 

@@ -3,13 +3,18 @@ Spark-written parquet table is a directory, and os.path.getsize on it
 returns the inode size (~4 KB), which silently disabled the heal and
 left multi-file tables running file-count-wide on a 32-core session
 (caught by the 10x probe: pipeline_enrich27 slope 9.2 -> 4.0).
-`partitions_for` is the bytes rule that sizes stream state."""
+`partitions_for` is the bytes rule that sizes stream state
+(`_stream_parts_conf`): an unstatable input volume (remote URI,
+missing path) must leave the session's shuffle-partition conf alone
+instead of pinning stream state to 1 partition; a 1 TB volume clamps
+to 4096 (the documented upper clamp)."""
 
 from __future__ import annotations
 
 import pytest
 from pyspark.sql import functions as F
 
+from wsprnet_scraper_spark.plans.streaming_q import _stream_parts_conf
 from wsprnet_scraper_spark.session import scoped_conf
 from wsprnet_scraper_spark.sources import load
 from wsprnet_scraper_spark.sources.tables import _dataset_bytes, partitions_for
@@ -23,6 +28,46 @@ _MiB = 1 << 20
 )
 def test_partitions_for(nbytes, parts):
     assert partitions_for(nbytes) == parts
+
+
+def test_stream_parts_conf_unknown_volume_skips_override(spark):
+    saved = spark.conf.get("spark.sql.shuffle.partitions")
+    try:
+        spark.conf.set("spark.sql.shuffle.partitions", "17")
+        conf = _stream_parts_conf("s3://bucket/landing")
+        assert conf == {}
+        with scoped_conf(spark, conf):
+            assert spark.conf.get("spark.sql.shuffle.partitions") == "17"
+        assert spark.conf.get("spark.sql.shuffle.partitions") == "17"
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", saved)
+
+
+def test_stream_parts_conf_1tb_clamps_to_4096(spark, monkeypatch):
+    import wsprnet_scraper_spark.sources.tables as tables
+
+    monkeypatch.setattr(
+        tables, "_dataset_bytes", lambda p: 1 << 40  # 1 TiB
+    )
+    saved = spark.conf.get("spark.sql.shuffle.partitions")
+    try:
+        conf = _stream_parts_conf("/any/local/path")
+        assert conf == {"spark.sql.shuffle.partitions": "4096"}
+        with scoped_conf(spark, conf):
+            assert (
+                spark.conf.get("spark.sql.shuffle.partitions") == "4096"
+            )
+        assert spark.conf.get("spark.sql.shuffle.partitions") == saved
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", saved)
+
+
+def test_dataset_bytes_none_for_missing_and_remote(tmp_path):
+    assert _dataset_bytes("s3://bucket/table.parquet") is None
+    assert _dataset_bytes(str(tmp_path / "nope")) is None
+    f = tmp_path / "x.bin"
+    f.write_bytes(b"abc")
+    assert _dataset_bytes(str(f)) == 3
 
 
 def test_dataset_bytes_sums_directory(tmp_path, spark):

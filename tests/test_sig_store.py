@@ -52,11 +52,23 @@ def test_store_builds_once_and_roundtrips(spark, tmp_path, monkeypatch):
     stores.clear_store_cache()
 
 
+def _plan(df):
+    return df._jdf.queryExecution().executedPlan().toString()
+
+
 def test_scratch_tier_builds_per_process_and_cleans_up(
     spark, monkeypatch
 ):
+    import wsprnet_scraper_spark.sources.tables as tables_mod
+
     monkeypatch.delenv(stores.ENV_VAR, raising=False)
-    for tables in _TABLE_SETS:
+    real_bytes = tables_mod._dataset_bytes
+    # the handle rule on both sides of one partition (8 MiB): the
+    # landed 3-row relation as it is, and as if it were 8 MiB + 1
+    for tables, extra in [(t, x) for t in _TABLE_SETS for x in (0, 8 << 20)]:
+        monkeypatch.setattr(
+            tables_mod, "_dataset_bytes", lambda p: real_bytes(p) + extra
+        )
         stores.clear_store_cache()
         calls = []
 
@@ -64,10 +76,20 @@ def test_scratch_tier_builds_per_process_and_cleans_up(
             calls.append(1)
             return spark.range(3).select(F.col("id").alias("k"))
 
-        kind = "t_scratch_" + "_".join(tables)
+        kind = f"t_scratch_{extra}_" + "_".join(tables)
         a = stores.materialized(spark, SF_SMOKE, kind, build, tables)
         assert _rows(a) == [(0,), (1,), (2,)]
-        stores.materialized(spark, SF_SMOKE, kind, build, tables)
+        if extra:
+            # over one partition: a parquet scan, never an in-heap pin
+            assert "FileScan parquet" in _plan(a), _plan(a)
+            assert "ExistingRDD" not in _plan(a)
+        else:
+            # one partition: pinned by a checkpoint, which is not a
+            # CacheManager entry, so clearCache does not drop it
+            assert "ExistingRDD" in _plan(a), _plan(a)
+            spark.catalog.clearCache()
+            assert "ExistingRDD" in _plan(a) and _rows(a) == [(0,), (1,), (2,)]
+        assert stores.materialized(spark, SF_SMOKE, kind, build, tables) is a
         assert len(calls) == 1
         app = spark.sparkContext.applicationId
         (_df, path, persistent) = stores._STORE_CACHE[app][
@@ -198,6 +220,32 @@ def test_codebook_rebuilt_when_corpus_rewritten_under_suffixed_key(
     df2, list2, df2_fresh, list2_fresh = train()
     assert (df2, list2) == (df2_fresh, list2_fresh)
     assert df2 != df1 and list2 != list1
+    stores.clear_store_cache()
+
+
+def test_frame_relation_rebuilt_when_events_rewritten(spark, tmp_path):
+    # The win_* frame relation is a store relation keyed on the events
+    # table: rewriting events.parquet within the same application must
+    # serve the rewritten corpus's frames, not the first build's.
+    import shutil
+
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    from wsprnet_scraper_spark.plans.analytics import _frame_relation
+
+    sf, fresh = tmp_path / "sf", tmp_path / "fresh"
+    shutil.copytree(SF_SMOKE, sf)
+    before = _rows(_frame_relation(spark, str(sf)))
+    t = pq.read_table(f"{SF_SMOKE}/events.parquet")
+    i = t.schema.get_field_index("value")
+    t = t.set_column(i, "value", pc.multiply(t.column("value"), 3.0))
+    fresh.mkdir()
+    pq.write_table(t, str(fresh / "events.parquet"))
+    pq.write_table(t, str(sf / "events.parquet"))
+    after = _rows(_frame_relation(spark, str(sf)))
+    assert after != before
+    assert after == _rows(_frame_relation(spark, str(fresh)))
     stores.clear_store_cache()
 
 

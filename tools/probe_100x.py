@@ -359,15 +359,15 @@ def main() -> None:
     from wsprnet_scraper_spark.plans import graph_q
     from wsprnet_scraper_spark.plans.registry import clear_plan_cache
 
-    def drop_edge_store(at: str) -> None:
-        """Delete the corpus's standing edge parquet (every edge kind)
-        and every handle or cached plan that scans it, so the next
-        edge read times a real build, not a parquet re-open."""
-        fp = stores.corpus_fingerprint(at, ("orders", "lineitem"))
-        for p in Path(os.environ[stores.ENV_VAR]).glob(f"edges_*_{fp}"):
+    def drop_stored(at: str, kind="edges_*", tables=("orders", "lineitem")):
+        """Delete the corpus's standing parquet of `kind` (default:
+        every edge kind) and every handle or cached plan that scans
+        it, so the next read times a real build, not a parquet
+        re-open."""
+        fp = stores.corpus_fingerprint(at, tables)
+        for p in Path(os.environ[stores.ENV_VAR]).glob(f"{kind}_{fp}"):
             shutil.rmtree(p, ignore_errors=True)
-        stores.clear_store_cache()
-        clear_plan_cache()
+        stores.clear_store_cache(drop_files=True)
 
     def prebuild_edges(at: str) -> float:
         """Materialize ALL THREE shared edge relations (ADVICE r6:
@@ -494,19 +494,13 @@ def main() -> None:
         out_path.write_text(json.dumps(results, indent=1) + "\n")
 
     # ---- standing-store cold/warm split (VERDICT r10 #1/#6) -------
-    # Cold = in-memory tiers dropped AND the persistent store dir
+    # Cold = store handles dropped AND the persistent store dir
     # emptied (a brand-new corpus version: standing build + the
-    # entry's own work); warm = the fresh-session shape (in-memory
-    # tiers dropped, standing parquet intact). warm is what a
+    # entry's own work); warm = the fresh-session shape (store
+    # handles dropped, standing parquet intact). warm is what a
     # production ingest pays per batch; cold - warm is the
     # once-per-corpus standing-build share.
     from wsprnet_scraper_spark.plans import analytics as pl_analytics
-
-    def drop_memory_tiers(drop_files: bool = False):
-        # handles only unless drop_files, which also drops the plans
-        # whose scans the deleted store files back
-        stores.clear_store_cache(drop_files=drop_files)
-        pl_analytics._FRAME_STORE.clear()
 
     for name in SIGSTORE_SPLIT:
         key = f"{name}@storesplit"
@@ -515,15 +509,15 @@ def main() -> None:
         run(name, args.base)  # plan-shape warm-up, untimed
         store_dir = os.environ["SPARK_GRAFT_SIG_STORE"]
         shutil.rmtree(store_dir, ignore_errors=True)
-        drop_memory_tiers(drop_files=True)
+        stores.clear_store_cache(drop_files=True)
         cold = run(name, str(out))
 
         def warm_run() -> float:
             # fresh-session shape for EVERY warm run (r11 review
-            # finding: dropping tiers once before a min-of-2 lets the
+            # finding: dropping handles once before a min-of-2 lets the
             # second run serve open handles from memory and
             # understate the real fresh-session cost)
-            drop_memory_tiers()
+            stores.clear_store_cache()
             return run(name, str(out))
 
         warm = min(warm_run(), warm_run())
@@ -538,14 +532,15 @@ def main() -> None:
         out_path.write_text(json.dumps(results, indent=1) + "\n")
 
     # ---- shared frame relation one-time pass (VERDICT r10 #3) -----
-    # win_ewma/bollinger/rsi serve from ONE localCheckpoint-pinned
-    # block+halo pass; per-entry numbers above are amortized (the pin
-    # survives clearCache now). Record the one-time pass explicitly.
+    # win_ewma/bollinger/rsi serve from ONE standing block+halo pass
+    # (the store's frames_w19 kind); per-entry numbers above are
+    # amortized. Record the one-time pass explicitly: the stored
+    # frames are deleted first, so each timed run is a real build.
     if "frame_relation_build" not in results and want(
         "frame_relation_build"
     ):
         def frame_build(at: str) -> float:
-            pl_analytics._FRAME_STORE.clear()
+            drop_stored(at, "frames_w19", ("events",))
             spark.catalog.clearCache()
             t0 = time.perf_counter()
             pl_analytics._frame_relation(spark, at).write.format(
@@ -559,8 +554,8 @@ def main() -> None:
             "x100_sec": round(fg, 3),
             "slope100": round(fg / fb, 1) if fb > 0 else None,
             "note": "one-time shared block+halo pass serving "
-            "win_ewma/win_bollinger/win_rsi; localCheckpoint-pinned, "
-            "paid once per (application, corpus)",
+            "win_ewma/win_bollinger/win_rsi; a standing relation, "
+            "paid once per corpus version",
         }
         print(
             "frame_relation_build", results["frame_relation_build"],
@@ -606,9 +601,9 @@ def main() -> None:
         spark.stop()
         spark = get_session("probe-100x-graph")
         if want_edge_build:
-            drop_edge_store(args.base)
+            drop_stored(args.base)
             base_build = prebuild_edges(args.base)
-            drop_edge_store(str(gout))
+            drop_stored(str(gout))
             big_build = prebuild_edges(str(gout))
             n_amort = max(1, len(GRAPH_QUERIES_100X))
             results["graph_edge_build@grownodes"] = {
@@ -675,7 +670,7 @@ def main() -> None:
         # warm serve scales with the source neighborhood, not the
         # graph.
         if want_ppr_split:
-            drop_edge_store(str(gout))
+            drop_stored(str(gout))
             cold = run("graph_ppr", str(gout))
 
             def _warm_ppr() -> float:

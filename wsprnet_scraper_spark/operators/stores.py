@@ -1,11 +1,12 @@
 """Corpus-fingerprint-keyed standing-relation store: the one place a
 relation that is built once per corpus version and scanned by every
 later run is kept. Its users are the graph edge relations
-(plans/graph_q.py), MinHash signature stores, standing-corpus cluster
-labels and every trained ANN/SemDeDup codebook
-(operators/similarity._stored_codebook, keyed on the embeddings
-table; both tiers apply to them). A real pipeline pays each of these
-once per corpus and amortizes it across every query and ingest batch;
+(plans/graph_q.py), the shared win_* trailing-frame relation
+(plans/analytics._frame_relation, keyed on the events table), MinHash
+signature stores, standing-corpus cluster labels and every trained
+ANN/SemDeDup codebook (operators/similarity._stored_codebook, keyed on
+the embeddings table). A real pipeline pays each of these once per
+corpus and amortizes it across every query and ingest batch;
 rebuilding them per run was the bulk of the incremental and stream
 entries' cost (10.3 s of strm_minhash_dedup's 18.7 s at the 100x
 probe was the signature-store rebuild).
@@ -15,8 +16,8 @@ through `_land` (write into a temp dir, then one atomic rename):
 
 - default: a per-application scratch root (process-private tempdir),
   deleted at process exit, so concurrent applications share no path.
-  The first call pays the build; later calls in the process scan the
-  standing parquet. A maintenance pass (`clear_store_cache()`) drops
+  The first call pays the build; later calls in the process reuse
+  the handle. A maintenance pass (`clear_store_cache()`) drops
   only the in-memory HANDLES, so a daemon's periodic reclaim costs a
   parquet re-open, not a rebuild.
 - SPARK_GRAFT_SIG_STORE=<dir>: the relation persists ACROSS sessions
@@ -27,6 +28,20 @@ through `_land` (write into a temp dir, then one atomic rename):
 An open handle is re-checked against the fingerprint on every call,
 so a corpus rewritten within one application is rebuilt, not served
 from the handle.
+
+Handle rule (`_entry`), one rule for every kind, read off the landed
+parquet's bytes with the partition rule
+(`sources.tables.partitions_for`): a relation of at most one
+partition (<= 8 MiB) is pinned in memory with a lazy localCheckpoint,
+so repeated serves read rows from memory instead of decoding the
+parquet again; anything larger stays a parquet scan, because an
+in-heap pin of the 100x edge relation (117M rows) exhausted the 8g
+driver (plans/graph_q.py). A
+checkpoint is not in the CacheManager, so `spark.catalog.clearCache()`
+does not drop it; `clear_store_cache()` does, by dropping the handle.
+Checkpoint blocks cannot be recomputed: a lost block fails its
+consumers until `streaming.daemon.run_with_state_recovery` drops the
+handles and the next call re-opens the parquet.
 
 The store is a CACHE, never a semantic change: a stored relation must
 be bit-identical to `build()`'s output (parquet round-trips the exact
@@ -87,10 +102,12 @@ def clear_store_cache(drop_files: bool = False) -> None:
     """Drop all in-memory handles. Scratch-tier PARQUET survives by
     default (r12, VERDICT r11 task #5): the daemon's
     session_maintenance calls this to reclaim JVM leases — plan
-    trees, cached relations — and the standing parquet on local disk
-    pins no JVM memory at all, so deleting it would convert every
-    post-maintenance store access into a full standing-state REBUILD
-    where a parquet re-open suffices (measured: the probe's
+    trees, pinned handles (dropping the reference lets the
+    ContextCleaner reap the checkpoint blocks) — and the standing
+    parquet on local disk pins no JVM memory at all, so deleting it
+    would convert every post-maintenance store access into a full
+    standing-state REBUILD where a parquet re-open suffices
+    (measured: the probe's
     cold-minus-warm split IS that rebuild cost — e.g. 18.8 s of
     dedup_minhash_cluster_incremental's 28.0 s cold at 100×).
     `drop_files=True` deletes the scratch dirs too (tests / explicit
@@ -180,7 +197,10 @@ def materialized(spark, sf_dir: str, kind: str, build, tables=("documents",)):
 
 def _entry(spark, sf_dir: str, kind: str, build, tables):
     """`materialized`'s cache entry (df, parquet_path, persistent);
-    the one owner of _STORE_CACHE's key format."""
+    the one owner of _STORE_CACHE's key format and of the handle
+    rule."""
+    from ..sources.tables import _dataset_bytes, partitions_for
+
     app = spark.sparkContext.applicationId
     bucket = _STORE_CACHE.get(app)
     if bucket is None:
@@ -214,7 +234,12 @@ def _entry(spark, sf_dir: str, kind: str, build, tables):
             build().write.mode("overwrite").parquet(path)
         elif not os.path.isfile(os.path.join(path, "_SUCCESS")):
             _land(root, kind, path, build)
-        ent = (spark.read.parquet(path), path, persistent)
+        df = spark.read.parquet(path)
+        # the handle rule (module docstring): pin what fits one
+        # partition, scan the rest
+        if partitions_for(_dataset_bytes(path)) == 1:
+            df = df.localCheckpoint(eager=False)
+        ent = (df, path, persistent)
         bucket[key] = ent
     return ent
 
@@ -226,5 +251,5 @@ def materialized_entry(
     caller that keeps the standing relation OUT of its own sink (r14:
     the stream twins used to copy the corpus seed into the sink every
     invocation) still size partitions from the standing volume
-    (_sized_stream_parts reads file sizes, not DataFrames)."""
+    (_stream_parts_conf reads file sizes, not DataFrames)."""
     return _entry(spark, sf_dir, kind, build, tables)[:2]

@@ -666,14 +666,14 @@ def strm_minhash_dedup(spark, sf_dir):
             cur.unpersist()
 
     # Shuffle partitions for the drain sized from landing + standing
-    # store + sink bytes (streaming_q._sized_stream_parts; the store
+    # store + sink bytes (streaming_q._stream_parts_conf; the store
     # path carries the corpus-sized seed, so the 100x corpus still
     # sizes up): every micro-batch's joins and its per-batch parquet
     # sink write inherit the count — at test SFs this stops 32-way
     # writes of KB-sized batches (measured 7.0 -> 4.8 s for the entry).
-    from .streaming_q import _sized_stream_parts
+    from .streaming_q import _stream_parts_conf
 
-    with _sized_stream_parts(spark, landing, seed_path, sink):
+    with scoped_conf(spark, _stream_parts_conf(landing, seed_path, sink)):
         q = (
             spark.readStream.schema("doc_id long, text string")
             .option("maxFilesPerTrigger", 1)
@@ -2963,9 +2963,9 @@ def strm_semantic_dedup(spark, sf_dir):
     # sized drain partitions — the strm_minhash_dedup rationale (the
     # standing store path carries the corpus vector seed, so volume
     # scales with corpus)
-    from .streaming_q import _sized_stream_parts
+    from .streaming_q import _stream_parts_conf
 
-    with _sized_stream_parts(spark, landing, seed_path, sink):
+    with scoped_conf(spark, _stream_parts_conf(landing, seed_path, sink)):
         q = (
             spark.readStream.schema("vec_id long, embedding array<double>")
             .option("maxFilesPerTrigger", 1)

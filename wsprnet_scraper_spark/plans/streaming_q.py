@@ -40,12 +40,15 @@ _atexit.register(_wm_cleanup_at_exit)
 _money = "CAST(value AS DECIMAL(12,2))"
 
 
-class _sized_stream_parts:
-    """Size a stateful stream's shuffle (= state) partitions from the
-    INPUT VOLUME instead of the session core count, for the duration
-    of one streaming run (set before .start(), restored after
-    awaitTermination — the strm_dedup_watermark provider-conf
-    precedent).
+def _stream_parts_conf(*paths) -> dict:
+    """The SQL conf that sizes a stateful stream's shuffle (= state)
+    partitions from the INPUT VOLUME instead of the session core
+    count: `{"spark.sql.shuffle.partitions": n}` with n =
+    `sources.tables.partitions_for(total bytes of paths)`, for the
+    caller to apply through `session.scoped_conf` around one
+    streaming run (set before .start(), restored after
+    awaitTermination — the conf is frozen into the stream's
+    checkpoint at start).
 
     Rationale (r13, measured): a stream-stream join owns 4 state
     stores per partition; at the session default (shuffle.partitions
@@ -56,10 +59,9 @@ class _sized_stream_parts:
     at 16, 6.7 s at 8, identical output. State partitions should
     scale with STATE volume (guide §2.2: fewer, larger partitions —
     size for tens-of-MB-plus per partition), not with local core
-    count: `sources.tables.partitions_for(input_bytes)` (8 MiB per
-    partition, clamped to [1, 4096]). On a real cluster it sizes
-    state tasks to data. Derived from file sizes only — no extra
-    Spark job.
+    count: 8 MiB per partition, clamped to [1, 4096]. On a real
+    cluster it sizes state tasks to data. Derived from file sizes
+    only — no extra Spark job.
 
     Budget calibration (r14, probe-measured): the r13 default of
     32 MiB starved the 100x stream-stream join — 365 MB of input gave
@@ -72,37 +74,22 @@ class _sized_stream_parts:
     100 M-event corpus. Still bytes-derived; core count never enters.
 
     Unknown volume (ADVICE r13): _dataset_bytes returns None for any
-    path it cannot stat locally (s3://, hdfs://, missing) — in that
-    case the rule is NOT applied and the session's existing
+    path it cannot stat locally (s3://, hdfs://, missing) — then the
+    dict is empty and the session's existing
     spark.sql.shuffle.partitions stands, instead of clamping a remote
     deployment's stream state to 1 partition.
 
-    Scope (VERDICT r13 #5): the override mutates the SESSION-global
-    shuffle-partition conf for start()..awaitTermination of ONE
-    streaming run (the value is frozen into the stream's checkpoint at
-    start). The serial bench/gate protocols never run a concurrent
-    batch query inside the window; a deployment that does should set
-    the partition count on the stream's own conf scope instead."""
+    Scope (VERDICT r13 #5): the conf is SESSION-global for
+    start()..awaitTermination of ONE streaming run. The serial
+    bench/gate protocols never run a concurrent batch query inside
+    the window; a deployment that does should set the partition
+    count on the stream's own conf scope instead."""
+    from ..sources.tables import _dataset_bytes, partitions_for
 
-    def __init__(self, spark, *paths):
-        from ..sources.tables import _dataset_bytes, partitions_for
-
-        self.spark = spark
-        sizes = [_dataset_bytes(p) for p in paths]
-        self.parts = None if None in sizes else partitions_for(sum(sizes))
-
-    def __enter__(self):
-        self._scope = scoped_conf(
-            self.spark,
-            {}
-            if self.parts is None
-            else {"spark.sql.shuffle.partitions": str(self.parts)},
-        )
-        self._scope.__enter__()
-        return self
-
-    def __exit__(self, *exc):
-        return self._scope.__exit__(*exc)
+    sizes = [_dataset_bytes(p) for p in paths]
+    if None in sizes:
+        return {}
+    return {"spark.sql.shuffle.partitions": str(partitions_for(sum(sizes)))}
 
 
 # RocksDB state-store provider + changelog checkpointing for one
@@ -388,8 +375,9 @@ def strm_dedup_watermark(spark, sf_dir):
     # state partitions sized to the (doubled) input volume — each
     # RocksDB instance costs native-db setup + per-commit work, so
     # instance count should track state bytes, not local cores
-    with scoped_conf(spark, _ROCKSDB_STATE), _sized_stream_parts(
-        spark, f"{sf_dir}/events.parquet", f"{sf_dir}/events.parquet"
+    events = f"{sf_dir}/events.parquet"
+    with scoped_conf(
+        spark, {**_ROCKSDB_STATE, **_stream_parts_conf(events, events)}
     ):
         q = (
             dd.select("event_id")
@@ -550,13 +538,12 @@ def strm_stream_join(spark, sf_dir):
     joined = _stream_join_joined(clicks, errors)
     name = f"strm_stream_join_{uuid.uuid4().hex[:8]}"
     # state partitions sized to the two input streams' volume
-    # (_sized_stream_parts): the conf is read at query START and
+    # (_stream_parts_conf): the conf is read at query START and
     # frozen into the checkpoint, so the scope covers start..await.
     # Provider stays heap-backed (r14, measured: RocksDB ran this
     # join 3x slower at the 100x corpus — see _ROCKSDB_STATE).
-    with _sized_stream_parts(
-        spark, f"{sf_dir}/events.parquet", f"{sf_dir}/events.parquet"
-    ):
+    events = f"{sf_dir}/events.parquet"
+    with scoped_conf(spark, _stream_parts_conf(events, events)):
         q = (
             joined.writeStream.format("memory")
             .queryName(name)
@@ -625,10 +612,10 @@ def strm_stream_join_multibatch(spark, sf_dir):
         spark, landing, land_schema, "error", "error", max_files_per_trigger=4
     )
     # state partitions sized to the landing volume (both sides read
-    # it), not the core count — see _sized_stream_parts; this is the
+    # it), not the core count — see _stream_parts_conf; this is the
     # entry the 32-partition contention hurt most (4-batch drain +
     # no-data batch x 128 store instances)
-    with _sized_stream_parts(spark, landing, landing):
+    with scoped_conf(spark, _stream_parts_conf(landing, landing)):
         q = (
             _stream_join_joined(clicks, errors)
             .writeStream.format("parquet")

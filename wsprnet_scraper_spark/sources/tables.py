@@ -78,7 +78,7 @@ def _dataset_bytes(path: str) -> int | None:
     running 10-wide on 32 cores). None = not statable — a non-local
     URI (s3://, hdfs://) or a path that does not exist locally.
     ADVICE r13: a remote URI used to fall through os.walk and return
-    0, which _sized_stream_parts clamped to 1 partition — exactly the
+    0, which the stream sizing clamped to 1 partition — exactly the
     production case the sizing rule serves; "unknown" must be None,
     never 0."""
     try:
@@ -99,7 +99,8 @@ def _dataset_bytes(path: str) -> int | None:
 def partitions_for(nbytes: int | None) -> int | None:
     """Partition count for `nbytes` of input: one per 8 MiB, clamped
     to [1, 4096]; None when the size is unknown. Sizes stream state
-    (`plans/streaming_q._sized_stream_parts`)."""
+    (`plans/streaming_q._stream_parts_conf`) and decides whether a
+    standing relation's handle is pinned (`operators/stores._entry`)."""
     if nbytes is None:
         return None
     return max(1, min(4096, -(-nbytes // (8 << 20))))

@@ -59,21 +59,22 @@ def phase_locked_loop(
 def session_maintenance(spark) -> None:
     """Reclaim the slow session-lifetime leases a long-running driver
     accumulates: prepared-plan cache entries (each pins a JVM plan
-    tree via py4j), standing-relation store handles (graph edges,
-    signatures, labels, trained codebooks — the parquet stays, so the
-    next plan re-opens it rather than retraining), the pinned frame
-    relation, CacheManager persisted relations,
-    and dead checkpoint RDDs waiting on Python GC for ContextCleaner
-    to reap. Measured consequence of NOT doing this: the r5
-    full-registry gate OOM'd a default-heap JVM at ~261 queries with
-    every individual query innocent. Call it at a coarse cadence (the
-    daemon defaults to every 720 ticks ≈ 8 h at the 30 s scrape
-    cadence) — it costs re-planning the next query of each shape and
-    re-opening each standing parquet, nothing else."""
+    tree via py4j), standing-relation store handles (graph edges, the
+    win_* frame relation, signatures, labels, trained codebooks — the
+    parquet stays, so the next plan re-opens it rather than
+    rebuilding, and dropping a pinned handle lets the ContextCleaner
+    reap its checkpoint blocks, which clearCache() cannot reach),
+    CacheManager persisted relations, and dead checkpoint RDDs
+    waiting on Python GC for ContextCleaner to reap. Measured
+    consequence of NOT doing this: the r5 full-registry gate OOM'd a
+    default-heap JVM at ~261 queries with every individual query
+    innocent. Call it at a coarse cadence (the daemon defaults to
+    every 720 ticks ≈ 8 h at the 30 s scrape cadence) — it costs
+    re-planning the next query of each shape and re-opening each
+    standing parquet, nothing else."""
     import gc
 
     from ..operators.stores import clear_store_cache
-    from ..plans.analytics import clear_frame_store
     from ..plans.registry import clear_plan_cache
 
     clear_plan_cache()
@@ -82,22 +83,19 @@ def session_maintenance(spark) -> None:
     # standing-state rebuild (r12, VERDICT r11 task #5 — the probe's
     # cold-minus-warm split is the rebuild this avoids)
     clear_store_cache()
-    # localCheckpoint-pinned relations are immune to clearCache();
-    # dropping the store references is what lets the ContextCleaner
-    # reap their blocks (r11 review finding).
-    clear_frame_store()
     spark.catalog.clearCache()
     gc.collect()
 
 
 # Failure signatures of LOST pinned state — not of a wrong plan.
 # "Checkpoint block": LocalCheckpointRDD.compute's error when a
-# block died with its executor (or was unpersisted) — localCheckpoint
-# deliberately cannot recompute (plans/analytics.py trade note).
-# "FetchFailed"/"BlockNotFound": shuffle/cached-block loss variants of
-# the same event. FileNotFound markers: a standing-store parquet dir
-# vanished under an open handle (scratch reclaimed by the OS, store
-# dir rewritten by another session).
+# block died with its executor (or was unpersisted) — a
+# localCheckpoint cannot recompute it (the store's handle rule,
+# operators/stores.py). "FetchFailed"/"BlockNotFound": shuffle and
+# cached-block loss variants of the same event. FileNotFound
+# markers: a standing-store parquet dir vanished under an open handle
+# (scratch reclaimed by the OS, store dir rewritten by another
+# session).
 _LOST_STATE_MARKERS = (
     "Checkpoint block",
     "BlockNotFoundException",
@@ -125,17 +123,16 @@ def run_with_state_recovery(spark, action):
     """Execute `action()` — a zero-arg thunk that BUILDS and RUNS a
     query (e.g. `lambda: QUERIES[k](spark, sf).collect()`) — retrying
     ONCE after dropping every pinned shared relation if the failure
-    looks like lost executor state (VERDICT r12 task #4, the shipped
-    form of the plans/analytics.py deployment hook: localCheckpoint
-    pins cannot recompute lost blocks, so on a cluster an executor
-    loss fails every consumer of a pinned relation until the pin is
-    dropped and rebuilt).
+    looks like lost executor state (VERDICT r12 task #4:
+    localCheckpoint pins cannot recompute lost blocks, so on a
+    cluster an executor loss fails every consumer of a pinned
+    relation until the pin is dropped and re-made).
 
     The thunk must CONSTRUCT the DataFrame inside itself: a pre-built
     DataFrame closes over the dead pinned relation and would replay
     the same lost blocks; rebuilding the plan after maintenance
-    re-derives the pin (store-parquet-backed state re-opens, frame
-    relations re-run their one shared pass). Deployment shape: wire
+    re-opens every store relation from its standing parquet and pins
+    it afresh. Deployment shape: wire
     this around the driver's per-query execution, or call
     `session_maintenance` from an executor-loss listener for the
     push-based equivalent."""
