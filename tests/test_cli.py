@@ -3,6 +3,7 @@
 from __future__ import annotations
 
 import json
+from pathlib import Path
 
 
 def test_cli_enrich_wire(spark, tmp_path, capsys):
@@ -25,6 +26,26 @@ def test_cli_enrich_wire(spark, tmp_path, capsys):
         lines += part.read_text().strip().splitlines()
     assert len(lines) == 400
     assert all(len(line.split(",")) == 27 for line in lines)
+
+
+def test_cli_enrich_stdin_leaves_no_spool(spark, tmp_path, monkeypatch):
+    import io
+    import tempfile
+
+    from wsprnet_scraper_spark.__main__ import main
+
+    # every temp dir the command makes lands in tmp_path
+    monkeypatch.setenv("TMPDIR", str(tmp_path))
+    monkeypatch.setattr(tempfile, "tempdir", None)
+    spots = Path(__file__).parent / "golden" / "spots_input.json"
+    monkeypatch.setattr("sys.stdin", io.StringIO(spots.read_text()))
+    out = tmp_path / "enriched"
+    assert main(["enrich", "-i", "-", "-o", str(out), "--wire"]) == 0
+    lines = []
+    for part in out.glob("part-*.csv"):
+        lines += part.read_text().strip().splitlines()
+    assert len(lines) == 400
+    assert sorted(p.name for p in tmp_path.iterdir()) == ["enriched"]
 
 
 def test_cli_upload_then_backfill_scrape(spark, tmp_path):

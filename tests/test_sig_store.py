@@ -10,7 +10,9 @@ does.
 from __future__ import annotations
 
 import os
+from pathlib import Path
 
+import pytest
 from pyspark.sql import functions as F
 
 from tests.conftest import SF_SMOKE
@@ -253,7 +255,131 @@ def test_fingerprint_raises_on_missing_table(tmp_path):
     # r11 review finding: a missing source table must FAIL, not
     # fingerprint to a constant that would serve stale standing
     # state forever.
-    import pytest
-
     with pytest.raises(FileNotFoundError):
         stores.corpus_fingerprint(str(tmp_path), tables=("nope",))
+
+
+def test_materialized_scratch_falls_back_without_table(
+    spark, tmp_path, monkeypatch
+):
+    # a corpus dir without the named table falls back to an unkeyed
+    # one-shot scratch build instead of propagating
+    # corpus_fingerprint's FileNotFoundError
+    monkeypatch.delenv(stores.ENV_VAR, raising=False)
+    sf = tmp_path / "no_table_corpus"
+    sf.mkdir()
+    calls = []
+
+    def build():
+        calls.append(1)
+        return spark.range(5).toDF("v")
+
+    df = stores.materialized(spark, str(sf), "k_a1", build)
+    assert df.count() == 5
+    # the handle is cached: a second serve must not rebuild
+    df2 = stores.materialized(spark, str(sf), "k_a1", build)
+    assert df2.count() == 5
+    assert len(calls) == 1
+
+
+def test_materialized_persistent_still_fails_without_table(
+    spark, tmp_path, monkeypatch
+):
+    # a constant key would serve stale state across corpus rewrites
+    monkeypatch.setenv(stores.ENV_VAR, str(tmp_path / "store"))
+    sf = tmp_path / "no_table_corpus_p"
+    sf.mkdir()
+    with pytest.raises(FileNotFoundError):
+        stores.materialized(
+            spark, str(sf), "k_a1p", lambda: spark.range(1).toDF("v")
+        )
+
+
+def test_failed_build_leaves_no_wip_debris(spark, tmp_path, monkeypatch):
+    store = tmp_path / "store"
+    monkeypatch.setenv(stores.ENV_VAR, str(store))
+    sf = tmp_path / "corpus"
+    sf.mkdir()
+    (sf / "documents.parquet").write_bytes(b"\x00" * 16)
+
+    def bad_build():
+        raise RuntimeError("synthetic build failure")
+
+    with pytest.raises(RuntimeError):
+        stores.materialized(spark, str(sf), "k_a2", bad_build)
+    debris = [p for p in os.listdir(store) if "wip" in p]
+    assert debris == [], debris
+    # the store still works after the failure
+    ok = stores.materialized(
+        spark, str(sf), "k_a2", lambda: spark.range(3).toDF("v")
+    )
+    assert ok.count() == 3
+
+
+def _live_workdir(spark, name, sf_dir):
+    key = (spark._jsparkSession.sessionUUID(), name, sf_dir)
+    return stores._WORKDIRS.get(key)
+
+
+@pytest.mark.parametrize("case", ["raise", "sf_dirs", "new_session", "drop_files"])
+def test_workdir_generations(spark, case):
+    # one live generation per (session, builder name, sf_dir): a run
+    # reclaims only its own key's previous generation, and only once
+    # it has finished
+    name = f"t_workdir_{case}"
+    made = []
+
+    def run(session, sf_dir, fail=False):
+        with stores.workdir(session, name, sf_dir) as work:
+            made.append(work)
+            (Path(work) / "out").write_text(sf_dir)
+            if fail:
+                raise RuntimeError("synthetic build failure")
+        return work
+
+    a = run(spark, "sf_a")
+    root = stores._scratch_root(spark.sparkContext.applicationId)
+    assert os.path.dirname(a) == root
+    assert _live_workdir(spark, name, "sf_a") == a
+    if case == "raise":
+        with pytest.raises(RuntimeError):
+            run(spark, "sf_a", fail=True)
+        assert not os.path.exists(made[-1])
+        assert os.path.isfile(f"{a}/out")
+        assert _live_workdir(spark, name, "sf_a") == a
+    elif case == "sf_dirs":
+        b = run(spark, "sf_b")
+        a2 = run(spark, "sf_a")
+        b2 = run(spark, "sf_b")
+        assert not os.path.exists(a) and not os.path.exists(b)
+        assert os.path.isfile(f"{a2}/out") and os.path.isfile(f"{b2}/out")
+    elif case == "new_session":
+        child = spark.newSession()
+        c = run(child, "sf_a")
+        c2 = run(child, "sf_a")
+        assert not os.path.exists(c) and os.path.isfile(f"{c2}/out")
+        assert os.path.isfile(f"{a}/out")
+        assert _live_workdir(spark, name, "sf_a") == a
+    else:
+        b = run(spark, "sf_b")
+        stores.clear_store_cache(drop_files=True)
+        assert not os.path.exists(a) and not os.path.exists(b)
+        assert not os.path.exists(root)
+        assert _live_workdir(spark, name, "sf_a") is None
+
+
+def test_dedup_watermark_reclaims_only_after_success(spark):
+    from __spark_entry__ import queries
+
+    run = queries()["strm_dedup_watermark"]
+    sf = SF_SMOKE
+    n1 = run(spark, sf).count()
+    gen1 = _live_workdir(spark, "strm_dedup_watermark", sf)
+    assert gen1 is not None and os.path.isdir(gen1)
+    n2 = run(spark, sf).count()
+    gen2 = _live_workdir(spark, "strm_dedup_watermark", sf)
+    assert n1 == n2
+    # generation 1 reclaimed exactly once generation 2 succeeded
+    assert gen2 != gen1
+    assert not os.path.exists(gen1)
+    assert os.path.isdir(gen2)

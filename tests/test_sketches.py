@@ -167,3 +167,37 @@ def test_hll_rejects_biased_bucket_count(spark):
     ev = load_events(spark, SF)
     with pytest.raises(ValueError):
         hll_distinct(ev, "event_type", "user_id", m_buckets=48)
+
+
+def test_approx_sketches_degenerate_groups_survive(spark, tmp_path):
+    # group "Z": prices all NULL -> exact median has no row; group
+    # NULL: a null-unsafe equi-join would drop it. Both must survive
+    # with NULL q50_ok (the oracle's single GROUP BY keeps them).
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    flags = ["A"] * 6 + ["Z"] * 4 + [None] * 3
+    keys = list(range(1, 14))
+    prices = [100.0, 110.0, 120.0, 130.0, 140.0, 150.0] + [None] * 4 + [
+        50.0,
+        60.0,
+        70.0,
+    ]
+    tbl = pa.table(
+        {
+            "l_returnflag": pa.array(flags),
+            "l_orderkey": pa.array(keys, pa.int64()),
+            "l_extendedprice": pa.array(prices, pa.float64()),
+        }
+    )
+    pq.write_table(tbl, str(tmp_path / "lineitem.parquet"))
+    rows = {
+        r["l_returnflag"]: r
+        for r in QUERIES["agg_approx_sketches"](spark, str(tmp_path)).collect()
+    }
+    assert set(rows) == {"A", "Z", None}
+    assert rows["Z"]["exact_nd"] == 4
+    assert rows["Z"]["q50_ok"] is None
+    assert rows["Z"]["hll_ok"] is not None
+    assert rows[None]["exact_nd"] == 3
+    assert rows["A"]["q50_ok"] is True

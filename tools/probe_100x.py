@@ -429,17 +429,16 @@ def main() -> None:
         "strm_stream_join", "strm_stream_join@split"
     ):
         from wsprnet_scraper_spark.plans.streaming_q import (
+            _events_streams,
             _stream_join_side,
         )
 
         def drain_only(at: str) -> float:
             spark.catalog.clearCache()
-            raw_schema = spark.read.parquet(f"{at}/events.parquet").schema
+            streams = _events_streams(spark, at, 2)
             t0 = time.perf_counter()
-            for et, pre in (("click", "click"), ("error", "error")):
-                side = _stream_join_side(
-                    spark, f"{at}/events.parque[t]", raw_schema, et, pre
-                )
+            for et, stream in zip(("click", "error"), streams):
+                side = _stream_join_side(stream, et)
                 q = (
                     side.writeStream.format("noop")
                     .option(

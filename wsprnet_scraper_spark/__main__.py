@@ -28,19 +28,9 @@ deployment, not engine, and is not reproduced.
 from __future__ import annotations
 
 import argparse
-import shutil
 import sys
 import tempfile
 from pathlib import Path
-
-
-def _spooled_input(path: str, suffix: str) -> str:
-    """`-` = stdin: spool to a temp file so Spark can read it."""
-    if path != "-":
-        return path
-    tmp = Path(tempfile.mkdtemp(prefix="wspr_stdin_")) / f"input{suffix}"
-    tmp.write_text(sys.stdin.read())
-    return str(tmp)
 
 
 def cmd_enrich(args) -> int:
@@ -48,24 +38,29 @@ def cmd_enrich(args) -> int:
     from .session import get_session
 
     spark = get_session("wspr-enrich")
-    in_path = _spooled_input(args.input, ".csv" if args.csv else ".json")
-    is_csv = args.csv or in_path.endswith(".csv")
-    df = (
-        pipeline.parse_csv(spark, in_path)
-        if is_csv
-        else pipeline.parse_json(spark, in_path)
-    )
-    enriched = pipeline.enrich(pipeline.with_wd_time(df))
-    if args.output == "-":
-        out = Path(tempfile.mkdtemp(prefix="wspr_stdout_"))
-        pipeline.write_wire_csv(enriched, str(out))
-        for part in sorted(out.glob("part-*.csv")):
-            sys.stdout.write(part.read_text())
-        shutil.rmtree(out)
-    elif args.wire:
-        pipeline.write_wire_csv(enriched, args.output)
-    else:
-        enriched.write.mode("overwrite").parquet(args.output)
+    # `-` = stdin/stdout, spooled through one temp dir (Spark reads
+    # and writes paths, not pipes) that is removed on return or raise
+    with tempfile.TemporaryDirectory(prefix="wspr_enrich_") as tmp:
+        in_path = args.input
+        if in_path == "-":
+            in_path = f"{tmp}/input{'.csv' if args.csv else '.json'}"
+            Path(in_path).write_text(sys.stdin.read())
+        is_csv = args.csv or in_path.endswith(".csv")
+        df = (
+            pipeline.parse_csv(spark, in_path)
+            if is_csv
+            else pipeline.parse_json(spark, in_path)
+        )
+        enriched = pipeline.enrich(pipeline.with_wd_time(df))
+        if args.output == "-":
+            out = Path(tmp) / "out"
+            pipeline.write_wire_csv(enriched, str(out))
+            for part in sorted(out.glob("part-*.csv")):
+                sys.stdout.write(part.read_text())
+        elif args.wire:
+            pipeline.write_wire_csv(enriched, args.output)
+        else:
+            enriched.write.mode("overwrite").parquet(args.output)
     return 0
 
 

@@ -46,10 +46,26 @@ handles and the next call re-opens the parquet.
 The store is a CACHE, never a semantic change: a stored relation must
 be bit-identical to `build()`'s output (parquet round-trips the exact
 column values), so gate results are unchanged whichever tier serves.
+
+Query workdirs are the scratch root's third user, after the
+fingerprint-keyed relations and the unkeyed one-shot builds: a
+builder that writes files (a landing dir, a stream's sink and
+checkpoint, a format round-trip) runs inside
+`with workdir(spark, name, sf_dir) as work:`. Generation rule, per
+(session UUID, name, sf_dir), the key `registry.prepared` uses: a run
+that finishes deletes the previous generation; a run that raises
+deletes its own dir and keeps the previous one. Repeated runs hold
+one generation per key on disk, and a returned DataFrame reads files
+that stay valid until the same session runs the same builder over
+the same sf_dir again. A cached-plan builder runs again only after
+`clear_plan_cache`, so no cached plan scans a deleted generation.
+`clear_store_cache(drop_files=True)` deletes every generation with
+the root; process exit deletes the root.
 """
 
 from __future__ import annotations
 
+import contextlib
 import hashlib
 import os
 import shutil
@@ -97,6 +113,10 @@ def corpus_fingerprint(sf_dir: str, tables=("documents",)) -> str:
 # persistent tier, but process-private; deleted at process exit)
 _SCRATCH_ROOTS: dict = {}
 
+# (session uuid, builder name, sf_dir) -> that key's live `workdir`
+# generation
+_WORKDIRS: dict = {}
+
 
 def clear_store_cache(drop_files: bool = False) -> None:
     """Drop all in-memory handles. Scratch-tier PARQUET survives by
@@ -111,8 +131,9 @@ def clear_store_cache(drop_files: bool = False) -> None:
     cold-minus-warm split IS that rebuild cost — e.g. 18.8 s of
     dedup_minhash_cluster_incremental's 28.0 s cold at 100×).
     `drop_files=True` deletes the scratch dirs too (tests / explicit
-    disk reclamation) and clears the registry plan cache, whose
-    cached plans may scan the deleted files; process exit always
+    disk reclamation), every query workdir generation with them, and
+    clears the registry plan cache, whose cached plans may scan the
+    deleted files; process exit always
     cleans up via atexit."""
     _STORE_CACHE.clear()
     if drop_files:
@@ -121,6 +142,7 @@ def clear_store_cache(drop_files: bool = False) -> None:
         for root in _SCRATCH_ROOTS.values():
             shutil.rmtree(root, ignore_errors=True)
         _SCRATCH_ROOTS.clear()
+        _WORKDIRS.clear()
         clear_plan_cache()
 
 
@@ -174,6 +196,27 @@ def _scratch_root(app: str) -> str:
         _SCRATCH_ROOTS[app] = root
         atexit.register(shutil.rmtree, root, ignore_errors=True)
     return root
+
+
+@contextlib.contextmanager
+def workdir(spark, name: str, sf_dir: str):
+    """A fresh dir under the application's scratch root for one run of
+    the query builder `name` over sf_dir (module docstring: the
+    generation rule). Normal exit makes it the live generation of
+    (session, name, sf_dir) and deletes the previous one; an exception
+    deletes the new dir and keeps the previous generation."""
+    key = (spark._jsparkSession.sessionUUID(), name, sf_dir)
+    root = _scratch_root(spark.sparkContext.applicationId)
+    work = tempfile.mkdtemp(prefix=f"{name}_", dir=root)
+    try:
+        yield work
+    except BaseException:
+        shutil.rmtree(work, ignore_errors=True)
+        raise
+    prev = _WORKDIRS.get(key)
+    _WORKDIRS[key] = work
+    if prev is not None:
+        shutil.rmtree(prev, ignore_errors=True)
 
 
 def materialized(spark, sf_dir: str, kind: str, build, tables=("documents",)):

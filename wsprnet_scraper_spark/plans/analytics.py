@@ -4393,161 +4393,157 @@ def strm_changepoint_monitor(spark, sf_dir):
     snapshots cover in-process retries — the failure mode foreachBatch
     actually re-delivers; surviving a driver restart would persist
     the same k-bounded registers keyed by batch id.)"""
-    import atexit
     import os
-    import shutil
-    import tempfile
 
     from ..streaming import landing as landing_mod
     from ..streaming.landing import land_ordered_ndjson
 
-    work = tempfile.mkdtemp(prefix="wspr_cpstrm_")
-    atexit.register(shutil.rmtree, work, ignore_errors=True)
-    landing, results, ckpt = (
-        f"{work}/landing", f"{work}/results", f"{work}/ckpt"
-    )
-
-    ev = load_events(spark, sf_dir)
-    t = ev.select(
-        "event_id",
-        "event_type",
-        F.unix_micros("ts").alias("us"),
-        F.floor(F.col("value") * 100).cast("bigint").alias("cents"),
-    )
-    is_batch = F.col("event_id") % 10 == 0
-    # r14 (guide §1.2 — don't scan twice): ONE grouped pass calibrates
-    # the per-type reference AND yields the batch slice's us bounds,
-    # folding what used to be two full-events jobs (ref collect +
-    # land_ordered_ndjson's bounds agg) into one. ref_q's expression
-    # is byte-identical ((1e6·Σcents) div n over the standing rows);
-    # a type with no standing rows has _rn = 0, ref_q NULL, and is
-    # skipped — exactly the row the old filtered groupBy never had.
-    # The NULL event_type group is skipped too: the per-batch join is
-    # inner on ref types, so it never reaches the output, and a None
-    # key would break sorted(ref) and the per-type observe predicate.
-    stat_rows = (
-        t.groupBy("event_type")
-        .agg(
-            F.sum(F.when(~is_batch, F.col("cents"))).alias("_rs"),
-            F.count(F.when(~is_batch, F.lit(1))).alias("_rn"),
-            F.min(F.when(is_batch, F.col("us"))).alias("_blo"),
-            F.max(F.when(is_batch, F.col("us"))).alias("_bhi"),
+    with stores.workdir(spark, "strm_changepoint_monitor", sf_dir) as work:
+        landing, results, ckpt = (
+            f"{work}/landing", f"{work}/results", f"{work}/ckpt"
         )
-        .select(
+
+        ev = load_events(spark, sf_dir)
+        t = ev.select(
+            "event_id",
             "event_type",
-            F.expr("(1000000 * _rs) div _rn").cast("bigint").alias("ref_q"),
-            "_blo",
-            "_bhi",
+            F.unix_micros("ts").alias("us"),
+            F.floor(F.col("value") * 100).cast("bigint").alias("cents"),
         )
-        .collect()
-    )
-    ref = {
-        r["event_type"]: int(r["ref_q"])
-        for r in stat_rows
-        if r["ref_q"] is not None and r["event_type"] is not None
-    }
-    blos = [r["_blo"] for r in stat_rows if r["_blo"] is not None]
-    bhis = [r["_bhi"] for r in stat_rows if r["_bhi"] is not None]
-    bounds = (min(blos), max(bhis)) if blos else (None, None)
-
-    land_ordered_ndjson(
-        t.filter(is_batch).select("us", "event_id", "event_type", "cents"),
-        "us",
-        landing,
-        _STRM_FILES,
-        bounds=bounds,
-    )
-    os.makedirs(results, exist_ok=True)
-
-    state: dict = {}  # event_type -> (t_off, s_off)
-    snaps: dict = {}  # batch id -> pre-batch copy of `state`
-    # Observation metric layout: the ref types are known up front, so
-    # each batch's per-type (count, sum) deltas ride the WRITE job as
-    # observed metrics (r14 — was a second collect scanning bdf again;
-    # guide §1.2). Types absent from ref never reach the output (the
-    # off join is inner on ref types), so their deltas are dead state
-    # the old collect tracked and nothing ever read.
-    ref_types = sorted(ref)
-
-    def monitor_batch(bdf, bid):
-        import uuid as _uuid
-
-        from pyspark.sql import Observation
-
-        # at-least-once retry: restore pre-batch state, re-overwrite
-        landing_mod.snapshot_or_restore(state, snaps, bid)
-        off = spark.createDataFrame(
-            [
-                (et, state.get(et, (0, 0))[0], state.get(et, (0, 0))[1], rq)
-                for et, rq in ref.items()
-            ],
-            "event_type string, t_off bigint, s_off bigint, ref_q bigint",
+        is_batch = F.col("event_id") % 10 == 0
+        # r14 (guide §1.2 — don't scan twice): ONE grouped pass calibrates
+        # the per-type reference AND yields the batch slice's us bounds,
+        # folding what used to be two full-events jobs (ref collect +
+        # land_ordered_ndjson's bounds agg) into one. ref_q's expression
+        # is byte-identical ((1e6·Σcents) div n over the standing rows);
+        # a type with no standing rows has _rn = 0, ref_q NULL, and is
+        # skipped — exactly the row the old filtered groupBy never had.
+        # The NULL event_type group is skipped too: the per-batch join is
+        # inner on ref types, so it never reaches the output, and a None
+        # key would break sorted(ref) and the per-type observe predicate.
+        stat_rows = (
+            t.groupBy("event_type")
+            .agg(
+                F.sum(F.when(~is_batch, F.col("cents"))).alias("_rs"),
+                F.count(F.when(~is_batch, F.lit(1))).alias("_rn"),
+                F.min(F.when(is_batch, F.col("us"))).alias("_blo"),
+                F.max(F.when(is_batch, F.col("us"))).alias("_bhi"),
+            )
+            .select(
+                "event_type",
+                F.expr("(1000000 * _rs) div _rn").cast("bigint").alias("ref_q"),
+                "_blo",
+                "_bhi",
+            )
+            .collect()
         )
-        obs = Observation(f"cp_{bid}_{_uuid.uuid4().hex[:8]}")
-        metrics = []
-        for i, et in enumerate(ref_types):
-            hit = F.col("event_type") == F.lit(et)
-            metrics.append(
-                F.sum(F.when(hit, F.lit(1)).otherwise(F.lit(0)))
-                .cast("bigint")
-                .alias(f"n{i}")
-            )
-            metrics.append(
-                F.sum(F.when(hit, F.col("cents")).otherwise(F.lit(0)))
-                .cast("bigint")
-                .alias(f"s{i}")
-            )
-        observed = bdf.observe(obs, *metrics)
-        wn = W.partitionBy("event_type").orderBy("us", "event_id")
-        wl = wn.rowsBetween(W.unboundedPreceding, W.currentRow)
-        local = observed.select(
-            "event_type",
+        ref = {
+            r["event_type"]: int(r["ref_q"])
+            for r in stat_rows
+            if r["ref_q"] is not None and r["event_type"] is not None
+        }
+        blos = [r["_blo"] for r in stat_rows if r["_blo"] is not None]
+        bhis = [r["_bhi"] for r in stat_rows if r["_bhi"] is not None]
+        bounds = (min(blos), max(bhis)) if blos else (None, None)
+
+        land_ordered_ndjson(
+            t.filter(is_batch).select("us", "event_id", "event_type", "cents"),
             "us",
-            "event_id",
-            F.row_number().over(wn).cast("bigint").alias("_lrn"),
-            F.sum("cents").over(wl).alias("_lps"),
+            landing,
+            _STRM_FILES,
+            bounds=bounds,
         )
-        out = local.join(F.broadcast(off), "event_type").select(
-            "event_id",
-            "event_type",
-            (F.col("t_off") + F.col("_lrn")).alias("t_idx"),
-            (
-                F.lit(1000000).cast("bigint")
-                * (F.col("s_off") + F.col("_lps"))
-                - (F.col("t_off") + F.col("_lrn")) * F.col("ref_q")
-            ).cast("bigint").alias("g"),
-        )
-        out.write.mode("overwrite").parquet(f"{results}/b{bid:05d}")
-        got = obs.get
-        for i, et in enumerate(ref_types):
-            dn, ds = got.get(f"n{i}"), got.get(f"s{i}")
-            t0, s0 = state.get(et, (0, 0))
-            state[et] = (t0 + int(dn or 0), s0 + int(ds or 0))
+        os.makedirs(results, exist_ok=True)
 
-    q = (
-        spark.readStream.schema(
-            "us long, event_id long, event_type string, cents long"
+        state: dict = {}  # event_type -> (t_off, s_off)
+        snaps: dict = {}  # batch id -> pre-batch copy of `state`
+        # Observation metric layout: the ref types are known up front, so
+        # each batch's per-type (count, sum) deltas ride the WRITE job as
+        # observed metrics (r14 — was a second collect scanning bdf again;
+        # guide §1.2). Types absent from ref never reach the output (the
+        # off join is inner on ref types), so their deltas are dead state
+        # the old collect tracked and nothing ever read.
+        ref_types = sorted(ref)
+
+        def monitor_batch(bdf, bid):
+            import uuid as _uuid
+
+            from pyspark.sql import Observation
+
+            # at-least-once retry: restore pre-batch state, re-overwrite
+            landing_mod.snapshot_or_restore(state, snaps, bid)
+            off = spark.createDataFrame(
+                [
+                    (et, state.get(et, (0, 0))[0], state.get(et, (0, 0))[1], rq)
+                    for et, rq in ref.items()
+                ],
+                "event_type string, t_off bigint, s_off bigint, ref_q bigint",
+            )
+            obs = Observation(f"cp_{bid}_{_uuid.uuid4().hex[:8]}")
+            metrics = []
+            for i, et in enumerate(ref_types):
+                hit = F.col("event_type") == F.lit(et)
+                metrics.append(
+                    F.sum(F.when(hit, F.lit(1)).otherwise(F.lit(0)))
+                    .cast("bigint")
+                    .alias(f"n{i}")
+                )
+                metrics.append(
+                    F.sum(F.when(hit, F.col("cents")).otherwise(F.lit(0)))
+                    .cast("bigint")
+                    .alias(f"s{i}")
+                )
+            observed = bdf.observe(obs, *metrics)
+            wn = W.partitionBy("event_type").orderBy("us", "event_id")
+            wl = wn.rowsBetween(W.unboundedPreceding, W.currentRow)
+            local = observed.select(
+                "event_type",
+                "us",
+                "event_id",
+                F.row_number().over(wn).cast("bigint").alias("_lrn"),
+                F.sum("cents").over(wl).alias("_lps"),
+            )
+            out = local.join(F.broadcast(off), "event_type").select(
+                "event_id",
+                "event_type",
+                (F.col("t_off") + F.col("_lrn")).alias("t_idx"),
+                (
+                    F.lit(1000000).cast("bigint")
+                    * (F.col("s_off") + F.col("_lps"))
+                    - (F.col("t_off") + F.col("_lrn")) * F.col("ref_q")
+                ).cast("bigint").alias("g"),
+            )
+            out.write.mode("overwrite").parquet(f"{results}/b{bid:05d}")
+            got = obs.get
+            for i, et in enumerate(ref_types):
+                dn, ds = got.get(f"n{i}"), got.get(f"s{i}")
+                t0, s0 = state.get(et, (0, 0))
+                state[et] = (t0 + int(dn or 0), s0 + int(ds or 0))
+
+        q = (
+            spark.readStream.schema(
+                "us long, event_id long, event_type string, cents long"
+            )
+            .option("maxFilesPerTrigger", 1)
+            .json(landing)
+            .writeStream.foreachBatch(monitor_batch)
+            .option("checkpointLocation", ckpt)
+            .trigger(availableNow=True)
+            .start()
         )
-        .option("maxFilesPerTrigger", 1)
-        .json(landing)
-        .writeStream.foreachBatch(monitor_batch)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    # explicit dir list, not a glob: a glob path makes the reader
-    # probe it for streaming-sink metadata and log a spurious warning.
-    # r14: the typed empty results seed is gone (one parquet write per
-    # invocation); the explicit read schema covers empty batch dirs,
-    # and a fully empty results dir degrades to a typed empty frame.
-    out_schema = "event_id bigint, event_type string, t_idx bigint, g bigint"
-    batch_dirs = sorted(os.listdir(results))
-    if not batch_dirs:
-        return spark.createDataFrame([], out_schema)
-    return spark.read.schema(out_schema).parquet(
-        *[f"{results}/{s}" for s in batch_dirs]
-    ).select("event_id", "event_type", "t_idx", "g")
+        q.awaitTermination()
+        # explicit dir list, not a glob: a glob path makes the reader
+        # probe it for streaming-sink metadata and log a spurious warning.
+        # r14: the typed empty results seed is gone (one parquet write per
+        # invocation); the explicit read schema covers empty batch dirs,
+        # and a fully empty results dir degrades to a typed empty frame.
+        out_schema = "event_id bigint, event_type string, t_idx bigint, g bigint"
+        batch_dirs = sorted(os.listdir(results))
+        if not batch_dirs:
+            return spark.createDataFrame([], out_schema)
+        return spark.read.schema(out_schema).parquet(
+            *[f"{results}/{s}" for s in batch_dirs]
+        ).select("event_id", "event_type", "t_idx", "g")
 
 
 @register(

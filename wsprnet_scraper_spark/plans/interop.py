@@ -11,12 +11,9 @@ phase at scale.
 
 from __future__ import annotations
 
-import atexit
-import shutil
-import tempfile
-
 from pyspark.sql import functions as F
 
+from ..operators import stores
 from ..sources import load, load_events
 from .registry import register
 
@@ -141,19 +138,18 @@ def src_orc_roundtrip(spark, sf_dir):
     source/sink), then aggregated — the rollup must be identical to
     the same aggregate on the parquet original, proving the roundtrip
     is lossless including timestamp/decimal fidelity."""
-    work = tempfile.mkdtemp(prefix="wspr_orc_")
-    atexit.register(shutil.rmtree, work, ignore_errors=True)
-    ev = load_events(spark, sf_dir)
-    ev.select("event_id", "ts", "event_type", "value").write.mode(
-        "overwrite"
-    ).orc(f"{work}/events_orc")
-    back = spark.read.orc(f"{work}/events_orc")
-    return back.groupBy("event_type").agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum(F.col("value").cast("decimal(12,2)"))
-        .cast("double")
-        .alias("sum_value"),
-    )
+    with stores.workdir(spark, "src_orc_roundtrip", sf_dir) as work:
+        ev = load_events(spark, sf_dir)
+        ev.select("event_id", "ts", "event_type", "value").write.mode(
+            "overwrite"
+        ).orc(f"{work}/events_orc")
+        back = spark.read.orc(f"{work}/events_orc")
+        return back.groupBy("event_type").agg(
+            F.count(F.lit(1)).alias("n"),
+            F.sum(F.col("value").cast("decimal(12,2)"))
+            .cast("double")
+            .alias("sum_value"),
+        )
 
 
 @register(
@@ -177,30 +173,29 @@ def src_xml_roundtrip(spark, sf_dir):
     shortest-representation toString parses back to the identical
     bit pattern. The enterprise-interchange leg of the format matrix
     (parquet/ORC/JSON/CSV/binary/XML)."""
-    work = tempfile.mkdtemp(prefix="wspr_xml_")
-    atexit.register(shutil.rmtree, work, ignore_errors=True)
-    ev = load_events(spark, sf_dir)
-    ev.select(
-        "event_id",
-        "event_type",
-        F.unix_micros("ts").alias("us"),
-        "value",
-    ).write.format("xml").option("rootTag", "events").option(
-        "rowTag", "event"
-    ).mode("overwrite").save(f"{work}/events_xml")
-    back = (
-        spark.read.format("xml")
-        .option("rowTag", "event")
-        .schema("event_id long, event_type string, us long, value double")
-        .load(f"{work}/events_xml")
-    )
-    return back.groupBy("event_type").agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum(F.col("value").cast("decimal(12,2)"))
-        .cast("double")
-        .alias("sum_value"),
-        F.max("us").alias("max_us"),
-    )
+    with stores.workdir(spark, "src_xml_roundtrip", sf_dir) as work:
+        ev = load_events(spark, sf_dir)
+        ev.select(
+            "event_id",
+            "event_type",
+            F.unix_micros("ts").alias("us"),
+            "value",
+        ).write.format("xml").option("rootTag", "events").option(
+            "rowTag", "event"
+        ).mode("overwrite").save(f"{work}/events_xml")
+        back = (
+            spark.read.format("xml")
+            .option("rowTag", "event")
+            .schema("event_id long, event_type string, us long, value double")
+            .load(f"{work}/events_xml")
+        )
+        return back.groupBy("event_type").agg(
+            F.count(F.lit(1)).alias("n"),
+            F.sum(F.col("value").cast("decimal(12,2)"))
+            .cast("double")
+            .alias("sum_value"),
+            F.max("us").alias("max_us"),
+        )
 
 
 # ------------------------------------------------------------- binaryFile
@@ -223,29 +218,28 @@ def src_binaryfile(spark, sf_dir):
     lake uses — and length/md5 must match the source-of-truth parquet
     byte for byte. Texts here are ASCII, so DuckDB's strlen/md5 over
     the VARCHAR equals Spark's over the written bytes."""
-    work = tempfile.mkdtemp(prefix="wspr_binf_")
-    atexit.register(shutil.rmtree, work, ignore_errors=True)
-    blob_dir = f"{work}/blobs"
-    import os
+    with stores.workdir(spark, "src_binaryfile", sf_dir) as work:
+        blob_dir = f"{work}/blobs"
+        import os
 
-    os.makedirs(blob_dir, exist_ok=True)
-    d = load(spark, sf_dir, "documents").filter(F.col("doc_id") % 5 == 0)
+        os.makedirs(blob_dir, exist_ok=True)
+        d = load(spark, sf_dir, "documents").filter(F.col("doc_id") % 5 == 0)
 
-    def _write_blobs(rows, _dir=blob_dir):
-        # runs on executors: each partition writes its own files
-        for r in rows:
-            with open(f"{_dir}/doc_{r['doc_id']}.bin", "wb") as fh:
-                fh.write(r["text"].encode("utf-8"))
+        def _write_blobs(rows, _dir=blob_dir):
+            # runs on executors: each partition writes its own files
+            for r in rows:
+                with open(f"{_dir}/doc_{r['doc_id']}.bin", "wb") as fh:
+                    fh.write(r["text"].encode("utf-8"))
 
-    d.select("doc_id", "text").foreachPartition(_write_blobs)
-    back = spark.read.format("binaryFile").load(f"{blob_dir}/*.bin")
-    return back.select(
-        F.regexp_extract(F.col("path"), r"doc_(\d+)\.bin$", 1)
-        .cast("bigint")
-        .alias("doc_id"),
-        F.col("length").cast("bigint").alias("n_bytes"),
-        F.md5(F.col("content")).alias("content_md5"),
-    )
+        d.select("doc_id", "text").foreachPartition(_write_blobs)
+        back = spark.read.format("binaryFile").load(f"{blob_dir}/*.bin")
+        return back.select(
+            F.regexp_extract(F.col("path"), r"doc_(\d+)\.bin$", 1)
+            .cast("bigint")
+            .alias("doc_id"),
+            F.col("length").cast("bigint").alias("n_bytes"),
+            F.md5(F.col("content")).alias("content_md5"),
+        )
 
 
 def _cdc_state_versions(work: str, below: int | None = None) -> list[int]:
@@ -430,44 +424,43 @@ def strm_cdc_apply(spark, sf_dir):
     import glob as _glob
     import os
 
-    work = tempfile.mkdtemp(prefix="wspr_cdcstrm_")
-    atexit.register(shutil.rmtree, work, ignore_errors=True)
-    landing, ckpt = f"{work}/landing", f"{work}/ckpt"
-    os.makedirs(landing)
+    with stores.workdir(spark, "strm_cdc_apply", sf_dir) as work:
+        landing, ckpt = f"{work}/landing", f"{work}/ckpt"
+        os.makedirs(landing)
 
-    for i, gen in enumerate(_cdc_generations(spark, sf_dir)):
-        tmp = f"{work}/gen-{i}"
-        gen.coalesce(1).write.mode("overwrite").json(tmp)
-        (src,) = _glob.glob(f"{tmp}/part-*.json")
-        dst = f"{landing}/cdc-{i:03d}.json"
-        os.rename(src, dst)
-        os.utime(dst, (1_700_000_000 + i, 1_700_000_000 + i))
+        for i, gen in enumerate(_cdc_generations(spark, sf_dir)):
+            tmp = f"{work}/gen-{i}"
+            gen.coalesce(1).write.mode("overwrite").json(tmp)
+            (src,) = _glob.glob(f"{tmp}/part-*.json")
+            dst = f"{landing}/cdc-{i:03d}.json"
+            os.rename(src, dst)
+            os.utime(dst, (1_700_000_000 + i, 1_700_000_000 + i))
 
-    def merge_batch(bdf, bid):
-        _cdc_merge_batch(spark, work, bdf, bid)
+        def merge_batch(bdf, bid):
+            _cdc_merge_batch(spark, work, bdf, bid)
 
-    q = (
-        spark.readStream.schema(
-            "k long, status string, price decimal(14,2), seq int, op string"
+        q = (
+            spark.readStream.schema(
+                "k long, status string, price decimal(14,2), seq int, op string"
+            )
+            .option("maxFilesPerTrigger", 1)
+            .json(landing)
+            .writeStream.foreachBatch(merge_batch)
+            .option("checkpointLocation", ckpt)
+            .trigger(availableNow=True)
+            .start()
         )
-        .option("maxFilesPerTrigger", 1)
-        .json(landing)
-        .writeStream.foreachBatch(merge_batch)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    final = _cdc_state_versions(work)[-1]
-    return (
-        spark.read.parquet(f"{work}/state_v{final}")
-        .filter(F.col("op") != "D")
-        .select(
-            F.col("k").alias("o_orderkey"),
-            "status",
-            F.col("price").cast("double").alias("price"),
+        q.awaitTermination()
+        final = _cdc_state_versions(work)[-1]
+        return (
+            spark.read.parquet(f"{work}/state_v{final}")
+            .filter(F.col("op") != "D")
+            .select(
+                F.col("k").alias("o_orderkey"),
+                "status",
+                F.col("price").cast("double").alias("price"),
+            )
         )
-    )
 
 
 @register(
@@ -496,23 +489,22 @@ def src_parquet_merge_schema(spark, sf_dir):
     both the row totals and the per-column NULL structure. (Schema
     merging is a one-time footer pass over file metadata, not data;
     on a real lake the merged schema comes from the table catalog.)"""
-    work = tempfile.mkdtemp(prefix="wspr_evolve_")
-    atexit.register(shutil.rmtree, work, ignore_errors=True)
-    ev = load_events(spark, sf_dir)
-    ev.filter(F.col("event_id") % 2 == 0).select("event_id", "value").write.mode(
-        "overwrite"
-    ).parquet(f"{work}/data/gen=1")
-    ev.filter(F.col("event_id") % 2 == 1).select(
-        "event_id", "event_type"
-    ).write.mode("overwrite").parquet(f"{work}/data/gen=2")
-    merged = spark.read.option("mergeSchema", "true").parquet(f"{work}/data")
-    return merged.agg(
-        F.count(F.lit(1)).alias("n_rows"),
-        F.count("value").alias("n_with_value"),
-        F.count("event_type").alias("n_with_type"),
-        F.sum(F.col("value").cast("decimal(12,2)")).cast("double").alias("sum_value"),
-        F.count_distinct("event_type").alias("n_types"),
-    )
+    with stores.workdir(spark, "src_parquet_merge_schema", sf_dir) as work:
+        ev = load_events(spark, sf_dir)
+        ev.filter(F.col("event_id") % 2 == 0).select("event_id", "value").write.mode(
+            "overwrite"
+        ).parquet(f"{work}/data/gen=1")
+        ev.filter(F.col("event_id") % 2 == 1).select(
+            "event_id", "event_type"
+        ).write.mode("overwrite").parquet(f"{work}/data/gen=2")
+        merged = spark.read.option("mergeSchema", "true").parquet(f"{work}/data")
+        return merged.agg(
+            F.count(F.lit(1)).alias("n_rows"),
+            F.count("value").alias("n_with_value"),
+            F.count("event_type").alias("n_with_type"),
+            F.sum(F.col("value").cast("decimal(12,2)")).cast("double").alias("sum_value"),
+            F.count_distinct("event_type").alias("n_types"),
+        )
 
 
 @register(
@@ -538,26 +530,25 @@ def src_partitioned_prune(spark, sf_dir):
     scan is asserted in tests/test_partition_pruning.py for this
     exact layout. The aggregate proves the pruned read still sees
     every row of the selected days."""
-    work = tempfile.mkdtemp(prefix="wspr_part_")
-    atexit.register(shutil.rmtree, work, ignore_errors=True)
-    ev = load_events(spark, sf_dir)
-    ev.withColumn("day", F.date_format("ts", "yyyy-MM-dd")).write.mode(
-        "overwrite"
-    ).partitionBy("day").parquet(f"{work}/by_day")
-    part = spark.read.parquet(f"{work}/by_day")
-    days = [
-        r.day
-        for r in part.select("day").distinct().orderBy("day").limit(3).collect()
-    ]
-    return (
-        part.filter(F.col("day").isin(days))
-        .groupBy("day")
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.count_distinct("user_id").alias("n_users"),
+    with stores.workdir(spark, "src_partitioned_prune", sf_dir) as work:
+        ev = load_events(spark, sf_dir)
+        ev.withColumn("day", F.date_format("ts", "yyyy-MM-dd")).write.mode(
+            "overwrite"
+        ).partitionBy("day").parquet(f"{work}/by_day")
+        part = spark.read.parquet(f"{work}/by_day")
+        days = [
+            r.day
+            for r in part.select("day").distinct().orderBy("day").limit(3).collect()
+        ]
+        return (
+            part.filter(F.col("day").isin(days))
+            .groupBy("day")
+            .agg(
+                F.count(F.lit(1)).alias("n"),
+                F.count_distinct("user_id").alias("n_users"),
+            )
+            .select(F.col("day").cast("string").alias("day"), "n", "n_users")
         )
-        .select(F.col("day").cast("string").alias("day"), "n", "n_users")
-    )
 
 
 @register(
@@ -578,38 +569,37 @@ def src_json_corrupt(spark, sf_dir):
     instead of failing the batch — the only mode that works when one
     poison record must not kill a 100 TB backfill. The aggregate pins
     the good/corrupt split and that good rows parse completely."""
-    work = tempfile.mkdtemp(prefix="wspr_corrupt_")
-    atexit.register(shutil.rmtree, work, ignore_errors=True)
-    d = load(spark, sf_dir, "documents")
-    lines = d.select(
-        F.when(
-            F.col("doc_id") % 7 == 0,
-            F.concat(
-                F.lit('{"doc_id": '),
-                F.col("doc_id").cast("string"),
-                F.lit(", TRUNC"),
-            ),
+    with stores.workdir(spark, "src_json_corrupt", sf_dir) as work:
+        d = load(spark, sf_dir, "documents")
+        lines = d.select(
+            F.when(
+                F.col("doc_id") % 7 == 0,
+                F.concat(
+                    F.lit('{"doc_id": '),
+                    F.col("doc_id").cast("string"),
+                    F.lit(", TRUNC"),
+                ),
+            )
+            .otherwise(F.to_json(F.struct("doc_id", "n_chars")))
+            .alias("value")
         )
-        .otherwise(F.to_json(F.struct("doc_id", "n_chars")))
-        .alias("value")
-    )
-    lines.write.mode("overwrite").text(f"{work}/landing")
-    parsed = spark.read.schema(
-        "doc_id LONG, n_chars LONG, _corrupt_record STRING"
-    ).json(f"{work}/landing")
-    return parsed.agg(
-        F.sum(F.when(F.col("_corrupt_record").isNull(), 1).otherwise(0))
-        .cast("long")
-        .alias("n_good"),
-        F.sum(F.when(F.col("_corrupt_record").isNotNull(), 1).otherwise(0))
-        .cast("long")
-        .alias("n_corrupt"),
-        F.sum(
-            F.when(F.col("_corrupt_record").isNull(), F.col("n_chars")).otherwise(0)
+        lines.write.mode("overwrite").text(f"{work}/landing")
+        parsed = spark.read.schema(
+            "doc_id LONG, n_chars LONG, _corrupt_record STRING"
+        ).json(f"{work}/landing")
+        return parsed.agg(
+            F.sum(F.when(F.col("_corrupt_record").isNull(), 1).otherwise(0))
+            .cast("long")
+            .alias("n_good"),
+            F.sum(F.when(F.col("_corrupt_record").isNotNull(), 1).otherwise(0))
+            .cast("long")
+            .alias("n_corrupt"),
+            F.sum(
+                F.when(F.col("_corrupt_record").isNull(), F.col("n_chars")).otherwise(0)
+            )
+            .cast("long")
+            .alias("good_chars"),
         )
-        .cast("long")
-        .alias("good_chars"),
-    )
 
 
 @register(
@@ -639,34 +629,33 @@ def join_dpp_partitioned(spark, sf_dir):
     100 TB this is the difference between scanning 3 days and
     scanning the table whenever the calendar slice comes from a JOIN
     instead of a literal."""
-    work = tempfile.mkdtemp(prefix="wspr_dpp_")
-    atexit.register(shutil.rmtree, work, ignore_errors=True)
-    ev = load_events(spark, sf_dir)
-    ev.withColumn("day", F.date_format("ts", "yyyy-MM-dd")).write.mode(
-        "overwrite"
-    ).partitionBy("day").parquet(f"{work}/fact")
-    from pyspark.sql import Window as W
+    with stores.workdir(spark, "join_dpp_partitioned", sf_dir) as work:
+        ev = load_events(spark, sf_dir)
+        ev.withColumn("day", F.date_format("ts", "yyyy-MM-dd")).write.mode(
+            "overwrite"
+        ).partitionBy("day").parquet(f"{work}/fact")
+        from pyspark.sql import Window as W
 
-    dim = (
-        ev.select(F.date_format("ts", "yyyy-MM-dd").alias("day"))
-        .distinct()
-        .withColumn("idx", F.dense_rank().over(W.orderBy("day")))
-    )
-    dim.write.mode("overwrite").parquet(f"{work}/dim")
-    fact = spark.read.parquet(f"{work}/fact")
-    dim_r = spark.read.parquet(f"{work}/dim")
-    return (
-        fact.join(dim_r, "day")
-        .filter(F.col("idx") <= 3)
-        .groupBy("day")
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum(F.col("value").cast("decimal(12,2)"))
-            .cast("double")
-            .alias("sum_value"),
+        dim = (
+            ev.select(F.date_format("ts", "yyyy-MM-dd").alias("day"))
+            .distinct()
+            .withColumn("idx", F.dense_rank().over(W.orderBy("day")))
         )
-        .select(F.col("day").cast("string").alias("day"), "n", "sum_value")
-    )
+        dim.write.mode("overwrite").parquet(f"{work}/dim")
+        fact = spark.read.parquet(f"{work}/fact")
+        dim_r = spark.read.parquet(f"{work}/dim")
+        return (
+            fact.join(dim_r, "day")
+            .filter(F.col("idx") <= 3)
+            .groupBy("day")
+            .agg(
+                F.count(F.lit(1)).alias("n"),
+                F.sum(F.col("value").cast("decimal(12,2)"))
+                .cast("double")
+                .alias("sum_value"),
+            )
+            .select(F.col("day").cast("string").alias("day"), "n", "sum_value")
+        )
 
 
 @register(
@@ -694,19 +683,18 @@ def snk_rtbf_delete(spark, sf_dir):
     gone and everything else survived."""
     from ..sources.sinks import delete_keys
 
-    work = tempfile.mkdtemp(prefix="wspr_rtbf_")
-    atexit.register(shutil.rmtree, work, ignore_errors=True)
-    path = f"{work}/events_store"
-    ev = load_events(spark, sf_dir)
-    ev.write.mode("overwrite").parquet(path)
-    doomed = ev.select("user_id").distinct().filter(F.col("user_id") % 13 == 0)
-    stats = delete_keys(spark, path, "user_id", doomed)
-    after = spark.read.parquet(path)
-    return after.groupBy("event_type").agg(
-        F.lit(stats["rows_before"]).cast("long").alias("rows_before"),
-        F.count(F.lit(1)).alias("n_after"),
-        F.count_distinct("user_id").alias("users_after"),
-    ).select("event_type", "rows_before", "n_after", "users_after")
+    with stores.workdir(spark, "snk_rtbf_delete", sf_dir) as work:
+        path = f"{work}/events_store"
+        ev = load_events(spark, sf_dir)
+        ev.write.mode("overwrite").parquet(path)
+        doomed = ev.select("user_id").distinct().filter(F.col("user_id") % 13 == 0)
+        stats = delete_keys(spark, path, "user_id", doomed)
+        after = spark.read.parquet(path)
+        return after.groupBy("event_type").agg(
+            F.lit(stats["rows_before"]).cast("long").alias("rows_before"),
+            F.count(F.lit(1)).alias("n_after"),
+            F.count_distinct("user_id").alias("users_after"),
+        ).select("event_type", "rows_before", "n_after", "users_after")
 
 
 @register(
@@ -730,8 +718,11 @@ def join_bucketed_colocated(spark, sf_dir):
     broadcast hiding it at toy scale; test_bucketing.py asserts the
     no-exchange plan property. The oracle answers from the plain
     tables — the layout must not change a single row."""
+    import atexit
     import hashlib
     import re
+    import shutil
+    import tempfile
 
     # basename for readability + a full-path hash for identity: two
     # different directories sharing a basename (…/a/sf0.01 vs
@@ -742,6 +733,8 @@ def join_bucketed_colocated(spark, sf_dir):
     li_t, o_t = f"li_bkt_{tag}", f"o_bkt_{tag}"
     cat = spark.catalog
     if not cat.tableExists(li_t) or not cat.tableExists(o_t):
+        # a catalog table kept per sf_dir, not a per-run stores.workdir:
+        # tableExists would outlive a reclaimed generation
         work = tempfile.mkdtemp(prefix="wspr_bkt_")
         atexit.register(shutil.rmtree, work, ignore_errors=True)
         li = load(spark, sf_dir, "lineitem", parallel="never")
@@ -805,40 +798,39 @@ def snk_dynamic_partition_overwrite(spark, sf_dir):
     oracle states the expected union (original days ∪ restated first
     day) declaratively. At 100 TB the restatement touches exactly the
     restated directories — IO ∝ corrected slice, not table size."""
-    work = tempfile.mkdtemp(prefix="wspr_dpo_")
-    atexit.register(shutil.rmtree, work, ignore_errors=True)
-    path = f"{work}/by_day"
-    ev = load_events(spark, sf_dir).withColumn(
-        "day", F.date_format("ts", "yyyy-MM-dd")
-    )
-    ev.write.mode("overwrite").partitionBy("day").parquet(path)
-    # Restate the earliest day that HAS purchases: an empty corrected
-    # slice would make the dynamic overwrite a no-op (it touches no
-    # partitions) while a min(day)-based oracle would still drop that
-    # day's non-purchase rows — a divergence the day choice removes by
-    # construction. No purchases anywhere -> no restatement, and the
-    # oracle's fd IS NULL branch keeps every row to match.
-    first_day = (
-        ev.filter(F.col("event_type") == "purchase")
-        .agg(F.min("day"))
-        .collect()[0][0]
-    )
-    if first_day is not None:
-        (
-            ev.filter(
-                (F.col("day") == first_day)
-                & (F.col("event_type") == "purchase")
-            )
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("day")
-            .parquet(path)
+    with stores.workdir(spark, "snk_dynamic_partition_overwrite", sf_dir) as work:
+        path = f"{work}/by_day"
+        ev = load_events(spark, sf_dir).withColumn(
+            "day", F.date_format("ts", "yyyy-MM-dd")
         )
-    back = spark.read.parquet(path)
-    return back.groupBy("day").agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum(F.col("value").cast("decimal(12,2)"))
-        .cast("string")
-        .cast("double")
-        .alias("sum_value"),
-    ).select(F.col("day").cast("string").alias("day"), "n", "sum_value")
+        ev.write.mode("overwrite").partitionBy("day").parquet(path)
+        # Restate the earliest day that HAS purchases: an empty corrected
+        # slice would make the dynamic overwrite a no-op (it touches no
+        # partitions) while a min(day)-based oracle would still drop that
+        # day's non-purchase rows — a divergence the day choice removes by
+        # construction. No purchases anywhere -> no restatement, and the
+        # oracle's fd IS NULL branch keeps every row to match.
+        first_day = (
+            ev.filter(F.col("event_type") == "purchase")
+            .agg(F.min("day"))
+            .collect()[0][0]
+        )
+        if first_day is not None:
+            (
+                ev.filter(
+                    (F.col("day") == first_day)
+                    & (F.col("event_type") == "purchase")
+                )
+                .write.mode("overwrite")
+                .option("partitionOverwriteMode", "dynamic")
+                .partitionBy("day")
+                .parquet(path)
+            )
+        back = spark.read.parquet(path)
+        return back.groupBy("day").agg(
+            F.count(F.lit(1)).alias("n"),
+            F.sum(F.col("value").cast("decimal(12,2)"))
+            .cast("string")
+            .cast("double")
+            .alias("sum_value"),
+        ).select(F.col("day").cast("string").alias("day"), "n", "sum_value")

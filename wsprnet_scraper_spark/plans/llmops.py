@@ -546,163 +546,159 @@ def strm_minhash_dedup(spark, sf_dir):
     sink, and the standing-signature read excludes the current bid,
     so a retried batch reproduces its first attempt instead of
     double-appending or matching against its own signatures."""
-    import atexit
     import os
-    import shutil
-    import tempfile
 
     from ..streaming.landing import land_ordered_ndjson
 
-    work = tempfile.mkdtemp(prefix="wspr_mhstrm_")
-    atexit.register(shutil.rmtree, work, ignore_errors=True)
-    landing, sink, results, ckpt = (
-        f"{work}/landing", f"{work}/sink", f"{work}/results", f"{work}/ckpt"
-    )
-
-    d = load(spark, sf_dir, "documents")
-    is_batch = F.col("doc_id") % 10 == 0
-    corpus, batch = d.filter(~is_batch), d.filter(is_batch)
-
-    land_ordered_ndjson(batch.select("doc_id", "text"), "doc_id", landing, 2)
-
-    # Corpus seed from the standing signature store (r10 verdict
-    # task #1, shared kind with dedup_minhash_cluster_incremental):
-    # with the store warm this is a signature-row read — doc x bands
-    # rows of fixed-width columns — instead of re-shingling and
-    # re-hashing the standing corpus's full text (10.3 s of the
-    # entry's 18.7 s at the 100x probe was that rebuild). r14: the
-    # standing side READS the store parquet directly instead of
-    # COPYING it into the sink every invocation (the copy was a
-    # corpus-sized write per run — pure fixture cost; at 100x it
-    # copies the whole signature store to serve two micro-batches).
-    # The sink now holds only the per-batch appends.
-    def _build_csig():
-        corp_sh = dedup.word_shingles(
-            corpus, "doc_id", "text", 3, distinct=False
+    with stores.workdir(spark, "strm_minhash_dedup", sf_dir) as work:
+        landing, sink, results, ckpt = (
+            f"{work}/landing", f"{work}/sink", f"{work}/results", f"{work}/ckpt"
         )
-        return dedup.minhash_signatures(corp_sh)
 
-    seed_df, seed_path = stores.materialized_entry(
-        spark, sf_dir, f"{_MHSIG_KIND}_sig", _build_csig
-    )
-    seed_df = seed_df.withColumn("is_corpus", F.lit(True))
-    os.makedirs(sink, exist_ok=True)
-    os.makedirs(results, exist_ok=True)
+        d = load(spark, sf_dir, "documents")
+        is_batch = F.col("doc_id") % 10 == 0
+        corpus, batch = d.filter(~is_batch), d.filter(is_batch)
 
-    def dedup_batch(bdf, bid):
-        sh = dedup.word_shingles(bdf, "doc_id", "text", 3, distinct=False)
-        cur = dedup.minhash_signatures(sh).cache()
-        try:
-            prior = [
-                f"{sink}/{s}"
-                for s in sorted(os.listdir(sink))
-                if s != f"b{bid:05d}"
-            ]
-            standing = seed_df
-            if prior:
-                standing = standing.unionByName(spark.read.parquet(*prior))
-            near = (
-                cur.alias("a")
-                .join(
-                    standing.alias("s"),
-                    (F.col("a.band") == F.col("s.band"))
-                    & (F.col("a.sig") == F.col("s.sig")),
-                )
-                .groupBy(F.col("a.doc").alias("bdoc"))
-                .agg(
-                    F.min(
-                        F.when(F.col("s.is_corpus"), F.col("s.doc"))
-                    ).alias("corp_min"),
-                    F.countDistinct(
-                        F.when(F.col("s.is_corpus"), F.col("s.doc"))
-                    ).cast("long").alias("corp_n"),
-                    F.min(
-                        F.when(~F.col("s.is_corpus"), F.col("s.doc"))
-                    ).alias("prior_min"),
-                )
+        land_ordered_ndjson(batch.select("doc_id", "text"), "doc_id", landing, 2)
+
+        # Corpus seed from the standing signature store (r10 verdict
+        # task #1, shared kind with dedup_minhash_cluster_incremental):
+        # with the store warm this is a signature-row read — doc x bands
+        # rows of fixed-width columns — instead of re-shingling and
+        # re-hashing the standing corpus's full text (10.3 s of the
+        # entry's 18.7 s at the 100x probe was that rebuild). r14: the
+        # standing side READS the store parquet directly instead of
+        # COPYING it into the sink every invocation (the copy was a
+        # corpus-sized write per run — pure fixture cost; at 100x it
+        # copies the whole signature store to serve two micro-batches).
+        # The sink now holds only the per-batch appends.
+        def _build_csig():
+            corp_sh = dedup.word_shingles(
+                corpus, "doc_id", "text", 3, distinct=False
             )
-            inb = (
-                cur.alias("a")
-                .join(
-                    cur.alias("b"),
-                    (F.col("a.band") == F.col("b.band"))
-                    & (F.col("a.sig") == F.col("b.sig"))
-                    & (F.col("b.doc") < F.col("a.doc")),
-                )
-                .groupBy(F.col("a.doc").alias("bdoc"))
-                .agg(F.min(F.col("b.doc")).alias("inb_min"))
-            )
-            docs = cur.select(F.col("doc").alias("doc_id")).distinct()
-            out = (
-                docs.join(near, docs["doc_id"] == near["bdoc"], "left")
-                .drop("bdoc")
-                .join(inb, docs["doc_id"] == inb["bdoc"], "left")
-                .drop("bdoc")
-                .select(
-                    "doc_id",
-                    F.col("corp_min").cast("bigint").alias("dup_of_corpus_id"),
-                    F.coalesce("corp_n", F.lit(0))
-                    .cast("bigint")
-                    .alias("n_corpus_matches"),
-                    F.least(
-                        F.coalesce(F.col("prior_min"), F.col("inb_min")),
-                        F.coalesce(F.col("inb_min"), F.col("prior_min")),
-                    ).cast("bigint").alias("dup_in_batch_id"),
-                    F.when(F.col("corp_min").isNotNull(), "dup_of_corpus")
-                    .when(
-                        F.col("prior_min").isNotNull()
-                        | F.col("inb_min").isNotNull(),
-                        "dup_in_batch",
+            return dedup.minhash_signatures(corp_sh)
+
+        seed_df, seed_path = stores.materialized_entry(
+            spark, sf_dir, f"{_MHSIG_KIND}_sig", _build_csig
+        )
+        seed_df = seed_df.withColumn("is_corpus", F.lit(True))
+        os.makedirs(sink, exist_ok=True)
+        os.makedirs(results, exist_ok=True)
+
+        def dedup_batch(bdf, bid):
+            sh = dedup.word_shingles(bdf, "doc_id", "text", 3, distinct=False)
+            cur = dedup.minhash_signatures(sh).cache()
+            try:
+                prior = [
+                    f"{sink}/{s}"
+                    for s in sorted(os.listdir(sink))
+                    if s != f"b{bid:05d}"
+                ]
+                standing = seed_df
+                if prior:
+                    standing = standing.unionByName(spark.read.parquet(*prior))
+                near = (
+                    cur.alias("a")
+                    .join(
+                        standing.alias("s"),
+                        (F.col("a.band") == F.col("s.band"))
+                        & (F.col("a.sig") == F.col("s.sig")),
                     )
-                    .otherwise("new_unique")
-                    .alias("status"),
+                    .groupBy(F.col("a.doc").alias("bdoc"))
+                    .agg(
+                        F.min(
+                            F.when(F.col("s.is_corpus"), F.col("s.doc"))
+                        ).alias("corp_min"),
+                        F.countDistinct(
+                            F.when(F.col("s.is_corpus"), F.col("s.doc"))
+                        ).cast("long").alias("corp_n"),
+                        F.min(
+                            F.when(~F.col("s.is_corpus"), F.col("s.doc"))
+                        ).alias("prior_min"),
+                    )
                 )
+                inb = (
+                    cur.alias("a")
+                    .join(
+                        cur.alias("b"),
+                        (F.col("a.band") == F.col("b.band"))
+                        & (F.col("a.sig") == F.col("b.sig"))
+                        & (F.col("b.doc") < F.col("a.doc")),
+                    )
+                    .groupBy(F.col("a.doc").alias("bdoc"))
+                    .agg(F.min(F.col("b.doc")).alias("inb_min"))
+                )
+                docs = cur.select(F.col("doc").alias("doc_id")).distinct()
+                out = (
+                    docs.join(near, docs["doc_id"] == near["bdoc"], "left")
+                    .drop("bdoc")
+                    .join(inb, docs["doc_id"] == inb["bdoc"], "left")
+                    .drop("bdoc")
+                    .select(
+                        "doc_id",
+                        F.col("corp_min").cast("bigint").alias("dup_of_corpus_id"),
+                        F.coalesce("corp_n", F.lit(0))
+                        .cast("bigint")
+                        .alias("n_corpus_matches"),
+                        F.least(
+                            F.coalesce(F.col("prior_min"), F.col("inb_min")),
+                            F.coalesce(F.col("inb_min"), F.col("prior_min")),
+                        ).cast("bigint").alias("dup_in_batch_id"),
+                        F.when(F.col("corp_min").isNotNull(), "dup_of_corpus")
+                        .when(
+                            F.col("prior_min").isNotNull()
+                            | F.col("inb_min").isNotNull(),
+                            "dup_in_batch",
+                        )
+                        .otherwise("new_unique")
+                        .alias("status"),
+                    )
+                )
+                out.write.mode("overwrite").parquet(f"{results}/b{bid:05d}")
+                cur.withColumn("is_corpus", F.lit(False)).write.mode(
+                    "overwrite"
+                ).parquet(f"{sink}/b{bid:05d}")
+            finally:
+                cur.unpersist()
+
+        # Shuffle partitions for the drain sized from landing + standing
+        # store + sink bytes (streaming_q._stream_parts_conf; the store
+        # path carries the corpus-sized seed, so the 100x corpus still
+        # sizes up): every micro-batch's joins and its per-batch parquet
+        # sink write inherit the count — at test SFs this stops 32-way
+        # writes of KB-sized batches (measured 7.0 -> 4.8 s for the entry).
+        from .streaming_q import _stream_parts_conf
+
+        with scoped_conf(spark, _stream_parts_conf(landing, seed_path, sink)):
+            q = (
+                spark.readStream.schema("doc_id long, text string")
+                .option("maxFilesPerTrigger", 1)
+                .json(landing)
+                .writeStream.foreachBatch(dedup_batch)
+                .option("checkpointLocation", ckpt)
+                .trigger(availableNow=True)
+                .start()
             )
-            out.write.mode("overwrite").parquet(f"{results}/b{bid:05d}")
-            cur.withColumn("is_corpus", F.lit(False)).write.mode(
-                "overwrite"
-            ).parquet(f"{sink}/b{bid:05d}")
-        finally:
-            cur.unpersist()
-
-    # Shuffle partitions for the drain sized from landing + standing
-    # store + sink bytes (streaming_q._stream_parts_conf; the store
-    # path carries the corpus-sized seed, so the 100x corpus still
-    # sizes up): every micro-batch's joins and its per-batch parquet
-    # sink write inherit the count — at test SFs this stops 32-way
-    # writes of KB-sized batches (measured 7.0 -> 4.8 s for the entry).
-    from .streaming_q import _stream_parts_conf
-
-    with scoped_conf(spark, _stream_parts_conf(landing, seed_path, sink)):
-        q = (
-            spark.readStream.schema("doc_id long, text string")
-            .option("maxFilesPerTrigger", 1)
-            .json(landing)
-            .writeStream.foreachBatch(dedup_batch)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
+            q.awaitTermination()
+        # explicit dir list, not a glob: a glob path makes the reader
+        # probe it for streaming-sink metadata and log a spurious warning.
+        # r14: the typed empty seed is gone (it cost one parquet write per
+        # invocation) — the read's EXPLICIT schema already covers empty or
+        # part-less batch dirs, and a fully empty results dir (no batch
+        # ever fired) degrades to a typed empty frame here.
+        out_schema = (
+            "doc_id bigint, dup_of_corpus_id bigint, n_corpus_matches bigint,"
+            " dup_in_batch_id bigint, status string"
         )
-        q.awaitTermination()
-    # explicit dir list, not a glob: a glob path makes the reader
-    # probe it for streaming-sink metadata and log a spurious warning.
-    # r14: the typed empty seed is gone (it cost one parquet write per
-    # invocation) — the read's EXPLICIT schema already covers empty or
-    # part-less batch dirs, and a fully empty results dir (no batch
-    # ever fired) degrades to a typed empty frame here.
-    out_schema = (
-        "doc_id bigint, dup_of_corpus_id bigint, n_corpus_matches bigint,"
-        " dup_in_batch_id bigint, status string"
-    )
-    batch_dirs = sorted(os.listdir(results))
-    if not batch_dirs:
-        return spark.createDataFrame([], out_schema)
-    return spark.read.schema(out_schema).parquet(
-        *[f"{results}/{s}" for s in batch_dirs]
-    ).select(
-        "doc_id", "dup_of_corpus_id", "n_corpus_matches",
-        "dup_in_batch_id", "status",
-    )
+        batch_dirs = sorted(os.listdir(results))
+        if not batch_dirs:
+            return spark.createDataFrame([], out_schema)
+        return spark.read.schema(out_schema).parquet(
+            *[f"{results}/{s}" for s in batch_dirs]
+        ).select(
+            "doc_id", "dup_of_corpus_id", "n_corpus_matches",
+            "dup_in_batch_id", "status",
+        )
 
 
 @register(
@@ -2767,10 +2763,7 @@ def strm_semantic_dedup(spark, sf_dir):
     and of the vector sink, and the standing read excludes the
     current bid, so a retried batch reproduces its first attempt.
     """
-    import atexit
     import os
-    import shutil
-    import tempfile
 
     from ..operators.similarity import (
         _as_double,
@@ -2782,208 +2775,207 @@ def strm_semantic_dedup(spark, sf_dir):
 
     from ..streaming.landing import land_ordered_ndjson
 
-    work = tempfile.mkdtemp(prefix="wspr_semstrm_")
-    atexit.register(shutil.rmtree, work, ignore_errors=True)
-    landing, sink, results, ckpt = (
-        f"{work}/landing", f"{work}/sink", f"{work}/results", f"{work}/ckpt"
-    )
-
-    emb = load(spark, sf_dir, "embeddings")
-    is_batch = F.col("vec_id") % 10 == 0
-    corpus, batch = emb.filter(~is_batch), emb.filter(is_batch)
-    corpus_n = corpus.count()
-    # k and iters computed ONCE, shared by the trainer calls below
-    # AND the standing-seed kind string (ADVICE r11: the kind
-    # re-derived them as separate literals, so a future tune at the
-    # call site that missed the string would silently serve a stale
-    # standing seed).
-    trainer_iters = 2
-    if corpus_n <= similarity.FLAT_ASSIGN_MAX:
-        k_flat = max(8, corpus_n // 256)
-        seed_kind = f"semass_mod10_flat{k_flat}_i{trainer_iters}"
-        cents = train_kmeans_df(
-            corpus, k_flat, trainer_iters, f"{sf_dir}:strm_inc"
+    with stores.workdir(spark, "strm_semantic_dedup", sf_dir) as work:
+        landing, sink, results, ckpt = (
+            f"{work}/landing", f"{work}/sink", f"{work}/results", f"{work}/ckpt"
         )
 
-        def assign(pre):
-            return assign_cells_df(pre, cents, carry=("v", "n2"))
-
-    else:  # two-level composite cells — the batch twin's scale branch
-        kb = similarity._balanced_k(corpus_n, 256)
-        seed_kind = f"semass_mod10_2l{kb}_i{trainer_iters}"
-        coarse, fine = similarity.train_twolevel_df(
-            corpus, kb, kb, trainer_iters, f"{sf_dir}:strm_inc2l"
-        )
-        books = similarity._fine_books(fine)
-
-        def assign(pre):
-            routed = assign_cells_df(pre, coarse, carry=("v", "n2")).select(
-                "vec_id", F.col("cell").alias("ccell"), "v", "n2"
-            )
-            base = routed.join(books, "ccell", "left").select(
-                "vec_id",
-                "ccell",
-                F.coalesce(
-                    similarity._argmax_fold(
-                        F.col("book"), F.col("v"), F.col("n2")
-                    ),
-                    F.lit(-1),
-                )
-                .cast("long")
-                .alias("fcell"),
-                "v",
-                "n2",
-            )
-            return base.select(
-                "vec_id",
-                similarity._composite_cell(kb).alias("cell"),
-                "v",
-                "n2",
+        emb = load(spark, sf_dir, "embeddings")
+        is_batch = F.col("vec_id") % 10 == 0
+        corpus, batch = emb.filter(~is_batch), emb.filter(is_batch)
+        corpus_n = corpus.count()
+        # k and iters computed ONCE, shared by the trainer calls below
+        # AND the standing-seed kind string (ADVICE r11: the kind
+        # re-derived them as separate literals, so a future tune at the
+        # call site that missed the string would silently serve a stale
+        # standing seed).
+        trainer_iters = 2
+        if corpus_n <= similarity.FLAT_ASSIGN_MAX:
+            k_flat = max(8, corpus_n // 256)
+            seed_kind = f"semass_mod10_flat{k_flat}_i{trainer_iters}"
+            cents = train_kmeans_df(
+                corpus, k_flat, trainer_iters, f"{sf_dir}:strm_inc"
             )
 
-    # land the batch as two id-ordered NDJSON files (file order =
-    # id order, pinned by explicit mtimes so the file source cannot
-    # reorder them)
-    land_ordered_ndjson(
-        batch.select("vec_id", F.col("embedding").cast("array<double>")),
-        "vec_id",
-        landing,
-        2,
-    )
+            def assign(pre):
+                return assign_cells_df(pre, cents, carry=("v", "n2"))
 
-    # Corpus seed (assignments + vectors) from the standing store
-    # (r11, the _MHSIG_KIND pattern): with the store warm this is a
-    # parquet read instead of re-running the corpus-wide fold
-    # assignment each run. The kind encodes the dispatch branch and
-    # its k rule — the two branches produce different cell ids.
-    # r14: the standing side reads the store parquet DIRECTLY instead
-    # of copying it into the sink per invocation (the strm_minhash
-    # rationale — the copy was a corpus-sized write per run); the
-    # sink holds only the per-batch appends.
-    def _build_seed():
-        pre_corpus = corpus.select(
-            "vec_id", _as_double(F.col("embedding")).alias("v")
-        ).withColumn("n2", _norm2(F.col("v")))
-        return assign(pre_corpus)
-
-    # seed_kind (computed beside the trainer calls above) encodes
-    # EVERY parameter the seed depends on (stores.py contract):
-    # dispatch branch, k, and the trainer's iteration count.
-    seed_df, seed_path = stores.materialized_entry(
-        spark, sf_dir, seed_kind, _build_seed, tables=("embeddings",)
-    )
-    seed_df = seed_df.withColumn("is_corpus", F.lit(True))
-    os.makedirs(sink, exist_ok=True)
-
-    def dedup_batch(bdf, bid):
-        pre = bdf.select(
-            "vec_id", _as_double(F.col("embedding")).alias("v")
-        ).withColumn("n2", _norm2(F.col("v")))
-        cur = assign(pre).cache()
-        try:
-            prior = [
-                f"{sink}/{s}"
-                for s in sorted(os.listdir(sink))
-                if s != f"b{bid:05d}"
-            ]
-            standing = seed_df
-            if prior:
-                standing = standing.unionByName(spark.read.parquet(*prior))
-            near = (
-                cur.alias("a")
-                .join(standing.alias("s"), F.col("a.cell") == F.col("s.cell"))
-                .filter(
-                    _dot(F.col("a.v"), F.col("s.v"))
-                    / (F.sqrt(F.col("a.n2")) * F.sqrt(F.col("s.n2")))
-                    >= 0.2
-                )
-                .groupBy(F.col("a.vec_id").alias("vid"))
-                .agg(
-                    F.min(
-                        F.when(F.col("s.is_corpus"), F.col("s.vec_id"))
-                    ).alias("corp_min"),
-                    F.sum(
-                        F.when(F.col("s.is_corpus"), 1).otherwise(0)
-                    ).cast("long").alias("corp_n"),
-                    F.min(
-                        F.when(~F.col("s.is_corpus"), F.col("s.vec_id"))
-                    ).alias("prior_min"),
-                )
+        else:  # two-level composite cells — the batch twin's scale branch
+            kb = similarity._balanced_k(corpus_n, 256)
+            seed_kind = f"semass_mod10_2l{kb}_i{trainer_iters}"
+            coarse, fine = similarity.train_twolevel_df(
+                corpus, kb, kb, trainer_iters, f"{sf_dir}:strm_inc2l"
             )
-            inb = (
-                cur.alias("a")
-                .join(
-                    cur.alias("b"),
-                    (F.col("a.cell") == F.col("b.cell"))
-                    & (F.col("b.vec_id") < F.col("a.vec_id")),
+            books = similarity._fine_books(fine)
+
+            def assign(pre):
+                routed = assign_cells_df(pre, coarse, carry=("v", "n2")).select(
+                    "vec_id", F.col("cell").alias("ccell"), "v", "n2"
                 )
-                .filter(
-                    _dot(F.col("a.v"), F.col("b.v"))
-                    / (F.sqrt(F.col("a.n2")) * F.sqrt(F.col("b.n2")))
-                    >= 0.2
-                )
-                .groupBy(F.col("a.vec_id").alias("vid"))
-                .agg(F.min(F.col("b.vec_id")).alias("inb_min"))
-            )
-            out = (
-                cur.join(near, cur["vec_id"] == near["vid"], "left")
-                .drop("vid")
-                .join(inb, cur["vec_id"] == inb["vid"], "left")
-                .drop("vid")
-                .select(
+                base = routed.join(books, "ccell", "left").select(
                     "vec_id",
-                    "cell",
-                    F.col("corp_min").alias("dup_of_corpus_id"),
-                    F.coalesce(F.col("corp_n"), F.lit(0))
+                    "ccell",
+                    F.coalesce(
+                        similarity._argmax_fold(
+                            F.col("book"), F.col("v"), F.col("n2")
+                        ),
+                        F.lit(-1),
+                    )
                     .cast("long")
-                    .alias("n_corpus_near"),
-                    F.least(
-                        F.coalesce(F.col("prior_min"), F.col("inb_min")),
-                        F.coalesce(F.col("inb_min"), F.col("prior_min")),
-                    ).alias("dup_in_batch_id"),
-                    F.when(
-                        F.col("corp_min").isNotNull(), F.lit("dup_of_corpus")
-                    )
-                    .when(
-                        F.col("prior_min").isNotNull()
-                        | F.col("inb_min").isNotNull(),
-                        F.lit("dup_in_batch"),
-                    )
-                    .otherwise(F.lit("new_unique"))
-                    .alias("status"),
+                    .alias("fcell"),
+                    "v",
+                    "n2",
                 )
-            )
-            out.write.mode("overwrite").parquet(f"{results}/b{bid:05d}")
-            cur.withColumn("is_corpus", F.lit(False)).write.mode(
-                "overwrite"
-            ).parquet(f"{sink}/b{bid:05d}")
-        finally:
-            cur.unpersist()
+                return base.select(
+                    "vec_id",
+                    similarity._composite_cell(kb).alias("cell"),
+                    "v",
+                    "n2",
+                )
 
-    # sized drain partitions — the strm_minhash_dedup rationale (the
-    # standing store path carries the corpus vector seed, so volume
-    # scales with corpus)
-    from .streaming_q import _stream_parts_conf
-
-    with scoped_conf(spark, _stream_parts_conf(landing, seed_path, sink)):
-        q = (
-            spark.readStream.schema("vec_id long, embedding array<double>")
-            .option("maxFilesPerTrigger", 1)
-            .json(landing)
-            .writeStream.foreachBatch(dedup_batch)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
+        # land the batch as two id-ordered NDJSON files (file order =
+        # id order, pinned by explicit mtimes so the file source cannot
+        # reorder them)
+        land_ordered_ndjson(
+            batch.select("vec_id", F.col("embedding").cast("array<double>")),
+            "vec_id",
+            landing,
+            2,
         )
-        q.awaitTermination()
-    # explicit dir list, not a glob: a glob path makes the reader
-    # probe it for streaming-sink metadata and log a spurious warning
-    return spark.read.parquet(
-        *[f"{results}/{s}" for s in sorted(os.listdir(results))]
-    ).select(
-        "vec_id", "cell", "dup_of_corpus_id", "n_corpus_near",
-        "dup_in_batch_id", "status",
-    )
+
+        # Corpus seed (assignments + vectors) from the standing store
+        # (r11, the _MHSIG_KIND pattern): with the store warm this is a
+        # parquet read instead of re-running the corpus-wide fold
+        # assignment each run. The kind encodes the dispatch branch and
+        # its k rule — the two branches produce different cell ids.
+        # r14: the standing side reads the store parquet DIRECTLY instead
+        # of copying it into the sink per invocation (the strm_minhash
+        # rationale — the copy was a corpus-sized write per run); the
+        # sink holds only the per-batch appends.
+        def _build_seed():
+            pre_corpus = corpus.select(
+                "vec_id", _as_double(F.col("embedding")).alias("v")
+            ).withColumn("n2", _norm2(F.col("v")))
+            return assign(pre_corpus)
+
+        # seed_kind (computed beside the trainer calls above) encodes
+        # EVERY parameter the seed depends on (stores.py contract):
+        # dispatch branch, k, and the trainer's iteration count.
+        seed_df, seed_path = stores.materialized_entry(
+            spark, sf_dir, seed_kind, _build_seed, tables=("embeddings",)
+        )
+        seed_df = seed_df.withColumn("is_corpus", F.lit(True))
+        os.makedirs(sink, exist_ok=True)
+
+        def dedup_batch(bdf, bid):
+            pre = bdf.select(
+                "vec_id", _as_double(F.col("embedding")).alias("v")
+            ).withColumn("n2", _norm2(F.col("v")))
+            cur = assign(pre).cache()
+            try:
+                prior = [
+                    f"{sink}/{s}"
+                    for s in sorted(os.listdir(sink))
+                    if s != f"b{bid:05d}"
+                ]
+                standing = seed_df
+                if prior:
+                    standing = standing.unionByName(spark.read.parquet(*prior))
+                near = (
+                    cur.alias("a")
+                    .join(standing.alias("s"), F.col("a.cell") == F.col("s.cell"))
+                    .filter(
+                        _dot(F.col("a.v"), F.col("s.v"))
+                        / (F.sqrt(F.col("a.n2")) * F.sqrt(F.col("s.n2")))
+                        >= 0.2
+                    )
+                    .groupBy(F.col("a.vec_id").alias("vid"))
+                    .agg(
+                        F.min(
+                            F.when(F.col("s.is_corpus"), F.col("s.vec_id"))
+                        ).alias("corp_min"),
+                        F.sum(
+                            F.when(F.col("s.is_corpus"), 1).otherwise(0)
+                        ).cast("long").alias("corp_n"),
+                        F.min(
+                            F.when(~F.col("s.is_corpus"), F.col("s.vec_id"))
+                        ).alias("prior_min"),
+                    )
+                )
+                inb = (
+                    cur.alias("a")
+                    .join(
+                        cur.alias("b"),
+                        (F.col("a.cell") == F.col("b.cell"))
+                        & (F.col("b.vec_id") < F.col("a.vec_id")),
+                    )
+                    .filter(
+                        _dot(F.col("a.v"), F.col("b.v"))
+                        / (F.sqrt(F.col("a.n2")) * F.sqrt(F.col("b.n2")))
+                        >= 0.2
+                    )
+                    .groupBy(F.col("a.vec_id").alias("vid"))
+                    .agg(F.min(F.col("b.vec_id")).alias("inb_min"))
+                )
+                out = (
+                    cur.join(near, cur["vec_id"] == near["vid"], "left")
+                    .drop("vid")
+                    .join(inb, cur["vec_id"] == inb["vid"], "left")
+                    .drop("vid")
+                    .select(
+                        "vec_id",
+                        "cell",
+                        F.col("corp_min").alias("dup_of_corpus_id"),
+                        F.coalesce(F.col("corp_n"), F.lit(0))
+                        .cast("long")
+                        .alias("n_corpus_near"),
+                        F.least(
+                            F.coalesce(F.col("prior_min"), F.col("inb_min")),
+                            F.coalesce(F.col("inb_min"), F.col("prior_min")),
+                        ).alias("dup_in_batch_id"),
+                        F.when(
+                            F.col("corp_min").isNotNull(), F.lit("dup_of_corpus")
+                        )
+                        .when(
+                            F.col("prior_min").isNotNull()
+                            | F.col("inb_min").isNotNull(),
+                            F.lit("dup_in_batch"),
+                        )
+                        .otherwise(F.lit("new_unique"))
+                        .alias("status"),
+                    )
+                )
+                out.write.mode("overwrite").parquet(f"{results}/b{bid:05d}")
+                cur.withColumn("is_corpus", F.lit(False)).write.mode(
+                    "overwrite"
+                ).parquet(f"{sink}/b{bid:05d}")
+            finally:
+                cur.unpersist()
+
+        # sized drain partitions — the strm_minhash_dedup rationale (the
+        # standing store path carries the corpus vector seed, so volume
+        # scales with corpus)
+        from .streaming_q import _stream_parts_conf
+
+        with scoped_conf(spark, _stream_parts_conf(landing, seed_path, sink)):
+            q = (
+                spark.readStream.schema("vec_id long, embedding array<double>")
+                .option("maxFilesPerTrigger", 1)
+                .json(landing)
+                .writeStream.foreachBatch(dedup_batch)
+                .option("checkpointLocation", ckpt)
+                .trigger(availableNow=True)
+                .start()
+            )
+            q.awaitTermination()
+        # explicit dir list, not a glob: a glob path makes the reader
+        # probe it for streaming-sink metadata and log a spurious warning
+        return spark.read.parquet(
+            *[f"{results}/{s}" for s in sorted(os.listdir(results))]
+        ).select(
+            "vec_id", "cell", "dup_of_corpus_id", "n_corpus_near",
+            "dup_in_batch_id", "status",
+        )
 
 
 @register("sim_topk_2level", _sim_topk_2level_oracle(),

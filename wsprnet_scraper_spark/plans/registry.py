@@ -82,8 +82,11 @@ ORACLE_BOUND: dict[str, tuple[str, int]] = {}
 # DataFrames are immutable logical plans — re-executing one re-reads
 # the source files, so correctness is unaffected. Streaming queries
 # (strm_*) are never cached: their builders run real micro-batch jobs
-# with side effects (landing dirs, memory sinks), and a cached result
-# DataFrame would skip the stream instead of re-running it.
+# with side effects (a `stores.workdir` generation, memory sinks), and
+# a cached result DataFrame would skip the stream instead of
+# re-running it. A cached builder's workdir generation has the same
+# key as its plan, so it is reclaimed only by the rebuild that follows
+# `clear_plan_cache`.
 #
 # Layout: {applicationId: {(session uuid, *key): df}}. A DataFrame is
 # bound to the session that built it (its conf, its streams manager),

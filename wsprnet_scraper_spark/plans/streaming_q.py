@@ -17,25 +17,11 @@ import uuid
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
+from ..operators import stores
 from ..session import scoped_conf
 from ..sources import load_events
+from ..sources.tables import events_ts
 from .registry import register
-
-# strm_dedup_watermark's current workdir: reclaimed on the next
-# invocation, and at process exit (registered once below).
-_WM_WORK: str | None = None
-
-
-def _wm_cleanup_at_exit() -> None:
-    import shutil
-
-    if _WM_WORK is not None:
-        shutil.rmtree(_WM_WORK, ignore_errors=True)
-
-
-import atexit as _atexit
-
-_atexit.register(_wm_cleanup_at_exit)
 
 _money = "CAST(value AS DECIMAL(12,2))"
 
@@ -119,23 +105,23 @@ _ROCKSDB_STATE = {
 }
 
 
-def _norm_ts(stream, raw_schema):
-    """Normalize events.ts to TimestampType on a (streaming) frame.
-
-    The driver's generator has shipped ts as TIMESTAMP(NANOS)->Long
-    (nanosAsLong), naive timestamp[us]->TIMESTAMP_NTZ (a session
-    missing the inferTimestampNTZ=false conf), or plain TIMESTAMP.
-    Watermarks/windows need TIMESTAMP; the UTC session makes the NTZ
-    reinterpretation wall-clock-exact vs the DuckDB oracle.
-    """
-    from pyspark.sql import types as T
-
-    ts_type = raw_schema["ts"].dataType
-    if isinstance(ts_type, T.LongType):
-        return stream.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-    if isinstance(ts_type, T.TimestampNTZType):
-        return stream.withColumn("ts", F.col("ts").cast(T.TimestampType()))
-    return stream
+def _events_streams(spark, sf_dir, n: int = 1) -> list:
+    """`n` independent readStreams over sf_dir's events table, ts
+    normalized (`sources.tables.events_ts`). They share one schema
+    read: each read is a Spark job. The [t] glob is load-bearing: for
+    a non-glob path FileStreamSource force-sets basePath to the file
+    itself, which the parquet relation rejects ("Option 'basePath'
+    must be a directory"); a glob leaves basePath at the parent
+    directory."""
+    schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
+    return [
+        events_ts(
+            spark.readStream.schema(schema).parquet(
+                f"{sf_dir}/events.parque[t]"
+            )
+        )
+        for _ in range(n)
+    ]
 
 
 @register(
@@ -245,15 +231,7 @@ def strm_microbatch(spark, sf_dir):
     memory sink (complete mode). Must equal the batch/oracle result —
     Spark's unified model, and the engine's micro-batch ingest shape
     (ref loop: wsprnet-scraper.sh:435-442)."""
-    from pyspark.sql import types as T
-
-    raw_schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
-    # the [t] glob is load-bearing: for a non-glob path FileStreamSource
-    # force-sets basePath to the file itself, which the parquet relation
-    # rejects ("Option 'basePath' must be a directory"); a glob leaves
-    # basePath at the parent directory
-    stream = spark.readStream.schema(raw_schema).parquet(f"{sf_dir}/events.parque[t]")
-    stream = _norm_ts(stream, raw_schema)
+    [stream] = _events_streams(spark, sf_dir)
     agg = stream.groupBy(F.window("ts", "2 minutes").alias("w")).agg(
         F.count(F.lit(1)).alias("n")
     )
@@ -288,11 +266,7 @@ def strm_watermark(spark, sf_dir):
     10-minute watermark + tumbling windows in APPEND mode — only
     windows finalized by the watermark (win_end <= max(ts) - 10 min)
     are emitted. The oracle restates exactly that closure condition."""
-    from pyspark.sql import types as T
-
-    raw_schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
-    stream = spark.readStream.schema(raw_schema).parquet(f"{sf_dir}/events.parque[t]")
-    stream = _norm_ts(stream, raw_schema)
+    [stream] = _events_streams(spark, sf_dir)
     agg = (
         stream.withWatermark("ts", "10 minutes")
         .groupBy(F.window("ts", "2 minutes").alias("w"))
@@ -338,46 +312,31 @@ def strm_dedup_watermark(spark, sf_dir):
     heap; RocksDB spills state to local disk — the configuration a
     100 TB streaming dedup actually deploys). Conf is set for the
     query start and restored after."""
-    import shutil
-    import tempfile
-
-    raw_schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
-
-    def src(shift_s: int):
-        s = spark.readStream.schema(raw_schema).parquet(
-            f"{sf_dir}/events.parque[t]"
-        )
-        s = _norm_ts(s, raw_schema)
-        return s.select(
+    shifted = [
+        s.select(
             "event_id", (F.col("ts") + F.expr(f"INTERVAL {shift_s} SECONDS")).alias("ts")
         )
-
-    merged = src(0).union(src(1))
-    dd = merged.withWatermark("ts", "10 minutes").dropDuplicatesWithinWatermark(
-        ["event_id"]
+        for shift_s, s in enumerate(_events_streams(spark, sf_dir, 2))
+    ]
+    dd = (
+        shifted[0]
+        .union(shifted[1])
+        .withWatermark("ts", "10 minutes")
+        .dropDuplicatesWithinWatermark(["event_id"])
     )
-    # One workdir per builder invocation, the PREVIOUS generation
-    # reclaimed only after this invocation's query has finished
-    # (ADVICE r12: reclaiming on re-entry invalidated a prior
-    # invocation's returned DataFrame for the whole of this run's
-    # stream execution; deferring keeps generation N readable until
-    # generation N+1 can actually be handed out). Rationale for
-    # reclaiming at all (r12 review): bench/probe protocols run this
-    # builder 3-5 times per entry, and at the 100x corpus each run
-    # writes a ~100M-row output + a RocksDB checkpoint — atexit-only
-    # cleanup accumulated gigabytes of dead output for the life of
-    # the process. The LAST workdir is reclaimed at exit.
-    global _WM_WORK
-    prev_work = _WM_WORK
-    work = tempfile.mkdtemp(prefix="wspr_dedup_wm_")
-    _WM_WORK = work
     # RocksDB provider + changelog checkpointing (_ROCKSDB_STATE);
     # state partitions sized to the (doubled) input volume — each
     # RocksDB instance costs native-db setup + per-commit work, so
-    # instance count should track state bytes, not local cores
+    # instance count should track state bytes, not local cores.
+    # The workdir's previous generation is reclaimed once this run's
+    # query has finished (stores.workdir): bench/probe protocols run
+    # this builder 3-5 times per entry, and at the 100x corpus each
+    # run writes a ~100M-row output + a RocksDB checkpoint.
     events = f"{sf_dir}/events.parquet"
-    with scoped_conf(
-        spark, {**_ROCKSDB_STATE, **_stream_parts_conf(events, events)}
+    state_conf = {**_ROCKSDB_STATE, **_stream_parts_conf(events, events)}
+    with (
+        stores.workdir(spark, "strm_dedup_watermark", sf_dir) as work,
+        scoped_conf(spark, state_conf),
     ):
         q = (
             dd.select("event_id")
@@ -389,13 +348,6 @@ def strm_dedup_watermark(spark, sf_dir):
             .start()
         )
         q.awaitTermination()
-    # this run succeeded: generation N-1's parquet is now superseded.
-    # Contract: the returned DataFrame reads THIS generation's files
-    # and stays valid only until the builder runs again (single-
-    # generation lifetime; the sequential gate/bench protocols never
-    # hold a result across a rebuild).
-    if prev_work is not None:
-        shutil.rmtree(prev_work, ignore_errors=True)
     return spark.read.parquet(f"{work}/out").select("event_id")
 
 
@@ -422,30 +374,22 @@ def strm_ingest_e2e(spark, sf_dir):
     enrichment of the same spots with duplicates collapsed — the
     at-least-once + PK-dedup contract (wsprnet-scraper.sh:106-122,
     SURVEY §2.9)."""
-    import atexit
-    import shutil
-    import tempfile
 
     from ..streaming import start_ingest
     from .synth import synth_spots
 
-    work = tempfile.mkdtemp(prefix="wspr_ingest_q_")
-    # repeated runs (bench warm-ups, oracle gates) must not accumulate
-    # orphaned spot data under /tmp (ADVICE r1): the workdir is
-    # removed at interpreter exit, after the returned frame can no
-    # longer be re-executed by the harness
-    atexit.register(shutil.rmtree, work, ignore_errors=True)
-    landing, sink, ckpt = f"{work}/landing", f"{work}/sink", f"{work}/ckpt"
-    spots = synth_spots(spark, sf_dir)
-    # two identical landings = a replayed upload; NDJSON via the JSON
-    # writer (numbers round-trip: shortest-repr doubles reparse exactly)
-    spots.coalesce(4).write.mode("append").json(landing)
-    spots.coalesce(4).write.mode("append").json(landing)
-    q = start_ingest(spark, landing, sink, ckpt, available_now=True)
-    q.awaitTermination()
-    return spark.read.parquet(sink).select(
-        "Spotnum", "wd_time", "wd_band", "wd_rx_az", "wd_tx_az"
-    )
+    with stores.workdir(spark, "strm_ingest_e2e", sf_dir) as work:
+        landing, sink, ckpt = f"{work}/landing", f"{work}/sink", f"{work}/ckpt"
+        spots = synth_spots(spark, sf_dir)
+        # two identical landings = a replayed upload; NDJSON via the JSON
+        # writer (numbers round-trip: shortest-repr doubles reparse exactly)
+        spots.coalesce(4).write.mode("append").json(landing)
+        spots.coalesce(4).write.mode("append").json(landing)
+        q = start_ingest(spark, landing, sink, ckpt, available_now=True)
+        q.awaitTermination()
+        return spark.read.parquet(sink).select(
+            "Spotnum", "wd_time", "wd_band", "wd_rx_az", "wd_tx_az"
+        )
 
 
 @register(
@@ -481,24 +425,19 @@ FROM events c JOIN events e
 """
 
 
-def _stream_join_side(
-    spark, path, raw_schema, event_type, prefix, max_files_per_trigger=None
-):
+def _stream_join_side(stream, event_type):
     """One filtered, watermarked side of the click->error stream join
-    (shared by strm_stream_join, its multi-batch twin, and the 100x
-    probe's drain-only decomposition run)."""
-    r = spark.readStream.schema(raw_schema)
-    if max_files_per_trigger is not None:
-        r = r.option("maxFilesPerTrigger", max_files_per_trigger)
-    s = _norm_ts(r.parquet(path), raw_schema)
+    over an events stream, columns prefixed with `event_type` (shared
+    by strm_stream_join, its multi-batch twin, and the 100x probe's
+    drain-only decomposition run)."""
     return (
-        s.filter(F.col("event_type") == event_type)
+        stream.filter(F.col("event_type") == event_type)
         .select(
-            F.col("event_id").alias(f"{prefix}_id"),
-            F.col("user_id").alias(f"{prefix}_user"),
-            F.col("ts").alias(f"{prefix}_ts"),
+            F.col("event_id").alias(f"{event_type}_id"),
+            F.col("user_id").alias(f"{event_type}_user"),
+            F.col("ts").alias(f"{event_type}_ts"),
         )
-        .withWatermark(f"{prefix}_ts", "3 hours")
+        .withWatermark(f"{event_type}_ts", "3 hours")
     )
 
 
@@ -530,11 +469,10 @@ def strm_stream_join(spark, sf_dir):
     nothing is yet watermark-dropped, so the result must equal the
     batch oracle join exactly.
     """
-    raw_schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
-    # [t] glob: see strm_microbatch (basePath must stay the parent)
-    path = f"{sf_dir}/events.parque[t]"
-    clicks = _stream_join_side(spark, path, raw_schema, "click", "click")
-    errors = _stream_join_side(spark, path, raw_schema, "error", "error")
+    clicks, errors = (
+        _stream_join_side(s, et)
+        for s, et in zip(_events_streams(spark, sf_dir, 2), ("click", "error"))
+    )
     joined = _stream_join_joined(clicks, errors)
     name = f"strm_stream_join_{uuid.uuid4().hex[:8]}"
     # state partitions sized to the two input streams' volume
@@ -582,56 +520,57 @@ def strm_stream_join_multibatch(spark, sf_dir):
     gate proves it). Parquet file sink + checkpoint (the
     strm_dedup_watermark discipline — a memory sink would
     materialize the join output on the driver)."""
-    import atexit
     import os
-    import shutil
-    import tempfile
     import time as _time
 
     raw = spark.read.parquet(f"{sf_dir}/events.parquet")
-    work = tempfile.mkdtemp(prefix="wspr_ssj_mb_")
-    atexit.register(shutil.rmtree, work, ignore_errors=True)
-    landing = f"{work}/landing"
-    (
-        raw.select("event_id", "user_id", "event_type", "ts")
-        .repartitionByRange(16, "ts")
-        .write.parquet(landing)
-    )
-    # part-00000.. numbering follows the range order; stamp mtimes
-    # ascending so the file source's oldest-first listing agrees
-    parts = sorted(p for p in os.listdir(landing) if p.startswith("part-"))
-    base_t = _time.time() - 2 * len(parts) - 10
-    for i, p in enumerate(parts):
-        t = base_t + 2 * i
-        os.utime(os.path.join(landing, p), (t, t))
-    land_schema = spark.read.parquet(landing).schema
-    clicks = _stream_join_side(
-        spark, landing, land_schema, "click", "click", max_files_per_trigger=4
-    )
-    errors = _stream_join_side(
-        spark, landing, land_schema, "error", "error", max_files_per_trigger=4
-    )
-    # state partitions sized to the landing volume (both sides read
-    # it), not the core count — see _stream_parts_conf; this is the
-    # entry the 32-partition contention hurt most (4-batch drain +
-    # no-data batch x 128 store instances)
-    with scoped_conf(spark, _stream_parts_conf(landing, landing)):
-        q = (
-            _stream_join_joined(clicks, errors)
-            .writeStream.format("parquet")
-            .option("path", f"{work}/out")
-            .option("checkpointLocation", f"{work}/ckpt")
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
+    with stores.workdir(spark, "strm_stream_join_multibatch", sf_dir) as work:
+        landing = f"{work}/landing"
+        (
+            raw.select("event_id", "user_id", "event_type", "ts")
+            .repartitionByRange(16, "ts")
+            .write.parquet(landing)
         )
-        q.awaitTermination()
-    return spark.read.parquet(f"{work}/out").select(
-        F.col("click_id"),
-        F.col("error_id").alias("error_id"),
-        F.col("click_user").alias("user_id"),
-        (F.unix_micros("error_ts") - F.unix_micros("click_ts")).alias("lag_us"),
-    )
+        # part-00000.. numbering follows the range order; stamp mtimes
+        # ascending so the file source's oldest-first listing agrees
+        parts = sorted(p for p in os.listdir(landing) if p.startswith("part-"))
+        base_t = _time.time() - 2 * len(parts) - 10
+        for i, p in enumerate(parts):
+            t = base_t + 2 * i
+            os.utime(os.path.join(landing, p), (t, t))
+        land_schema = spark.read.parquet(landing).schema
+        clicks, errors = (
+            _stream_join_side(
+                events_ts(
+                    spark.readStream.schema(land_schema)
+                    .option("maxFilesPerTrigger", 4)
+                    .parquet(landing)
+                ),
+                et,
+            )
+            for et in ("click", "error")
+        )
+        # state partitions sized to the landing volume (both sides read
+        # it), not the core count — see _stream_parts_conf; this is the
+        # entry the 32-partition contention hurt most (4-batch drain +
+        # no-data batch x 128 store instances)
+        with scoped_conf(spark, _stream_parts_conf(landing, landing)):
+            q = (
+                _stream_join_joined(clicks, errors)
+                .writeStream.format("parquet")
+                .option("path", f"{work}/out")
+                .option("checkpointLocation", f"{work}/ckpt")
+                .outputMode("append")
+                .trigger(availableNow=True)
+                .start()
+            )
+            q.awaitTermination()
+        return spark.read.parquet(f"{work}/out").select(
+            F.col("click_id"),
+            F.col("error_id").alias("error_id"),
+            F.col("click_user").alias("user_id"),
+            (F.unix_micros("error_ts") - F.unix_micros("click_ts")).alias("lag_us"),
+        )
 
 
 def _pyds_oracle() -> str:
@@ -655,9 +594,6 @@ def src_pyds_queue(spark, sf_dir):
     band. Must equal the same rollup computed relationally from the
     tables — proving the named format's write→read path is lossless.
     Not cached: the builder writes a fresh queue dir per call."""
-    import atexit
-    import shutil
-    import tempfile
 
     from .. import pipeline
     from ..sources.pyds import WsprQueueDataSource
@@ -665,15 +601,14 @@ def src_pyds_queue(spark, sf_dir):
     from .synth import synth_spots
 
     spark.dataSource.register(WsprQueueDataSource)
-    work = tempfile.mkdtemp(prefix="wspr_pyds_q_")
-    atexit.register(shutil.rmtree, work, ignore_errors=True)
-    enriched = pipeline.enrich(pipeline.with_wd_time(synth_spots(spark, sf_dir)))
-    write_queue_bz2(enriched, work)
-    back = spark.read.format("wspr_queue").load(work)
-    return back.groupBy("wd_band").agg(
-        F.count(F.lit(1)).alias("n"),
-        F.countDistinct("Spotnum").alias("n_spots"),
-    )
+    with stores.workdir(spark, "src_pyds_queue", sf_dir) as work:
+        enriched = pipeline.enrich(pipeline.with_wd_time(synth_spots(spark, sf_dir)))
+        write_queue_bz2(enriched, work)
+        back = spark.read.format("wspr_queue").load(work)
+        return back.groupBy("wd_band").agg(
+            F.count(F.lit(1)).alias("n"),
+            F.countDistinct("Spotnum").alias("n_spots"),
+        )
 
 
 @register(
@@ -697,42 +632,33 @@ def strm_rollup_merge(spark, sf_dir):
     milli-units before summing, so the per-batch partial sums are
     exact (order- and batch-split-independent) and the cross-engine
     compare is bit-stable."""
-    import atexit
-    import shutil
-    import tempfile
-
-    from pyspark.sql import types as T
 
     from ..streaming.rollup import RollupTable, continuous_rollup
 
-    raw_schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
-    # [t] glob keeps FileStreamSource's basePath at the parent dir
-    stream = spark.readStream.schema(raw_schema).parquet(f"{sf_dir}/events.parque[t]")
-    stream = _norm_ts(stream, raw_schema)
+    [stream] = _events_streams(spark, sf_dir)
     stream = stream.withColumn(
         "value_milli", F.floor(F.col("value") * 1000).cast("long")
     )
-    work = tempfile.mkdtemp(prefix="wspr_rollup_q_")
-    atexit.register(shutil.rmtree, work, ignore_errors=True)
-    rollup = RollupTable(spark, f"{work}/rollup")
-    q = continuous_rollup(
-        stream,
-        rollup,
-        time_col="ts",
-        key_cols=["event_type"],
-        value_col="value_milli",
-        bucket="2 minutes",
-        checkpoint_dir=f"{work}/ckpt",
-        available_now=True,
-    )
-    q.awaitTermination()
-    cur = rollup.current()
-    return cur.select(
-        F.col("bucket_start_s").cast("bigint").alias("bucket_start_s"),
-        "event_type",
-        F.col("n").cast("bigint").alias("n"),
-        F.col("sum_value").cast("bigint").alias("value_milli_sum"),
-    )
+    with stores.workdir(spark, "strm_rollup_merge", sf_dir) as work:
+        rollup = RollupTable(spark, f"{work}/rollup")
+        q = continuous_rollup(
+            stream,
+            rollup,
+            time_col="ts",
+            key_cols=["event_type"],
+            value_col="value_milli",
+            bucket="2 minutes",
+            checkpoint_dir=f"{work}/ckpt",
+            available_now=True,
+        )
+        q.awaitTermination()
+        cur = rollup.current()
+        return cur.select(
+            F.col("bucket_start_s").cast("bigint").alias("bucket_start_s"),
+            "event_type",
+            F.col("n").cast("bigint").alias("n"),
+            F.col("sum_value").cast("bigint").alias("value_milli_sum"),
+        )
 
 
 @register(
@@ -753,13 +679,7 @@ def strm_static_join(spark, sf_dir):
     availableNow drains the whole source so the memory-sink result ≡
     the batch oracle. At 100 TB the static side is the broadcast dim
     and the only data-sized shuffle is the final segment rollup."""
-    from pyspark.sql import types as T
-
-    raw_schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
-    stream = spark.readStream.schema(raw_schema).parquet(
-        f"{sf_dir}/events.parque[t]"
-    )
-    stream = _norm_ts(stream, raw_schema)
+    [stream] = _events_streams(spark, sf_dir)
     cust = F.broadcast(
         spark.read.parquet(f"{sf_dir}/customer.parquet").select(
             "c_custkey", "c_mktsegment"
@@ -801,38 +721,33 @@ def strm_rate_limited(spark, sf_dir):
     aggregate exactly — rate limiting changes scheduling, never
     results. tests/test_streaming_ingest.py asserts the batch count.
     """
-    import atexit
-    import shutil
-    import tempfile
-
-    work = tempfile.mkdtemp(prefix="wspr_rate_")
-    atexit.register(shutil.rmtree, work, ignore_errors=True)
-    ev = load_events(spark, sf_dir, parallel="never")
-    ev.select("event_id", "ts").repartition(4).write.mode("overwrite").parquet(
-        f"{work}/files"
-    )
-    raw_schema = spark.read.parquet(f"{work}/files").schema
-    stream = (
-        spark.readStream.schema(raw_schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(f"{work}/files")
-    )
-    agg = stream.groupBy(F.window("ts", "2 minutes").alias("w")).agg(
-        F.count(F.lit(1)).alias("n")
-    )
-    name = f"strm_rate_{uuid.uuid4().hex[:8]}"
-    q = (
-        agg.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    strm_rate_limited.last_progress_batches = len(q.recentProgress)
-    return spark.table(name).select(
-        F.unix_timestamp("w.start").alias("win_start_s"), "n"
-    )
+    with stores.workdir(spark, "strm_rate_limited", sf_dir) as work:
+        ev = load_events(spark, sf_dir, parallel="never")
+        ev.select("event_id", "ts").repartition(4).write.mode("overwrite").parquet(
+            f"{work}/files"
+        )
+        raw_schema = spark.read.parquet(f"{work}/files").schema
+        stream = (
+            spark.readStream.schema(raw_schema)
+            .option("maxFilesPerTrigger", 1)
+            .parquet(f"{work}/files")
+        )
+        agg = stream.groupBy(F.window("ts", "2 minutes").alias("w")).agg(
+            F.count(F.lit(1)).alias("n")
+        )
+        name = f"strm_rate_{uuid.uuid4().hex[:8]}"
+        q = (
+            agg.writeStream.format("memory")
+            .queryName(name)
+            .outputMode("complete")
+            .trigger(availableNow=True)
+            .start()
+        )
+        q.awaitTermination()
+        strm_rate_limited.last_progress_batches = len(q.recentProgress)
+        return spark.table(name).select(
+            F.unix_timestamp("w.start").alias("win_start_s"), "n"
+        )
 
 
 @register(
@@ -904,11 +819,7 @@ def strm_distinct_daily(spark, sf_dir):
     dedup) with IDENTITY-level dedup feeding an aggregate; in a live
     deployment the same query carries a watermark on day so identity
     state expires after the window closes."""
-    raw_schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
-    stream = spark.readStream.schema(raw_schema).parquet(
-        f"{sf_dir}/events.parque[t]"
-    )
-    stream = _norm_ts(stream, raw_schema)
+    [stream] = _events_streams(spark, sf_dir)
     ud = stream.select(
         "user_id",
         F.floor(F.unix_micros("ts") / F.lit(86400000000.0))

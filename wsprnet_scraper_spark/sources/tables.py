@@ -27,7 +27,8 @@ traffic has been measured at 8 and 32 cores (ROADMAP direction 1),
 because the 8 MiB per-partition budget was calibrated on state size
 and would leave compute-bound scans under 8 MiB one task wide.
 
-`load_events` papers over a reader gap: events.parquet stores its
+`load_events` (through `events_ts`, which stream readers share)
+papers over a reader gap: events.parquet stores its
 `ts` column as parquet TIMESTAMP(NANOS), which Spark's vectorized
 reader rejects outright. With spark.sql.legacy.parquet.nanosAsLong
 (set in session.py) the column arrives as Long nanoseconds; the
@@ -140,18 +141,23 @@ def load(
     return df
 
 
-def load_events(
-    spark: SparkSession, sf_dir: str, parallel: str = "auto"
-) -> DataFrame:
-    df = load(spark, sf_dir, "events", parallel=parallel)
+def events_ts(df: DataFrame) -> DataFrame:
+    """events.ts as TimestampType, read off `df.schema`, so a batch or
+    a streaming frame over events takes the same rule."""
     ts_type = df.schema["ts"].dataType
     if isinstance(ts_type, T.LongType):
-        df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-    elif isinstance(ts_type, T.TimestampNTZType):
+        return df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
+    if isinstance(ts_type, T.TimestampNTZType):
         # Naive parquet timestamp read as NTZ (a session without the
         # inferTimestampNTZ=false conf, e.g. a driver-owned session where
         # the runtime set was too late for a cached catalog entry). The
         # session runs UTC, so NTZ -> TIMESTAMP is a wall-clock-preserving
         # reinterpretation and matches DuckDB's UTC-naive read.
-        df = df.withColumn("ts", F.col("ts").cast(T.TimestampType()))
+        return df.withColumn("ts", F.col("ts").cast(T.TimestampType()))
     return df
+
+
+def load_events(
+    spark: SparkSession, sf_dir: str, parallel: str = "auto"
+) -> DataFrame:
+    return events_ts(load(spark, sf_dir, "events", parallel=parallel))
