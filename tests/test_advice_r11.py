@@ -4,11 +4,8 @@ A1 (audit exemption drift) is test-side: strm_semantic_dedup is
    dropped from REVIEWED_INDEPENDENT in test_mirrored_oracle_audit,
    so the name-hint guard re-covers it now that the entry carries the
    mirrored tag directly.
-A2 land_ordered_ndjson multi-part fids: a session with
-   spark.sql.files.maxRecordsPerFile set splits one fid's output into
-   several part files — the rename step now globs part-* (any
-   extension) and concatenates multiple parts in sorted order instead
-   of asserting exactly one .json part.
+A2 land_ordered_ndjson multi-part fids: its tests moved to
+   test_streaming_ingest.
 A3 BPE framing regex: '.' differs across engines on line terminators
    (RE2 frames CR / NEL U+0085 / LS U+2028 / PS U+2029; Java regex frames none of them), so a
    corpus token containing one would silently diverge engine vs
@@ -28,12 +25,8 @@ A4 frame relation pinning (also r10 verdict task #3): the shared
 
 from __future__ import annotations
 
-import glob
-import json
-
 from tests.conftest import SF_SMOKE
 from tests.test_advice_r10 import _assert_matches_oracle, _write_documents
-from wsprnet_scraper_spark.streaming.landing import land_ordered_ndjson
 
 # Every Java-regex line-terminator class member embedded INSIDE
 # tokens (mid-token, so an unframed character would glue two framed
@@ -58,33 +51,6 @@ def test_bpe_encode_gates_on_line_terminator_corpus(spark, tmp_path):
     _assert_matches_oracle(spark, "pipe_bpe_encode", sf)
 
 
-def test_landing_concatenates_multipart_fids(spark, tmp_path):
-    # Force every fid's single task to split its output: 9 rows into
-    # 2 fids with at most 2 records per file -> 2-3 part files per
-    # fid. The helper must still land exactly n_files files, each
-    # holding its full contiguous id range.
-    landing = str(tmp_path / "landing")
-    df = spark.range(9).selectExpr("id AS k", "id * 10 AS v")
-    old = spark.conf.get("spark.sql.files.maxRecordsPerFile", "0")
-    spark.conf.set("spark.sql.files.maxRecordsPerFile", "2")
-    try:
-        n = land_ordered_ndjson(df, "k", landing, 2)
-    finally:
-        spark.conf.set("spark.sql.files.maxRecordsPerFile", old)
-    assert n == 2
-    files = sorted(glob.glob(f"{landing}/batch-*.json"))
-    assert len(files) == 2
-    seen, prev_max = [], -1
-    for f in files:
-        ks = sorted(
-            json.loads(line)["k"] for line in open(f) if line.strip()
-        )
-        assert ks and ks[0] > prev_max, "file ranges must be contiguous"
-        prev_max = ks[-1]
-        seen.extend(ks)
-    assert sorted(seen) == list(range(9))
-
-
 def test_frame_relation_survives_clear_cache(spark):
     from wsprnet_scraper_spark.operators import stores
     from wsprnet_scraper_spark.plans.analytics import _frame_relation
@@ -101,26 +67,3 @@ def test_frame_relation_survives_clear_cache(spark):
     assert df2 is df and df2.count() == n
     app = spark.sparkContext.applicationId
     assert ("frames_w19", SF_SMOKE) in stores._STORE_CACHE[app]
-
-
-def test_landing_refuses_compressed_parts(spark, tmp_path):
-    # r11 review finding: a session-level JSON codec changes the part
-    # extension; renaming .json.gz bytes into batch-NNN.json would
-    # make the downstream file stream source parse gzip as NDJSON.
-    # The helper must fail loudly instead.
-    import pytest
-
-    landing = str(tmp_path / "landing")
-    df = spark.range(6).selectExpr("id AS k")
-    hc = spark.sparkContext._jsc.hadoopConfiguration()
-    hc.set("mapreduce.output.fileoutputformat.compress", "true")
-    hc.set(
-        "mapreduce.output.fileoutputformat.compress.codec",
-        "org.apache.hadoop.io.compress.GzipCodec",
-    )
-    try:
-        with pytest.raises(ValueError, match="uncompressed"):
-            land_ordered_ndjson(df, "k", landing, 2)
-    finally:
-        hc.unset("mapreduce.output.fileoutputformat.compress")
-        hc.unset("mapreduce.output.fileoutputformat.compress.codec")

@@ -303,3 +303,210 @@ def test_ingest_observe_metrics_surface_in_progress(spark, tmp_path):
     assert metrics is not None, "no observed metrics in progress"
     assert metrics["rows"] == n
     assert metrics["min_spotnum"] <= metrics["max_spotnum"]
+
+
+# ----------------------------------------------- the O(batch) sink check
+
+
+def _ids_batch(spark, ids):
+    return spark.createDataFrame([(n, f"p{n}") for n in ids], "Spotnum long, v string")
+
+
+def _sink_ids(spark, sink):
+    return sorted(r.Spotnum for r in spark.read.parquet(sink).select("Spotnum").collect())
+
+
+_BLK = 1 << 20
+
+
+@pytest.mark.parametrize(
+    "case",
+    ["empty", "single", "duplicates", "block_boundary"],
+)
+def test_tick_record_matches_gap_summary(spark, tmp_path, case):
+    # the tick's telemetry comes off the written plan; it must equal
+    # gap_summary (GapMonitor.observe) over the rows the sink got
+    import random
+
+    from wsprnet_scraper_spark.streaming.ingest import append_to_sink
+
+    rng = random.Random(f"tick-{case}")
+    sink = str(tmp_path / "sink")
+    held = sorted(rng.sample(range(_BLK - 40, _BLK + 40), 20))
+    ids = {
+        "empty": [],
+        "single": [rng.randrange(1, 1000)],
+        "duplicates": [n for n in rng.sample(range(500, 560), 25) for _ in (0, 1)],
+        "block_boundary": rng.sample(range(_BLK - 60, _BLK + 60), 70) + held[:5],
+    }[case]
+    _ids_batch(spark, held).write.parquet(sink)
+    batch = _ids_batch(spark, ids).persist()
+    try:
+        summary, _ = append_to_sink(spark, batch, sink)
+    finally:
+        batch.unpersist()
+    fresh = sorted(set(ids) - set(held))
+    assert _sink_ids(spark, sink) == sorted(held + fresh)
+    got, want = GapMonitor(last_spotnum=3), GapMonitor(last_spotnum=3)
+    got.record(summary, 1)
+    want.observe(_ids_batch(spark, fresh), 1)
+    assert got.records == want.records
+    assert len(got.records) == (0 if case == "empty" else 1)
+
+
+def test_foreign_file_between_ticks_is_checked(spark, tmp_path):
+    # another writer appends a file holding Spotnum 8 after tick 1; the
+    # session's range index has never seen it, and tick 2 redelivers 8
+    from pyspark.sql import functions as F
+
+    landing, sink, ckpt = tmp_path / "landing", str(tmp_path / "sink"), str(tmp_path / "ckpt")
+    cursor = Cursor(tmp_path / "cursor.json")
+    fetch_once(lambda s: [make_spot(n) for n in range(1, 6)], cursor, landing)
+    start_ingest(spark, str(landing), sink, ckpt).awaitTermination()
+    spark.read.parquet(sink).filter("Spotnum = 3").withColumn(
+        "Spotnum", F.lit(8).cast("long")
+    ).write.mode("append").parquet(sink)
+    fetch_once(lambda s: [make_spot(n) for n in range(6, 11)], cursor, landing)
+    monitor = GapMonitor()
+    start_ingest(spark, str(landing), sink, ckpt, monitor=monitor).awaitTermination()
+    assert _sink_ids(spark, sink) == list(range(1, 11))
+    [rec] = monitor.records
+    assert (rec["n_spots"], rec["first_spotnum"], rec["last_spotnum"]) == (4, 6, 10)
+    assert (rec["total_gaps"], rec["total_missing"]) == (1, 1)
+    # the session's index kept tick 1's file, scanned the foreign one
+    # and took tick 2's own file from its telemetry
+    from wsprnet_scraper_spark.streaming.ingest import _sink_ranges
+
+    assert sorted(_sink_ranges(spark, sink).values()) == [(1, 5), (6, 10), (8, 8)]
+
+
+def test_deleted_sink_file_between_ticks(spark, tmp_path):
+    import os
+
+    landing, sink, ckpt = tmp_path / "landing", str(tmp_path / "sink"), str(tmp_path / "ckpt")
+    cursor = Cursor(tmp_path / "cursor.json")
+    for lo in (1, 6):
+        fetch_once(lambda s, lo=lo: [make_spot(n) for n in range(lo, lo + 5)], cursor, landing)
+        start_ingest(spark, str(landing), sink, ckpt).awaitTermination()
+    first = min(
+        (f for f in os.listdir(sink) if f.endswith(".parquet") and f[0] != "."),
+        key=lambda f: os.path.getmtime(os.path.join(sink, f)),
+    )
+    for f in (first, f".{first}.crc"):
+        os.remove(os.path.join(sink, f))
+    fetch_once(lambda s: [make_spot(n) for n in range(1, 13)], cursor, landing)
+    start_ingest(spark, str(landing), sink, ckpt).awaitTermination()
+    assert _sink_ids(spark, sink) == list(range(1, 13))
+
+
+def test_new_session_builds_its_own_sink_index(spark, tmp_path):
+    # poison the parent session's index so that it excludes every
+    # file: a tick in a new session that read it would skip the check
+    # and land the redelivered Spotnums twice
+    from wsprnet_scraper_spark.streaming.ingest import _sink_ranges
+
+    landing, sink = tmp_path / "landing", str(tmp_path / "sink")
+    fetch_once(lambda s: [make_spot(n) for n in range(1, 6)], Cursor(tmp_path / "c"), landing)
+    start_ingest(spark, str(landing), sink, str(tmp_path / "ckpt")).awaitTermination()
+    parent = _sink_ranges(spark, sink)
+    assert parent
+    for name in parent:
+        parent[name] = (-2, -1)
+    other = spark.newSession()
+    # a fresh checkpoint replays every landed file
+    start_ingest(other, str(landing), sink, str(tmp_path / "ckpt2")).awaitTermination()
+    assert _sink_ids(spark, sink) == [1, 2, 3, 4, 5]
+    assert _sink_ranges(other, sink) is not parent
+    assert set(parent.values()) == {(-2, -1)}
+
+
+def test_ingest_e2e_runs_leave_one_plan_entry(spark):
+    # each strm_ingest_e2e run starts the ingest on a fresh landing and
+    # sink dir; reclaiming the previous generation drops its entries
+    from tests.conftest import SF_SMOKE
+    from wsprnet_scraper_spark.plans import QUERIES
+    from wsprnet_scraper_spark.plans.registry import _PLAN_CACHE
+
+    for _ in range(3):
+        QUERIES["strm_ingest_e2e"](spark, SF_SMOKE).collect()
+    bucket = _PLAN_CACHE[spark.sparkContext.applicationId]
+    for kind in ("ingest", "sink_ranges"):
+        keys = [
+            k for k in bucket
+            if k[1] == kind and isinstance(k[2], str) and "strm_ingest_e2e_" in k[2]
+        ]
+        assert len(keys) == 1, (kind, keys)
+
+
+@pytest.mark.parametrize("name", ["strm_microbatch", "strm_stream_join"])
+def test_memory_sink_runs_leave_no_view(spark, name):
+    # the memory-sink builders drop their uuid-named view once the
+    # result is built, and checkpoint under their stores.workdir
+    import os
+
+    from tests.conftest import SF_SMOKE
+    from tests.test_advice_r10 import _assert_matches_oracle
+    from wsprnet_scraper_spark.operators import stores
+
+    for _ in range(3):
+        _assert_matches_oracle(spark, name, SF_SMOKE, tables=("events",))
+    assert not [t.name for t in spark.catalog.listTables() if t.name.startswith("strm_")]
+    key = (spark._jsparkSession.sessionUUID(), name, SF_SMOKE)
+    assert os.path.isdir(os.path.join(stores._WORKDIRS[key], "ckpt"))
+
+
+# --------------------------------------------------- landing helper
+
+
+def test_landing_concatenates_multipart_fids(spark, tmp_path):
+    # Force every fid's single task to split its output: 9 rows into
+    # 2 fids with at most 2 records per file -> 2-3 part files per
+    # fid. The helper must still land exactly n_files files, each
+    # holding its full contiguous id range.
+    import glob
+
+    from wsprnet_scraper_spark.streaming.landing import land_ordered_ndjson
+
+    landing = str(tmp_path / "landing")
+    df = spark.range(9).selectExpr("id AS k", "id * 10 AS v")
+    old = spark.conf.get("spark.sql.files.maxRecordsPerFile", "0")
+    spark.conf.set("spark.sql.files.maxRecordsPerFile", "2")
+    try:
+        n = land_ordered_ndjson(df, "k", landing, 2)
+    finally:
+        spark.conf.set("spark.sql.files.maxRecordsPerFile", old)
+    assert n == 2
+    files = sorted(glob.glob(f"{landing}/batch-*.json"))
+    assert len(files) == 2
+    seen, prev_max = [], -1
+    for f in files:
+        ks = sorted(
+            json.loads(line)["k"] for line in open(f) if line.strip()
+        )
+        assert ks and ks[0] > prev_max, "file ranges must be contiguous"
+        prev_max = ks[-1]
+        seen.extend(ks)
+    assert sorted(seen) == list(range(9))
+
+
+def test_landing_refuses_compressed_parts(spark, tmp_path):
+    # a session-level JSON codec changes the part extension; renaming
+    # .json.gz bytes into batch-NNN.json would make the downstream
+    # file stream source parse gzip as NDJSON. The helper must fail
+    # loudly instead.
+    from wsprnet_scraper_spark.streaming.landing import land_ordered_ndjson
+
+    landing = str(tmp_path / "landing")
+    df = spark.range(6).selectExpr("id AS k")
+    hc = spark.sparkContext._jsc.hadoopConfiguration()
+    hc.set("mapreduce.output.fileoutputformat.compress", "true")
+    hc.set(
+        "mapreduce.output.fileoutputformat.compress.codec",
+        "org.apache.hadoop.io.compress.GzipCodec",
+    )
+    try:
+        with pytest.raises(ValueError, match="uncompressed"):
+            land_ordered_ndjson(df, "k", landing, 2)
+    finally:
+        hc.unset("mapreduce.output.fileoutputformat.compress")
+        hc.unset("mapreduce.output.fileoutputformat.compress.codec")

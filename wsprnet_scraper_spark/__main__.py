@@ -67,7 +67,7 @@ def cmd_enrich(args) -> int:
 def cmd_upload(args) -> int:
     from . import pipeline
     from .session import get_session
-    from .streaming.ingest import _dedup_against_sink
+    from .streaming.ingest import append_to_sink
 
     spark = get_session("wspr-upload")
     df = pipeline.parse_csv(spark, args.input)
@@ -77,9 +77,7 @@ def cmd_upload(args) -> int:
 
         write_jdbc_append(enriched, args.jdbc_url, coalesce_one=args.atomic)
     else:
-        _dedup_against_sink(enriched, args.sink).write.mode("append").parquet(
-            args.sink
-        )
+        append_to_sink(spark, enriched.persist(), args.sink)
     return 0
 
 

@@ -58,7 +58,9 @@ deletes its own dir and keeps the previous one. Repeated runs hold
 one generation per key on disk, and a returned DataFrame reads files
 that stay valid until the same session runs the same builder over
 the same sf_dir again. A cached-plan builder runs again only after
-`clear_plan_cache`, so no cached plan scans a deleted generation.
+`clear_plan_cache`, so no cached plan scans a deleted generation;
+reclaiming a generation also drops the plan-cache entries keyed on
+its paths (`registry.forget_prepared_under`).
 `clear_store_cache(drop_files=True)` deletes every generation with
 the root; process exit deletes the root.
 """
@@ -216,7 +218,10 @@ def workdir(spark, name: str, sf_dir: str):
     prev = _WORKDIRS.get(key)
     _WORKDIRS[key] = work
     if prev is not None:
+        from ..plans.registry import forget_prepared_under
+
         shutil.rmtree(prev, ignore_errors=True)
+        forget_prepared_under(prev)
 
 
 def materialized(spark, sf_dir: str, kind: str, build, tables=("documents",)):

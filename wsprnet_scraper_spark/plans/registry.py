@@ -26,6 +26,7 @@ do):
 from __future__ import annotations
 
 import functools
+import os
 from collections.abc import Callable
 
 QUERIES: dict[str, Callable] = {}
@@ -86,7 +87,10 @@ ORACLE_BOUND: dict[str, tuple[str, int]] = {}
 # a cached result DataFrame would skip the stream instead of
 # re-running it. A cached builder's workdir generation has the same
 # key as its plan, so it is reclaimed only by the rebuild that follows
-# `clear_plan_cache`.
+# `clear_plan_cache`; the other way round, reclaiming a generation
+# drops the entries keyed on its paths (`forget_prepared_under`: an
+# ingest stream or sink range index over a deleted landing or sink
+# dir).
 #
 # Layout: {applicationId: {(session uuid, *key): df}}. A DataFrame is
 # bound to the session that built it (its conf, its streams manager),
@@ -100,6 +104,20 @@ _PLAN_CACHE: dict = {}
 
 def clear_plan_cache() -> None:
     _PLAN_CACHE.clear()
+
+
+def forget_prepared_under(path: str) -> None:
+    """Drop every entry whose key names a path under `path`, a dir
+    that is being deleted (a reclaimed `stores.workdir` generation):
+    no later call can be served by it."""
+    prefix = os.path.join(path, "")
+    for bucket in _PLAN_CACHE.values():
+        for key in [
+            k
+            for k in bucket
+            if any(isinstance(p, str) and os.path.join(p, "").startswith(prefix) for p in k)
+        ]:
+            del bucket[key]
 
 
 def prepared(spark, key: tuple, build: Callable):

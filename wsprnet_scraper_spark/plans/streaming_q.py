@@ -12,7 +12,7 @@ result.
 
 from __future__ import annotations
 
-import uuid
+import os
 
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
@@ -122,6 +122,32 @@ def _events_streams(spark, sf_dir, n: int = 1) -> list:
         )
         for _ in range(n)
     ]
+
+
+def _drain_to_memory(df, work, mode: str = "complete", conf: dict | None = None):
+    """Run the stream `df` to the end of its input (availableNow) into
+    a memory sink; return (result DataFrame, the finished query). The
+    checkpoint goes under `work`, the caller's `stores.workdir`
+    generation, instead of Spark's `java.io.tmpdir/temporary-<uuid>`.
+    The sink's view (named after `work`, so unique per run) is dropped
+    once the result is resolved: the rows live as long as the returned
+    DataFrame, not as long as the session. `conf` is applied around the
+    run (`scoped_conf`; a stream reads it at start)."""
+    spark = df.sparkSession
+    view = os.path.basename(work)
+    with scoped_conf(spark, conf or {}):
+        q = (
+            df.writeStream.format("memory")
+            .queryName(view)
+            .outputMode(mode)
+            .option("checkpointLocation", f"{work}/ckpt")
+            .trigger(availableNow=True)
+            .start()
+        )
+        q.awaitTermination()
+    out = spark.table(view)
+    spark.catalog.dropTempView(view)
+    return out, q
 
 
 @register(
@@ -235,18 +261,9 @@ def strm_microbatch(spark, sf_dir):
     agg = stream.groupBy(F.window("ts", "2 minutes").alias("w")).agg(
         F.count(F.lit(1)).alias("n")
     )
-    name = f"strm_microbatch_{uuid.uuid4().hex[:8]}"
-    q = (
-        agg.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(name).select(
-        F.unix_timestamp("w.start").alias("win_start_s"), "n"
-    )
+    with stores.workdir(spark, "strm_microbatch", sf_dir) as work:
+        out, _ = _drain_to_memory(agg, work)
+    return out.select(F.unix_timestamp("w.start").alias("win_start_s"), "n")
 
 
 @register(
@@ -272,18 +289,9 @@ def strm_watermark(spark, sf_dir):
         .groupBy(F.window("ts", "2 minutes").alias("w"))
         .agg(F.count(F.lit(1)).alias("n"))
     )
-    name = f"strm_watermark_{uuid.uuid4().hex[:8]}"
-    q = (
-        agg.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(name).select(
-        F.unix_timestamp("w.start").alias("win_start_s"), "n"
-    )
+    with stores.workdir(spark, "strm_watermark", sf_dir) as work:
+        out, _ = _drain_to_memory(agg, work, "append")
+    return out.select(F.unix_timestamp("w.start").alias("win_start_s"), "n")
 
 
 @register(
@@ -474,23 +482,17 @@ def strm_stream_join(spark, sf_dir):
         for s, et in zip(_events_streams(spark, sf_dir, 2), ("click", "error"))
     )
     joined = _stream_join_joined(clicks, errors)
-    name = f"strm_stream_join_{uuid.uuid4().hex[:8]}"
     # state partitions sized to the two input streams' volume
     # (_stream_parts_conf): the conf is read at query START and
     # frozen into the checkpoint, so the scope covers start..await.
     # Provider stays heap-backed (r14, measured: RocksDB ran this
     # join 3x slower at the 100x corpus — see _ROCKSDB_STATE).
     events = f"{sf_dir}/events.parquet"
-    with scoped_conf(spark, _stream_parts_conf(events, events)):
-        q = (
-            joined.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
+    with stores.workdir(spark, "strm_stream_join", sf_dir) as work:
+        out, _ = _drain_to_memory(
+            joined, work, "append", _stream_parts_conf(events, events)
         )
-        q.awaitTermination()
-    return spark.table(name).select(
+    return out.select(
         F.col("click_id"),
         F.col("error_id").alias("error_id"),
         F.col("click_user").alias("user_id"),
@@ -690,16 +692,9 @@ def strm_static_join(spark, sf_dir):
         F.count(F.lit(1)).alias("n_events"),
         F.sum(F.col("value").cast("decimal(12,2)")).cast("double").alias("sum_value"),
     )
-    name = f"strm_static_{uuid.uuid4().hex[:8]}"
-    q = (
-        agg.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(name)
+    with stores.workdir(spark, "strm_static_join", sf_dir) as work:
+        out, _ = _drain_to_memory(agg, work)
+    return out
 
 
 @register(
@@ -735,19 +730,9 @@ def strm_rate_limited(spark, sf_dir):
         agg = stream.groupBy(F.window("ts", "2 minutes").alias("w")).agg(
             F.count(F.lit(1)).alias("n")
         )
-        name = f"strm_rate_{uuid.uuid4().hex[:8]}"
-        q = (
-            agg.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("complete")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        strm_rate_limited.last_progress_batches = len(q.recentProgress)
-        return spark.table(name).select(
-            F.unix_timestamp("w.start").alias("win_start_s"), "n"
-        )
+        out, q = _drain_to_memory(agg, work)
+    strm_rate_limited.last_progress_batches = len(q.recentProgress)
+    return out.select(F.unix_timestamp("w.start").alias("win_start_s"), "n")
 
 
 @register(
@@ -827,13 +812,6 @@ def strm_distinct_daily(spark, sf_dir):
         .alias("day"),
     ).dropDuplicates(["user_id", "day"])
     agg = ud.groupBy("day").agg(F.count(F.lit(1)).cast("bigint").alias("dau"))
-    name = f"strm_distinct_daily_{uuid.uuid4().hex[:8]}"
-    q = (
-        agg.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(name).select("day", "dau")
+    with stores.workdir(spark, "strm_distinct_daily", sf_dir) as work:
+        out, _ = _drain_to_memory(agg, work)
+    return out.select("day", "dau")

@@ -171,8 +171,10 @@ def run_scrape_daemon(
     number of ticks fired.
 
     The ingest plan is built once per session (the prepared-plan
-    cache; a maintenance pass drops it), so a tick pays for the fetch,
-    one micro-batch and its one-action gap telemetry, not re-planning.
+    cache; a maintenance pass drops it), so a tick pays for the fetch
+    and one micro-batch, not re-planning: the batch's Spotnum range,
+    then one written plan that checks only the overlapping sink files
+    and carries the gap telemetry (`ingest.append_to_sink`).
 
     `maintenance_every` is OPT-IN (ADVICE r5): session_maintenance
     calls spark.catalog.clearCache(), which unpersists EVERY cached

@@ -11,19 +11,31 @@ into foreachBatch; the sink write is made idempotent per the
 reference's own pattern (`INSERT ... ON CONFLICT ("Spotnum") DO
 NOTHING` on the TimescaleDB primary key — SURVEY.md §4.3). With a
 JDBC sink that conflict clause is the whole story and costs O(batch).
-The parquet stand-in used in tests anti-joins the batch against the
-sink's existing Spotnums — fine at test scale, and documented as the
-piece you swap for the PK upsert in production.
+The parquet stand-in keeps the tick O(batch) too (`append_to_sink`):
+it reads the batch's Spotnum range [lo, hi], then anti-joins the
+batch against only the sink files whose recorded [min, max] overlaps
+it. The ranges live in a per-session index {file name -> (min, max)}
+(`registry.prepared` key ("sink_ranges", sink_dir), so
+`clear_plan_cache` and `session_maintenance` own its lifetime); files
+the index does not know (another writer's history, a killed run's
+files, everything on a session's first tick) cost one Spark job that
+groups their Spotnum min/max by file name. A file is skipped only when
+its range excludes the batch, so the check is exact — which is what
+keeps a replayed epoch idempotent.
 
-Gap telemetry (wsprnet-scraper.sh:284-309, 335-339) runs inside
-foreachBatch as ONE Spark action (`operators.sequence.gap_summary`:
-count, id span and within-batch gaps), plus the inter-batch boundary
-gap against the previous batch's max, held as driver-side state in
-the closure (SURVEY.md §7.3.6 — deliberately NOT
-applyInPandasWithState; a scalar per stream doesn't need distributed
-state). A ~2k-spot tick is almost all fixed cost, so the enriched
-stream is built once per session and landing dir (prepared-plan
-cache, plans/registry.py) and only re-started per tick.
+Gap telemetry (wsprnet-scraper.sh:284-309, 335-339) rides on the
+written plan: one window partitioned by `Spotnum div 2^20` and ordered
+by Spotnum drops in-batch duplicates and yields each row's gap to the
+row before it, and one `Observation` on the write carries the count,
+id span, in-block gap accumulators and each block's [min, max]; the
+driver folds the cross-block gaps as `operators.sequence.gap_summary`
+does. `GapMonitor.record` adds the inter-batch boundary gap against
+the previous batch's max, held as driver-side state (SURVEY.md
+§7.3.6 — deliberately NOT applyInPandasWithState; a scalar per stream
+doesn't need distributed state). A ~2k-spot tick is almost all fixed
+cost, so the enriched stream is built once per session and landing
+dir (prepared-plan cache, plans/registry.py) and only re-started per
+tick.
 """
 
 from __future__ import annotations
@@ -58,32 +70,34 @@ def read_spot_stream(
 
 @dataclass
 class GapMonitor:
-    """Driver-side gap telemetry state + per-batch records; `observe`
-    is the per-batch gap work, one Spark action (`gap_summary`)."""
+    """Driver-side gap telemetry state + per-batch records."""
 
     last_spotnum: int | None = None
     records: list[dict] = field(default_factory=list)
 
-    def observe(self, batch_df: DataFrame, batch_id: int) -> None:
-        """Record intra-batch gap stats and the inter-batch boundary gap.
-
-        Gap detection uses the block-partitioned operator
-        (operators/sequence.py) so a large backfill batch doesn't
-        funnel through a single-task global window; normal scrape
-        batches (~2k rows) don't notice either way.
-        """
-        from ..operators.sequence import gap_summary
-
-        row = gap_summary(batch_df).first().asDict()
-        if row["n_spots"] == 0:
+    def record(self, summary: dict, batch_id: int) -> None:
+        """Record one batch's `gap_summary` row (a dict) and its
+        boundary gap against the previous batch; an empty batch leaves
+        no record and no state change."""
+        if summary["n_spots"] == 0:
             return
         boundary_gap = (
             None
             if self.last_spotnum is None
-            else row["first_spotnum"] - self.last_spotnum - 1
+            else summary["first_spotnum"] - self.last_spotnum - 1
         )
-        self.records.append({"batch_id": batch_id, **row, "boundary_gap": boundary_gap})
-        self.last_spotnum = row["last_spotnum"]
+        self.records.append(
+            {"batch_id": batch_id, **summary, "boundary_gap": boundary_gap}
+        )
+        self.last_spotnum = summary["last_spotnum"]
+
+    def observe(self, batch_df: DataFrame, batch_id: int) -> None:
+        """`record` over `gap_summary` of an already deduped batch —
+        one Spark action, for callers outside the ingest tick (which
+        gets its summary from the written plan instead)."""
+        from ..operators.sequence import gap_summary
+
+        self.record(gap_summary(batch_df).first().asDict(), batch_id)
 
 
 def sink_spotnums(spark: SparkSession, sink_dir: str) -> DataFrame:
@@ -92,21 +106,165 @@ def sink_spotnums(spark: SparkSession, sink_dir: str) -> DataFrame:
     return spark.read.schema("Spotnum LONG").parquet(sink_dir)
 
 
-def _dedup_against_sink(batch_df: DataFrame, sink_dir: str) -> DataFrame:
-    """Idempotency for the parquet stand-in sink.
+# The Spotnum block of the tick's window, as in operators/sequence.
+_BLOCK = 1 << 20
 
-    Within-batch dropDuplicates on the Spotnum key, then left_anti
-    against Spotnums already in the sink (the replayed-batch case
-    after a failure between sink write and checkpoint commit). A JDBC
-    sink replaces ALL of this with `ON CONFLICT DO NOTHING` on the PK.
-    """
-    batch_df = batch_df.dropDuplicates(["Spotnum"])
-    if not os.path.isdir(sink_dir) or not any(
-        name.endswith(".parquet") for name in os.listdir(sink_dir)
-    ):
+
+def _sink_files(sink_dir: str) -> list[str]:
+    """Names of the sink's data files (Spark's listing rule: hidden
+    `.`/`_` names are not data)."""
+    try:
+        names = os.listdir(sink_dir)
+    except FileNotFoundError:
+        return []
+    return [n for n in names if n.endswith(".parquet") and n[0] not in "._"]
+
+
+def _sink_ranges(spark: SparkSession, sink_dir: str) -> dict:
+    """The session's {file name -> (min, max) Spotnum} index of
+    sink_dir (module docstring)."""
+    from ..plans.registry import prepared
+
+    return prepared(spark, ("sink_ranges", sink_dir), dict)
+
+
+def _overlapping_files(
+    spark: SparkSession, sink_dir: str, names: list[str], lo: int, hi: int
+) -> list[str]:
+    """The files among `names` (the sink's current listing) that can
+    hold a Spotnum in [lo, hi]. Files the index does not know get their
+    ranges in one Spark job; a file with no readable range (no rows)
+    counts as overlapping, and files gone from the listing drop out of
+    the index."""
+    index = _sink_ranges(spark, sink_dir)
+    for gone in index.keys() - set(names):
+        del index[gone]
+    unknown = [n for n in names if n not in index]
+    if unknown:
+        name = F.col("_metadata.file_name")
+        found = {
+            r[0]: (r[1], r[2])
+            for r in sink_spotnums(spark, sink_dir)
+            .filter(name.isin(unknown))
+            .groupBy(name)
+            .agg(F.min("Spotnum"), F.max("Spotnum"))
+            .collect()
+        }
+        for n in unknown:
+            index[n] = found.get(n, (None, None))
+    return [
+        n
+        for n in names
+        if index[n][0] is None or (index[n][0] <= hi and lo <= index[n][1])
+    ]
+
+
+def _dedup_against_sink(
+    spark: SparkSession,
+    batch_df: DataFrame,
+    sink_dir: str,
+    names: list[str],
+    lo: int,
+    hi: int,
+) -> DataFrame:
+    """Idempotency for the parquet stand-in sink: left_anti of the
+    batch (Spotnums in [lo, hi]) against the sink's Spotnums in
+    [lo, hi], read from the overlapping files only (the replayed-batch
+    case after a failure between sink write and checkpoint commit). A
+    JDBC sink replaces ALL of this with `ON CONFLICT DO NOTHING` on
+    the PK."""
+    overlap = _overlapping_files(spark, sink_dir, names, lo, hi)
+    if not overlap:
         return batch_df
-    existing = sink_spotnums(batch_df.sparkSession, sink_dir)
+    existing = sink_spotnums(batch_df.sparkSession, sink_dir).filter(
+        F.col("_metadata.file_name").isin(overlap)
+        & F.col("Spotnum").between(lo, hi)
+    )
     return batch_df.join(existing, on="Spotnum", how="left_anti")
+
+
+def _gap_fold(m: dict) -> dict:
+    """`gap_summary`'s row from the tick's observed metrics: the
+    in-block gaps plus the gaps between consecutive non-empty blocks
+    (a block's first id after the previous block's last)."""
+    blocks = sorted(m["blocks"])
+    cross = [b[0] - a[1] - 1 for a, b in zip(blocks, blocks[1:]) if b[0] - a[1] > 1]
+    return {
+        "n_spots": m["n_spots"],
+        "first_spotnum": m["first_spotnum"],
+        "last_spotnum": m["last_spotnum"],
+        "total_gaps": m["gaps"] + len(cross),
+        "total_missing": (m["missing"] or 0) + sum(cross),
+        "max_gap_size": max([m["max_gap"] or 0, *cross]),
+    }
+
+
+def append_to_sink(
+    spark: SparkSession, batch_df: DataFrame, sink_dir: str
+) -> tuple[dict, DataFrame]:
+    """Append the rows of batch_df whose Spotnum the sink does not hold
+    yet, one row per Spotnum, in one written plan; return the batch's
+    `gap_summary` row (a dict) and the deduped plan.
+
+    `spark` is the session whose range index serves the check: a
+    stream hands foreachBatch its batch in a clone of the session that
+    started it, one clone per start. batch_df is read twice (its
+    Spotnum range, then the write), so the caller persists it. The
+    write is one plan: anti-join against the overlapping sink files, a
+    window partitioned by Spotnum block that keeps one row per Spotnum
+    (any one, as dropDuplicates does) and yields each row's gap, and
+    an Observation carrying the telemetry. The window's output is
+    hash-partitioned by block and AQE-coalesced, so a scrape tick
+    writes one file."""
+    from pyspark.sql import Observation, Window
+
+    n, lo, hi = batch_df.agg(F.count(F.lit(1)), F.min("Spotnum"), F.max("Spotnum")).first()
+    if n == 0:
+        return {"n_spots": 0}, batch_df
+    names = _sink_files(sink_dir)
+    # all-NULL Spotnums: nothing in the sink can match them
+    deduped = batch_df if lo is None else _dedup_against_sink(spark, batch_df, sink_dir, names, lo, hi)
+
+    s, gap, first = F.col("Spotnum"), F.col("_gap"), F.col("_rn") == 1
+    w = Window.partitionBy("_blk").orderBy("Spotnum")
+    whole = w.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
+    ticked = (
+        deduped.withColumn("_blk", F.expr(f"Spotnum div {_BLOCK}"))
+        .select(
+            "*",
+            F.row_number().over(w).alias("_rn"),
+            (s - F.lag(s).over(w) - 1).alias("_gap"),
+            F.max(s).over(whole).alias("_bmax"),
+        )
+        # a block's first row, or one that does not repeat the row before
+        .filter(first | (gap >= 0))
+    )
+    pos = F.when(gap > 0, gap)
+    obs = Observation()
+    observed = ticked.observe(
+        obs,
+        F.count(F.lit(1)).alias("n_spots"),
+        F.min(s).alias("first_spotnum"),
+        F.max(s).alias("last_spotnum"),
+        F.count(pos).alias("gaps"),
+        F.sum(pos).alias("missing"),
+        F.max(pos).alias("max_gap"),
+        # a block's first row carries the block's [min, max]
+        F.collect_list(F.when(first & s.isNotNull(), F.array(s, F.col("_bmax")))).alias("blocks"),
+    )
+    observed.select(*batch_df.columns).write.mode("append").parquet(sink_dir)
+    summary = _gap_fold(obs.get)
+    if summary["n_spots"]:
+        # The files that were not in the listing are this write's own,
+        # and hold ids in [first, last] — true only because the sink
+        # has one writer at a time (the daemon); a file another writer
+        # appended meanwhile would get a wrong range. Files that miss
+        # this step are scanned as unknown on the next tick.
+        index = _sink_ranges(spark, sink_dir)
+        span = (summary["first_spotnum"], summary["last_spotnum"])
+        for n in set(_sink_files(sink_dir)) - set(names):
+            index[n] = span
+    return summary, ticked.select(*batch_df.columns)
 
 
 def start_ingest(
@@ -133,20 +291,21 @@ def start_ingest(
     the same foreachBatch over the same deduped batch — the
     reference's optional ClickHouse import next to the TimescaleDB
     load (wsprnet-scraper.sh:405-407,426-429; SURVEY §2.1
-    snk_clickhouse). The batch is cached, so fan-out costs one extra
-    write, not a recompute.
+    snk_clickhouse). It gets `append_to_sink`'s deduped plan, which
+    re-runs from the persisted batch against the same sink files: no
+    second sink check, one extra write.
     """
     monitor = monitor if monitor is not None else GapMonitor()
 
     def sink_batch(batch_df: DataFrame, batch_id: int) -> None:
-        deduped = _dedup_against_sink(batch_df, sink_dir).cache()
+        batch_df.persist()
         try:
-            monitor.observe(deduped, batch_id)
-            deduped.write.mode("append").parquet(sink_dir)
+            summary, deduped = append_to_sink(spark, batch_df, sink_dir)
+            monitor.record(summary, batch_id)
             if mirror_fn is not None:
                 mirror_fn(deduped, batch_id)
         finally:
-            deduped.unpersist()
+            batch_df.unpersist()
 
     # observe(): zero-cost in-plan metrics surfaced per micro-batch in
     # StreamingQueryProgress.observedMetrics — the ops dashboard feed
