@@ -313,7 +313,8 @@ def _ids_batch(spark, ids):
 
 
 def _sink_ids(spark, sink):
-    return sorted(r.Spotnum for r in spark.read.parquet(sink).select("Spotnum").collect())
+    rows = spark.read.parquet(sink).select("Spotnum").collect()
+    return sorted(r.Spotnum for r in rows)
 
 
 _BLK = 1 << 20
@@ -359,7 +360,8 @@ def test_foreign_file_between_ticks_is_checked(spark, tmp_path):
     # session's range index has never seen it, and tick 2 redelivers 8
     from pyspark.sql import functions as F
 
-    landing, sink, ckpt = tmp_path / "landing", str(tmp_path / "sink"), str(tmp_path / "ckpt")
+    landing, sink = tmp_path / "landing", str(tmp_path / "sink")
+    ckpt = str(tmp_path / "ckpt")
     cursor = Cursor(tmp_path / "cursor.json")
     fetch_once(lambda s: [make_spot(n) for n in range(1, 6)], cursor, landing)
     start_ingest(spark, str(landing), sink, ckpt).awaitTermination()
@@ -377,16 +379,19 @@ def test_foreign_file_between_ticks_is_checked(spark, tmp_path):
     # and took tick 2's own file from its telemetry
     from wsprnet_scraper_spark.streaming.ingest import _sink_ranges
 
-    assert sorted(_sink_ranges(spark, sink).values()) == [(1, 5), (6, 10), (8, 8)]
+    ranges = sorted(_sink_ranges(spark, sink).values())
+    assert ranges == [(1, 5), (6, 10), (8, 8)]
 
 
 def test_deleted_sink_file_between_ticks(spark, tmp_path):
     import os
 
-    landing, sink, ckpt = tmp_path / "landing", str(tmp_path / "sink"), str(tmp_path / "ckpt")
+    landing, sink = tmp_path / "landing", str(tmp_path / "sink")
+    ckpt = str(tmp_path / "ckpt")
     cursor = Cursor(tmp_path / "cursor.json")
     for lo in (1, 6):
-        fetch_once(lambda s, lo=lo: [make_spot(n) for n in range(lo, lo + 5)], cursor, landing)
+        batch = [make_spot(n) for n in range(lo, lo + 5)]
+        fetch_once(lambda s, batch=batch: batch, cursor, landing)
         start_ingest(spark, str(landing), sink, ckpt).awaitTermination()
     first = min(
         (f for f in os.listdir(sink) if f.endswith(".parquet") and f[0] != "."),
@@ -406,7 +411,8 @@ def test_new_session_builds_its_own_sink_index(spark, tmp_path):
     from wsprnet_scraper_spark.streaming.ingest import _sink_ranges
 
     landing, sink = tmp_path / "landing", str(tmp_path / "sink")
-    fetch_once(lambda s: [make_spot(n) for n in range(1, 6)], Cursor(tmp_path / "c"), landing)
+    spots = [make_spot(n) for n in range(1, 6)]
+    fetch_once(lambda s: spots, Cursor(tmp_path / "c"), landing)
     start_ingest(spark, str(landing), sink, str(tmp_path / "ckpt")).awaitTermination()
     parent = _sink_ranges(spark, sink)
     assert parent
@@ -450,7 +456,8 @@ def test_memory_sink_runs_leave_no_view(spark, name):
 
     for _ in range(3):
         _assert_matches_oracle(spark, name, SF_SMOKE, tables=("events",))
-    assert not [t.name for t in spark.catalog.listTables() if t.name.startswith("strm_")]
+    views = [t.name for t in spark.catalog.listTables()]
+    assert not [v for v in views if v.startswith("strm_")]
     key = (spark._jsparkSession.sessionUUID(), name, SF_SMOKE)
     assert os.path.isdir(os.path.join(stores._WORKDIRS[key], "ckpt"))
 

@@ -111,12 +111,12 @@ def forget_prepared_under(path: str) -> None:
     that is being deleted (a reclaimed `stores.workdir` generation):
     no later call can be served by it."""
     prefix = os.path.join(path, "")
+
+    def under(part) -> bool:
+        return isinstance(part, str) and os.path.join(part, "").startswith(prefix)
+
     for bucket in _PLAN_CACHE.values():
-        for key in [
-            k
-            for k in bucket
-            if any(isinstance(p, str) and os.path.join(p, "").startswith(prefix) for p in k)
-        ]:
+        for key in [k for k in bucket if any(map(under, k))]:
             del bucket[key]
 
 

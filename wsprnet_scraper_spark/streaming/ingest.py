@@ -188,7 +188,9 @@ def _gap_fold(m: dict) -> dict:
     in-block gaps plus the gaps between consecutive non-empty blocks
     (a block's first id after the previous block's last)."""
     blocks = sorted(m["blocks"])
-    cross = [b[0] - a[1] - 1 for a, b in zip(blocks, blocks[1:]) if b[0] - a[1] > 1]
+    cross = [
+        b[0] - a[1] - 1 for a, b in zip(blocks, blocks[1:]) if b[0] - a[1] > 1
+    ]
     return {
         "n_spots": m["n_spots"],
         "first_spotnum": m["first_spotnum"],
@@ -218,12 +220,17 @@ def append_to_sink(
     writes one file."""
     from pyspark.sql import Observation, Window
 
-    n, lo, hi = batch_df.agg(F.count(F.lit(1)), F.min("Spotnum"), F.max("Spotnum")).first()
+    n, lo, hi = batch_df.agg(
+        F.count(F.lit(1)), F.min("Spotnum"), F.max("Spotnum")
+    ).first()
     if n == 0:
         return {"n_spots": 0}, batch_df
     names = _sink_files(sink_dir)
-    # all-NULL Spotnums: nothing in the sink can match them
-    deduped = batch_df if lo is None else _dedup_against_sink(spark, batch_df, sink_dir, names, lo, hi)
+    deduped = (
+        batch_df  # all-NULL Spotnums: nothing in the sink can match them
+        if lo is None
+        else _dedup_against_sink(spark, batch_df, sink_dir, names, lo, hi)
+    )
 
     s, gap, first = F.col("Spotnum"), F.col("_gap"), F.col("_rn") == 1
     w = Window.partitionBy("_blk").orderBy("Spotnum")
@@ -250,7 +257,9 @@ def append_to_sink(
         F.sum(pos).alias("missing"),
         F.max(pos).alias("max_gap"),
         # a block's first row carries the block's [min, max]
-        F.collect_list(F.when(first & s.isNotNull(), F.array(s, F.col("_bmax")))).alias("blocks"),
+        F.collect_list(
+            F.when(first & s.isNotNull(), F.array(s, F.col("_bmax")))
+        ).alias("blocks"),
     )
     observed.select(*batch_df.columns).write.mode("append").parquet(sink_dir)
     summary = _gap_fold(obs.get)
@@ -262,8 +271,8 @@ def append_to_sink(
         # this step are scanned as unknown on the next tick.
         index = _sink_ranges(spark, sink_dir)
         span = (summary["first_spotnum"], summary["last_spotnum"])
-        for n in set(_sink_files(sink_dir)) - set(names):
-            index[n] = span
+        for name in set(_sink_files(sink_dir)) - set(names):
+            index[name] = span
     return summary, ticked.select(*batch_df.columns)
 
 
