@@ -424,6 +424,10 @@ def test_new_session_builds_its_own_sink_index(spark, tmp_path):
     assert _sink_ids(spark, sink) == [1, 2, 3, 4, 5]
     assert _sink_ranges(other, sink) is not parent
     assert set(parent.values()) == {(-2, -1)}
+    # the replay wrote no rows: its file holds the empty range, so no
+    # later tick reads it
+    ranges = sorted(_sink_ranges(other, sink).values())
+    assert ranges == [(1, 5), (float("inf"), float("-inf"))]
 
 
 def test_ingest_e2e_runs_leave_one_plan_entry(spark):

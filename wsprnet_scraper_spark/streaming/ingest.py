@@ -40,6 +40,7 @@ tick.
 
 from __future__ import annotations
 
+import math
 import os
 from dataclasses import dataclass, field
 
@@ -263,16 +264,20 @@ def append_to_sink(
     )
     observed.select(*batch_df.columns).write.mode("append").parquet(sink_dir)
     summary = _gap_fold(obs.get)
-    if summary["n_spots"]:
-        # The files that were not in the listing are this write's own,
-        # and hold ids in [first, last] — true only because the sink
-        # has one writer at a time (the daemon); a file another writer
-        # appended meanwhile would get a wrong range. Files that miss
-        # this step are scanned as unknown on the next tick.
-        index = _sink_ranges(spark, sink_dir)
-        span = (summary["first_spotnum"], summary["last_spotnum"])
-        for name in set(_sink_files(sink_dir)) - set(names):
-            index[name] = span
+    # The files that were not in the listing are this write's own, and
+    # hold ids in [first, last] — true only because the sink has one
+    # writer at a time (the daemon); a file another writer appended
+    # meanwhile would get a wrong range. A write of no rows leaves an
+    # empty file, whose range is the empty one. Files that miss this
+    # step are scanned as unknown on the next tick.
+    index = _sink_ranges(spark, sink_dir)
+    span = (
+        (summary["first_spotnum"], summary["last_spotnum"])
+        if summary["n_spots"]
+        else (math.inf, -math.inf)
+    )
+    for name in set(_sink_files(sink_dir)) - set(names):
+        index[name] = span
     return summary, ticked.select(*batch_df.columns)
 
 
